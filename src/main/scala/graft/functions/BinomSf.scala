@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
@@ -50,10 +50,25 @@ object BinomSf {
     BinomSf(children(0), children(1), children(2))
   }
 
-  /** Imperative registration for an existing session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "binom_sf", builder, "built-in")
+  /** Register `binom_sf` for SQL on an existing session, once: a session
+    * that already has it (an earlier call, or [[GraftExtensions]]) is
+    * left as is, so repeated calls never re-register and log Spark's
+    * "replaced a previously registered function" warning.
+    */
+  def register(spark: SparkSession): Unit = synchronized {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("binom_sf")))
+      registry.createOrReplaceTempFunction("binom_sf", builder, "built-in")
+  }
+
+  /** `binom_sf(k, n, p)` as a Column with `n` a [[Param]]: a per-call N
+    * is not baked into the generated code, and no registry lookup runs.
+    */
+  def column(k: Column, n: Long, p: Column): Column = {
+    import org.apache.spark.sql.GraftColumnBridge.{column => col, expression}
+    col(BinomSf(expression(k.cast("long")), Param(n),
+      expression(p.cast("double"))))
+  }
 }
 
 /** `spark.sql.extensions=graft.functions.GraftExtensions` injects the

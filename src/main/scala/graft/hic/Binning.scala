@@ -1,7 +1,9 @@
 package graft.hic
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.ops.GlobalOrder
 
@@ -13,82 +15,71 @@ import graft.ops.GlobalOrder
   * engine.
   */
 object Binning {
+  /** One row per bin: binIdx, pairCount, sumCount, sumDist, minDist,
+    * maxDist.
+    */
+  private val binSchema: StructType = StructType(
+    StructField("binIdx", IntegerType, nullable = false) +:
+      Seq("pairCount", "sumCount", "sumDist", "minDist", "maxDist")
+        .map(StructField(_, LongType, nullable = false)))
+
   /** Input must have columns dist (long), contactCount (long) plus
-    * `tieCols` completing a total order. Output: one row per binIdx with
-    * pairCount, sumCount, minDist, maxDist, sumDist.
+    * `tieCols` completing a total order. Output: [[collectBins]]'s rows
+    * as a local DataFrame (the bins are computed eagerly).
     */
   def equalOccupancy(contacts: DataFrame, nBins: Int,
       tieCols: Seq[String]): DataFrame =
-    equalOccupancyCleanable(contacts, nBins, tieCols)._1
-
-  /** As [[equalOccupancy]] plus the cleanup thunk for the internal
-    * range-partitioned cache (call after materializing the bins).
-    */
-  def equalOccupancyCleanable(contacts: DataFrame, nBins: Int,
-      tieCols: Seq[String], assumeRanged: Boolean = false)
-      : (DataFrame, () => Unit) = {
-    // the grand total comes from GlobalOrder's per-partition offset stats
-    // — no separate full-table aggregate job
-    val (ranked, stats, cleanup) = GlobalOrder.rankAndCumsumWithStats(
-      contacts, col("dist") +: tieCols.map(col), "__rank",
-      cum = Some((col("contactCount"), "__cum")),
-      assumeRanged = assumeRanged)
-    require(stats.rows > 0,
-      "equalOccupancy: empty contact set (no rows to bin)")
-    val total = stats.total
-    val bins = ranked
-      .withColumn("binIdx",
-        expr(s"((__cum - 1) * $nBins) div ${total}L").cast("int"))
-      .groupBy("binIdx")
-      .agg(count(lit(1)).as("pairCount"),
-        sum(col("contactCount")).as("sumCount"),
-        sum(col("dist")).as("sumDist"),
-        min(col("dist")).as("minDist"),
-        max(col("dist")).as("maxDist"))
-    (bins, cleanup)
-  }
+    contacts.sparkSession.createDataFrame(
+      java.util.Arrays.asList(collectBins(contacts, nBins, tieCols): _*),
+      binSchema)
 
   /** Materialize the bins (binIdx-ordered) and release the internal cache
     * — the form every statistical consumer (Pipeline, spline queries)
     * wants.
     *
-    * Unlike [[equalOccupancy]] (whose DataFrame shape the oracle-checked
-    * bin queries need), this skips the groupBy exchange entirely: the
-    * ranked pass already runs partition-local over the ranged cache, so
-    * each task folds its rows into ≤ nBins partial summaries
+    * No groupBy exchange: the pass runs partition-local over the ranged
+    * layout, so each task folds its rows into ≤ nBins partial summaries
     * (bins are contiguous in the global order — a partition overlaps
     * ~nBins/P + 1 of them) and the driver merges O(P + nBins) partials
-    * with exact integer arithmetic. One narrow job instead of a
-    * shuffle + collect, bit-identical output at any partitioning.
+    * with exact integer arithmetic. One narrow job after the offset job,
+    * bit-identical output at any partitioning. The running sum and the
+    * bin index are computed inside the task from the partition's offset
+    * and the grand total, so no per-call value is baked into generated
+    * code: every pass, refit and stream batch reuses the same classes.
     */
   def collectBins(contacts: DataFrame, nBins: Int, tieCols: Seq[String],
-      assumeRanged: Boolean = false): Array[org.apache.spark.sql.Row] = {
-    val (ranked, stats, cleanup) = GlobalOrder.rankAndCumsumWithStats(
-      contacts, col("dist") +: tieCols.map(col), "__rank",
-      cum = Some((col("contactCount"), "__cum")),
-      assumeRanged = assumeRanged)
-    require(stats.rows > 0,
-      "equalOccupancy: empty contact set (no rows to bin)")
-    val total = stats.total
+      assumeRanged: Boolean = false): Array[Row] = {
+    val r = GlobalOrder.ranged(contacts, col("dist") +: tieCols.map(col),
+      Some(col("contactCount")), assumeRanged)
     try {
-      val spark = contacts.sparkSession
-      import spark.implicits._
-      val partials = ranked
-        .select(expr(s"cast(((__cum - 1) * $nBins) div ${total}L as int)")
-            .as("binIdx"),
-          col("contactCount"), col("dist"))
-        .as[(Int, Long, Long)]
-        .mapPartitions { it =>
+      require(r.stats.rows > 0,
+        "equalOccupancy: empty contact set (no rows to bin)")
+      val total = r.stats.total
+      val offs = r.stats.offsets
+      val distIdx = r.schema.fieldIndex("dist")
+      val cumIdx = r.schema.fields.length - 1
+      val partials = GraftColumnBridge.collectInSession(
+        contacts.sparkSession,
+        r.rows.mapPartitionsWithIndex { (pid, it) =>
           // binIdx is non-decreasing within a partition (the layout is
           // cum-ordered), so an open accumulator per current bin suffices
           val out = scala.collection.mutable.ArrayBuffer
             .empty[(Int, Long, Long, Long, Long, Long)]
+          var cum = offs.getOrElse(pid, (0L, 0L))._2
           var bin = -1
           var cnt = 0L; var sumC = 0L; var sumD = 0L
           var minD = Long.MaxValue; var maxD = Long.MinValue
           def flush(): Unit = if (bin >= 0)
             out += ((bin, cnt, sumC, sumD, minD, maxD))
-          it.foreach { case (b, c, d) =>
+          it.foreach { row =>
+            require(!row.isNullAt(distIdx) && !row.isNullAt(cumIdx),
+              "equalOccupancy: null dist or contactCount")
+            val c = row.getLong(cumIdx)
+            val d = row.getLong(distIdx)
+            cum += c
+            // the SQL form's ((cum - 1) * nBins) div total, overflow-checked
+            // as ANSI long arithmetic is
+            val b = (Math.multiplyExact(cum - 1, nBins.toLong) / total).toInt
             if (b != bin) {
               flush(); bin = b
               cnt = 0L; sumC = 0L; sumD = 0L
@@ -100,28 +91,12 @@ object Binning {
           }
           flush()
           out.iterator
-        }
-        .collect()
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("binIdx",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("pairCount",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("sumCount",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("sumDist",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("minDist",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("maxDist",
-          org.apache.spark.sql.types.LongType, nullable = false)))
+        })
       partials.groupBy(_._1).toArray.sortBy(_._1).map { case (bin, ps) =>
-        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-          Array[Any](bin,
-            ps.map(_._2).sum, ps.map(_._3).sum, ps.map(_._4).sum,
-            ps.map(_._5).min, ps.map(_._6).max),
-          schema): org.apache.spark.sql.Row
+        new GenericRowWithSchema(Array[Any](bin,
+          ps.map(_._2).sum, ps.map(_._3).sum, ps.map(_._4).sum,
+          ps.map(_._5).min, ps.map(_._6).max), binSchema): Row
       }
-    } finally cleanup()
+    } finally r.cleanup()
   }
 }

@@ -1,6 +1,6 @@
 package graft.hic
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** CLI entry point mirroring the reference's significance pipeline surface
@@ -84,37 +84,39 @@ object FitHiCMain {
 
     val sigCols = Seq("chr1", "mid1", "chr2", "mid2", "contactCount",
       "p_value", "q_value")
-    if (mode == "intraOnly" || mode == "All") {
+    // one sort for every table: intra rows have chr1 == chr2, so the
+    // inter order (chr1, mid1, chr2, mid2) is also their (chr1, mid1,
+    // mid2) order, and all three writes share one plan
+    def writeSig(df: DataFrame, name: String): Unit =
+      df.orderBy("chr1", "mid1", "chr2", "mid2")
+        .select(sigCols.head, sigCols.tail: _*)
+        .write.format("hic-tsv").option("kind", "significances")
+        .mode("overwrite")
+        .save(s"$outDir/$lib.$name.res$res.significances.txt.gz")
+    val intraOn = mode == "intraOnly" || mode == "All"
+    val interOn = mode == "interOnly" || mode == "All"
+    // one front end for both models: the mappable set, both-ends filter,
+    // classify, bias table and both possible-pair counts are built once
+    val fe = Pipeline.frontEnd(frags, contacts, biases.map(b => () => b),
+      cfg, intra = intraOn, inter = interOn)
+    if (intraOn) {
       // per-pass spline/bin diagnostics (A26's data, sans plot): the bins
-      // are already on the driver for the spline fit, so emitting the
-      // table costs one tiny write per pass, no extra Spark job
+      // are already on the driver for the spline fit, in binIdx order, so
+      // emitting the table costs one tiny write per pass and no sort
       val diags = scala.collection.mutable.ArrayBuffer
         .empty[Pipeline.PassDiagnostics]
-      val intra = Pipeline.intraSignificances(frags, contacts, biases, cfg,
+      val intra = Pipeline.intraSignificancesFrom(fe,
         diagSink = Some(diags ++= _))
       for (pass <- 1 to cfg.passes)
-        intra.filter(col("pass") === pass)
-          .orderBy("chr1", "mid1", "mid2")
-          .select(sigCols.head, sigCols.tail: _*)
-          .write.format("hic-tsv").option("kind", "significances")
-          .mode("overwrite")
-          .save(s"$outDir/$lib.spline_pass$pass.res$res.significances.txt.gz")
+        writeSig(intra.filter(col("pass") === pass), s"spline_pass$pass")
       import spark.implicits._
       for (pass <- 1 to cfg.passes)
-        graft.io.Tsv.write(
-          diags.filter(_.pass == pass).toSeq.toDS().toDF()
-            .orderBy("binIdx"),
+        graft.io.Tsv.write(diags.filter(_.pass == pass).toSeq.toDF(),
           s"$outDir/$lib.spline_pass$pass.res$res.bins.txt.gz",
           Seq("binIdx", "pairCount", "sumCount", "avgDist", "rawProb",
             "splineProb"))
     }
-    if (mode == "interOnly" || mode == "All") {
-      val inter = Pipeline.interSignificances(frags, contacts, biases, cfg)
-      inter.orderBy("chr1", "mid1", "chr2", "mid2")
-        .select(sigCols.head, sigCols.tail: _*)
-        .write.format("hic-tsv").option("kind", "significances")
-        .mode("overwrite")
-        .save(s"$outDir/$lib.interOnly.res$res.significances.txt.gz")
-    }
+    if (interOn)
+      writeSig(Pipeline.interSignificancesFrom(fe), "interOnly")
   }
 }

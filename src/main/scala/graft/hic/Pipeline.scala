@@ -1,9 +1,14 @@
 package graft.hic
 
-import org.apache.spark.sql.DataFrame
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Binom
+import graft.functions.{BinomSf, SplineInterp}
+import graft.ops.Caches
 
 /** The full Fit-Hi-C significance pipeline (SURVEY.md §3.1 Entry 1,
   * A13–A21), recomposed from the operator library as pure
@@ -33,6 +38,8 @@ final case class FitHiCConfig(
 
 object Pipeline {
   private val keys = Seq("chr1", "mid1", "chr2", "mid2")
+  private val IntraInRange = "intraInRange"
+  private val InterAll = "interAll"
 
   /** Run `body`; if it throws while a concurrently-launched action is
     * still in flight, wait for that action to settle (success or failure)
@@ -40,13 +47,11 @@ object Pipeline {
     * the caller's Caches.drain() unpersists its inputs, and its own
     * failure is silently dropped.
     */
-  private def settleOnFailure[A](futs: scala.concurrent.Future[_]*)
-      (body: => A): A =
+  private def settleOnFailure[A](futs: Future[_]*)(body: => A): A =
     try body
     catch {
       case t: Throwable =>
-        futs.foreach(fut => scala.util.Try(scala.concurrent.Await.ready(fut,
-          scala.concurrent.duration.Duration.Inf)))
+        futs.foreach(fut => scala.util.Try(Await.ready(fut, Duration.Inf)))
         throw t
     }
 
@@ -57,9 +62,78 @@ object Pipeline {
   final case class PassDiagnostics(pass: Int, binIdx: Int, pairCount: Long,
       sumCount: Long, avgDist: Double, rawProb: Double, splineProb: Double)
 
+  /** The front half the intra and inter models share, built once by
+    * [[frontEnd]]: `pairs` is the mapped, classified contact set holding
+    * only the classes a model will read (cached — each model traverses
+    * it several times); `possible` is BH's M for both models from one
+    * query over the mapped loci; `biases` is the clamped bias-factor
+    * table ([[Contacts.biasFactors]]), constructed and cached once. Both
+    * futures run while the caller bins.
+    */
+  final case class FrontEnd(cfg: FitHiCConfig, pairs: DataFrame,
+      possible: Future[Fragments.PossiblePairs],
+      biases: Future[Option[DataFrame]])
+
+  /** Build the shared front half for the models asked for (`intra`,
+    * `inter`).
+    *
+    * `mkBiases` is a THUNK: bias construction that runs eager driver
+    * work (the KR solve's routing count) executes on a background
+    * thread, overlapping the possible-pair query and pass-1 binning
+    * instead of serializing in front of the whole pipeline. The table is
+    * persisted: a lazy upstream (a KR solve) must run once, not once per
+    * scoring plan.
+    *
+    * `endsMappable = true` asserts that every contact end appears in
+    * `frags` with hitCount ≥ mappabilityThr — true by construction when
+    * the caller derives `frags` as the SAME contact set's marginals and
+    * thr ≤ 1 (every locus's hitCount is a sum of ≥ 1 contactCounts).
+    * Under the assertion the two mappability semi probes are row-level
+    * no-ops, so they are skipped outright. A threshold above 1 makes the
+    * assertion unprovable and is rejected.
+    */
+  def frontEnd(frags: DataFrame, contacts: DataFrame,
+      mkBiases: Option[() => DataFrame], cfg: FitHiCConfig,
+      endsMappable: Boolean = false, intra: Boolean = true,
+      inter: Boolean = true): FrontEnd = {
+    require(!endsMappable || cfg.mappabilityThr <= 1,
+      "endsMappable asserts every end has hitCount >= mappabilityThr, " +
+        "which marginals only guarantee for a threshold <= 1, got " +
+        cfg.mappabilityThr)
+    // the mapped loci feed the possible-pair query and, unless asserted
+    // away, both semi joins: cached once, so the distinct runs once and
+    // every reader shares the same scan
+    val loci = Fragments.loci(Fragments.mappable(frags, cfg.mappabilityThr))
+    val lociCache =
+      if (endsMappable) loci else Caches.register(loci.persist())
+    // (1) BH's M for both models: an independent lineage, launched first
+    // so its job runs CONCURRENTLY with the bias solve and the binning
+    // jobs
+    val possible = Future(
+      Fragments.possiblePairsOfLoci(lociCache, cfg.distLow, cfg.distUp))
+    // (2) bias construction on a background thread: binning reads only
+    // dist/count/keys, so pass-1 binning runs while a KR solve does — the
+    // table is awaited only at scoring
+    val biases = mkBiases match {
+      case Some(mk) => Future(Some(Caches.register(Contacts.biasFactors(
+        mk(), cfg.biasLow, cfg.biasUp).persist())))
+      case None => Future.successful(None)
+    }
+    val filtered =
+      if (endsMappable) contacts
+      else Contacts.bothEndsMappable(contacts, lociCache)
+    val classes = (if (intra) Seq(IntraInRange) else Nil) ++
+      (if (inter) Seq(InterAll) else Nil)
+    val pairs = Caches.register(
+      Contacts.classify(filtered, cfg.distLow, cfg.distUp)
+        .filter(col("cls").isin(classes: _*))
+        .persist())
+    FrontEnd(cfg, pairs, possible, biases)
+  }
+
   /** Run the intra-chromosomal pipeline; returns one row per tested pair
-    * and pass: chr1, mid1, chr2, mid2, contactCount, pass, p_value,
-    * q_value. `diagSink`, when given, receives each pass's ≤ nBins
+    * and pass: chr1, mid1, chr2, mid2, contactCount, p_value, q_value,
+    * pass. `diagSink`, when given, receives each pass's ≤ nBins
     * diagnostic rows (driver-side — the bins are already collected for
     * the spline fit, so this adds no Spark job).
     */
@@ -70,153 +144,77 @@ object Pipeline {
     intraSignificancesWith(frags, contacts, biases.map(b => () => b), cfg,
       diagSink, endsMappable)
 
-  /** As [[intraSignificances]], taking the bias table as a THUNK: bias
-    * construction that runs eager driver work (the KR solve's routing
-    * count) executes on a background thread, overlapping the
-    * mappable/marginals materialization and the possible-M window job
-    * instead of serializing in front of the whole pipeline.
-    */
-  /** `endsMappable = true` asserts that every contact end appears in
-    * `frags` with hitCount ≥ mappabilityThr — true by construction when
-    * the caller derives `frags` as the SAME contact set's marginals and
-    * thr ≤ 1 (every locus's hitCount is a sum of ≥ 1 contactCounts).
-    * Under the assertion the two mappability semi probes are row-level
-    * no-ops, so they are skipped outright (and the mappable set is no
-    * longer multi-traversed, so it isn't persisted — the possible-M
-    * window is its one consumer). A caller asserting this falsely gets
-    * silently unfiltered contacts: assert structurally, never guess.
+  /** As [[intraSignificances]], taking the bias table as a THUNK (see
+    * [[frontEnd]]); `endsMappable` as on [[frontEnd]].
     */
   def intraSignificancesWith(frags: DataFrame, contacts: DataFrame,
       mkBiases: Option[() => DataFrame], cfg: FitHiCConfig,
       diagSink: Option[Seq[PassDiagnostics] => Unit] = None,
-      endsMappable: Boolean = false): DataFrame = {
-    require(cfg.passes >= 1, s"passes must be >= 1, got ${cfg.passes}")
-    // the mappable locus set is traversed three times (two loci broadcast
-    // builds + the possible-pair window) and the bias table twice (the
-    // per-end broadcast joins) — persist both so an expensive upstream
-    // (a marginals groupBy, a KR solve) can never run more than once
-    val mapped =
-      if (endsMappable) Fragments.mappable(frags, cfg.mappabilityThr)
-      else graft.ops.Caches.register(
-        Fragments.mappable(frags, cfg.mappabilityThr).persist())
-    val filtered =
-      if (endsMappable) contacts
-      else Contacts.bothEndsMappable(contacts, mapped)
-    val classified = Contacts.classify(filtered, cfg.distLow, cfg.distUp)
-    val intra = classified.filter(col("cls") === "intraInRange")
-    // Concurrent-lineage overlap (same session, per-block get-or-compute
-    // makes shared caches safe): launch independent lineages as Futures
-    // so their jobs run while pass-1 binning compiles and materializes.
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // (1) the possible-pair count (BH's M) is an independent lineage —
-    // launch it first and collect it after pass-1 binning, so its window
-    // job runs CONCURRENTLY with the bias solve and the binning jobs
-    // instead of serializing in front of them
-    val mFut = scala.concurrent.Future(
-      Fragments.possibleIntraInRange(mapped, cfg.distLow, cfg.distUp))
-    // (2) bias CONSTRUCTION (a KR solve runs an eager routing job) on a
-    // background thread, overlapping the marginals/possible-M job AND
-    // the ranged-cache build below: the ranged cache is built BIAS-FREE
-    // (equal-occupancy binning reads only dist/count/keys), so pass-1
-    // binning materializes it while the per-chromosome solves run —
-    // the solve is awaited only at pass-1 SCORING, whose per-end bias
-    // lookup is a narrow broadcast overlay that preserves the ranged
-    // layout. (r15: previously the bias join was materialized INTO the
-    // cache, serializing solve → cache-build → binning.)
-    val constructFut: scala.concurrent.Future[DataFrame] = mkBiases match {
-      case Some(mk) => scala.concurrent.Future(mk())
-      case None => scala.concurrent.Future.successful(null)
-    }
-    var biasMatFut: scala.concurrent.Future[Long] =
-      scala.concurrent.Future.successful(0L)
+      endsMappable: Boolean = false): DataFrame =
+    intraSignificancesFrom(frontEnd(frags, contacts, mkBiases, cfg,
+      endsMappable, inter = false), diagSink)
 
-    // ONE dist-ranged cache is the only materialization of the pair set:
-    // every pass's equal-occupancy binning re-bins a FILTERED view of
-    // this layout, and per-pass scoring reads the same cache through the
-    // bias overlay (bhQ re-partitions on p_value regardless, so scoring
-    // gains nothing from a second, unranged copy — which round 7 still
-    // paid for)
-    // the range exchange SAMPLES its child before shuffling — persist the
-    // source so the filter/classify lineage runs once, not twice;
-    // released as soon as pass 1 has materialized the ranged cache
-    // (same pattern as GlobalOrder's src persist)
-    // Caches-registered so drain() reclaims it if collectBins throws
-    // before the eager pass-1 unpersist (double-unpersist is a no-op)
-    val src = graft.ops.Caches.register(intra.persist())
-    val spark = intra.sparkSession
+  /** The intra model over a built [[FrontEnd]]. */
+  def intraSignificancesFrom(fe: FrontEnd,
+      diagSink: Option[Seq[PassDiagnostics] => Unit] = None): DataFrame = {
+    val cfg = fe.cfg
+    require(cfg.passes >= 1, s"passes must be >= 1, got ${cfg.passes}")
+    // the dist-ranged cache serves binning only: every pass's
+    // equal-occupancy binning re-bins a FILTERED view of this layout.
+    // Scoring reads the front end's cache like the inter model does (bhQ
+    // re-partitions on p_value regardless), so both models run one
+    // scoring plan
+    val src = fe.pairs.filter(col("cls") === IntraInRange)
     val distOrder = col("dist") +: keys.map(col)
-    val rangedPairs = graft.ops.Caches.register(src
-      .repartitionByRange(spark.sessionState.conf.numShufflePartitions,
+    val rangedPairs = Caches.register(src
+      .repartitionByRange(
+        src.sparkSession.sessionState.conf.numShufflePartitions,
         distOrder: _*)
       .sortWithinPartitions(distOrder: _*)
       .persist())
-    // scoring-side view: per-end bias factors as a broadcast probe on
-    // top of the cached ranged layout (bias table = O(loci), broadcast
-    // class at any corpus scale); identity biases when no solver given
-    var scoringView: DataFrame = null
-
     // N = observedIntraInRangeSum falls out of the pass-1 bin stats
     // (Σ sumCount over bins) — no separate full-table aggregate job
     var n = 0L
     var m = -1L
-    var nullSource = rangedPairs // pass-k null = pairs minus outliers
+    // pass-k null = pairs minus the previous pass's outliers
+    var nullSource = without(rangedPairs, Set.empty)
     var layoutPreserved = true
     var result: DataFrame = null
     for (pass <- 1 to cfg.passes) {
-      // pass-1 binning is the only action between the concurrent-lineage
-      // launches and their Awaits: if it throws, settle all three
-      // before unwinding
-      val bins = settleOnFailure(mFut, constructFut, biasMatFut)(
+      // pass-1 binning runs while the front end's futures are in flight:
+      // if it throws, settle them before unwinding
+      val bins = settleOnFailure(fe.possible, fe.biases)(
         Binning.collectBins(nullSource, cfg.nBins, keys,
           assumeRanged = layoutPreserved))
       if (pass == 1) {
         n = bins.map(_.getAs[Long]("sumCount")).sum
-        // bias solve ran concurrently with the binning jobs above — its
-        // result is only needed now, for the scoring overlay
-        scoringView = settleOnFailure(mFut)(scala.concurrent.Await.result(
-            constructFut, scala.concurrent.duration.Duration.Inf)) match {
-          case null => rangedPairs.withColumn("bias1", lit(1.0))
-            .withColumn("bias2", lit(1.0))
-          case b =>
-            val bp = graft.ops.Caches.register(b.persist())
-            biasMatFut = scala.concurrent.Future(bp.count())
-            Contacts.withBiases(rangedPairs, bp, cfg.biasLow, cfg.biasUp)
-        }
-        // settle the just-launched bias materialization if THIS await
-        // throws — the one await in the chain that previously unwound
-        // with biasMatFut still in flight (drain would unpersist bp
-        // under the detached count)
-        m = settleOnFailure(biasMatFut)(scala.concurrent.Await.result(
-          mFut, scala.concurrent.duration.Duration.Inf))
-        // awaited so a failure on the eager-materialization thread can
-        // never be silently dropped
-        scala.concurrent.Await.result(biasMatFut,
-          scala.concurrent.duration.Duration.Inf)
-        src.unpersist() // pass-1 binning materialized the ranged cache
+        m = settleOnFailure(fe.biases)(
+          Await.result(fe.possible, Duration.Inf).intraInRange)
       }
       require(n > 0, "no intra-in-range contacts after filtering")
+      val (xs, raw, fitted) = Spline.fitFromBins(bins, n)
       diagSink.foreach { sink =>
-        val (xs, raw, fitted) = Spline.fitFromBins(bins, n)
         sink(bins.indices.map(i => PassDiagnostics(pass,
           bins(i).getAs[Int]("binIdx"), bins(i).getAs[Long]("pairCount"),
           bins(i).getAs[Long]("sumCount"), xs(i), raw(i), fitted(i))))
       }
-      val scored = scoreFromBins(scoringView, bins, n, m, cfg)
+      val scored = score(fe, IntraInRange, xs, fitted, n, m)
         .withColumn("pass", lit(pass))
       result = if (result == null) scored else result.unionByName(scored)
       if (pass < cfg.passes) {
         val outliers = scored.filter(col("q_value") < cfg.qThreshold)
           .select(keys.map(col): _*)
         // a refinement outlier set is normally a tiny fraction of the
-        // pairs: broadcast the anti-join so the dist-ranged layout
-        // survives (a narrow probe) and the next pass skips the exchange.
-        // The count is a narrow scan of the (cached) BH output; above the
-        // cap (1M keys ≈ tens of MB — well inside driver/executor
-        // broadcast budgets), fall back to the scale-safe shuffle
+        // pairs: its keys come to the driver and the next pass filters
+        // them out in a narrow pass, so the dist-ranged layout survives
+        // and the next pass skips the exchange. Above the cap (1M keys ≈
+        // tens of MB on the driver), fall back to the scale-safe shuffle
         // anti-join + re-range.
-        if (outliers.count() <= 1000000L) {
-          nullSource = rangedPairs.join(broadcast(outliers), keys,
-            "left_anti")
+        val keysOut = outliers.limit(OutlierCap + 1).collect()
+        if (keysOut.length <= OutlierCap) {
+          nullSource = without(rangedPairs, keysOut.map(r =>
+            (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3)))
+            .toSet)
           layoutPreserved = true
         } else {
           nullSource = rangedPairs.join(outliers, keys, "left_anti")
@@ -227,76 +225,87 @@ object Pipeline {
     result
   }
 
-  /** Score every row of `pairs` against the null fitted from `bins`
-    * (equal-occupancy rows of the CURRENT pass's null source; `n` is the
-    * pass-1 observed sum — the binomial N is fixed across passes).
+  private val OutlierCap = 1000000
+
+  /** `pairs` without the rows whose keys are in `drop`: a narrow filter
+    * whose generated code does not depend on the set (it rides as the
+    * predicate's captured reference), so every pass bins through one
+    * class, an empty set for pass 1 included.
     */
-  private def scoreFromBins(pairs: DataFrame,
-      bins: Array[org.apache.spark.sql.Row], n: Long, m: Long,
-      cfg: FitHiCConfig): DataFrame = {
-    val (xs, _, fitted) = Spline.fitFromBins(bins, n)
-    // codegen'd curve lookup (graft.functions.SplineInterp): the prior
-    // interpolation + binom_sf stay in ONE whole-stage-codegen span —
-    // no UDF dispatch in the corpus-sized scoring pass
-    val curve = graft.functions.SplineInterp.curve(xs, fitted) _
-    graft.functions.BinomSf.register(pairs.sparkSession)
-    pairs
-      .withColumn("prior",
-        curve(col("dist").cast("double")) * col("bias1") * col("bias2"))
-      .withColumn("p_value",
-        expr(s"binom_sf(contactCount, ${n}L, prior)"))
-      .transform(df => Stats.bhQ(df, "p_value",
-        Seq("chr1", "mid1", "chr2", "mid2"), "q_value", Some(m)))
-      .select((keys.map(col) :+ col("contactCount") :+ col("p_value") :+
-        col("q_value")): _*)
+  private def without(pairs: DataFrame,
+      drop: Set[(String, Long, String, Long)]): DataFrame = {
+    val keep = udf((c1: String, m1: Long, c2: String, m2: Long) =>
+      !drop.contains((c1, m1, c2, m2)))
+    pairs.filter(keep(keys.map(col): _*))
   }
 
   /** Inter-chromosomal model (A21): uniform bias-scaled prior.
-    * `endsMappable` as on [[intraSignificancesWith]].
+    * `endsMappable` as on [[frontEnd]].
     */
   def interSignificances(frags: DataFrame, contacts: DataFrame,
       biases: Option[DataFrame], cfg: FitHiCConfig,
-      endsMappable: Boolean = false): DataFrame = {
-    // traversed three times (two semi-join broadcast builds + the
-    // possible-M closed form) — persist so an expensive upstream (a
-    // marginals groupBy) runs once, same as the intra path
-    val mapped =
-      if (endsMappable) Fragments.mappable(frags, cfg.mappabilityThr)
-      else graft.ops.Caches.register(
-        Fragments.mappable(frags, cfg.mappabilityThr).persist())
-    val filtered =
-      if (endsMappable) contacts
-      else Contacts.bothEndsMappable(contacts, mapped)
-    val inter = Contacts.classify(filtered, cfg.distLow, cfg.distUp)
-      .filter(col("cls") === "interAll")
-    // cache: the classify + double bias-join plan is read twice (N
-    // aggregate + scoring) — same pattern as the intra path's pairs cache
-    val withBias = graft.ops.Caches.register((biases match {
-      case Some(b) => Contacts.withBiases(inter, b, cfg.biasLow, cfg.biasUp)
-      case None => inter.withColumn("bias1", lit(1.0))
-        .withColumn("bias2", lit(1.0))
-    }).persist())
-    // N and M are independent lineages — overlap their jobs (same pattern
-    // as the intra path's possible-pair future)
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val mFut = scala.concurrent.Future(Fragments.possibleInterAll(mapped))
-    val n = settleOnFailure(mFut)(
-      withBias.agg(sum(col("contactCount"))).first() match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0)
-      })
-    val m = scala.concurrent.Await.result(mFut,
-      scala.concurrent.duration.Duration.Inf)
-    if (n == 0) return withBias.select((keys.map(col) :+
+      endsMappable: Boolean = false): DataFrame =
+    interSignificancesFrom(frontEnd(frags, contacts, biases.map(b => () => b),
+      cfg, endsMappable, intra = false))
+
+  /** The inter model over a built [[FrontEnd]]. */
+  def interSignificancesFrom(fe: FrontEnd): DataFrame = {
+    // N and M are independent lineages — M's query is already running
+    val n = settleOnFailure(fe.possible, fe.biases)(
+      sumCounts(fe.pairs, InterAll))
+    val m = Await.result(fe.possible, Duration.Inf).interAll
+    val inter = fe.pairs.filter(col("cls") === InterAll)
+    if (n == 0) return inter.select((keys.map(col) :+
       col("contactCount") :+ lit(1.0).as("p_value") :+
       lit(1.0).as("q_value")): _*)
-    graft.functions.BinomSf.register(withBias.sparkSession)
-    withBias
-      .withColumn("prior", lit(1.0) / m * col("bias1") * col("bias2"))
-      .withColumn("p_value",
-        expr(s"binom_sf(contactCount, ${n}L, prior)"))
-      .transform(df => Stats.bhQ(df, "p_value",
-        Seq("chr1", "mid1", "chr2", "mid2"), "q_value", Some(m)))
+    // the uniform prior 1/M as a one-knot curve: the lookup returns the
+    // knot's value for every distance, so the inter model runs the intra
+    // model's scoring plan
+    score(fe, InterAll, Array(0.0), Array(1.0 / m), n, m)
+  }
+
+  /** Σ contactCount over the rows of class `cls`: one narrow pass over the
+    * cached front end's rows, with no aggregate plan to generate.
+    */
+  private def sumCounts(pairs: DataFrame, cls: String): Long = {
+    val clsIdx = pairs.schema.fieldIndex("cls")
+    val countIdx = pairs.schema.fieldIndex("contactCount")
+    val want = org.apache.spark.unsafe.types.UTF8String.fromString(cls)
+    GraftColumnBridge.collectInSession(pairs.sparkSession,
+      GraftColumnBridge.internalRdd(pairs).mapPartitions { it =>
+        var s = 0L
+        it.foreach { r =>
+          if (r.getUTF8String(clsIdx) == want) s += r.getLong(countIdx)
+        }
+        Iterator.single(s)
+      }).sum
+  }
+
+  /** Score every front-end pair of class `cls`: prior = curve(dist) ·
+    * bias1 · bias2 with the curve the piecewise-linear lookup through
+    * (`xs`, `ys`); p-value = P[X ≥ contactCount], X ~ Binom(n, prior);
+    * BH q with M = `m`. One plan for every pass and both models: the
+    * class and the knots are reference objects and N is a `Param`, so
+    * none of them is baked into the generated code.
+    */
+  private def score(fe: FrontEnd, cls: String, xs: Array[Double],
+      ys: Array[Double], n: Long, m: Long): DataFrame = {
+    val pairs = fe.pairs.filter(col("cls") === cls)
+    val biased = Await.result(fe.biases, Duration.Inf) match {
+      case Some(f) => Contacts.withBiasFactors(pairs, f)
+      case None => pairs.withColumn("bias1", lit(1.0))
+        .withColumn("bias2", lit(1.0))
+    }
+    // codegen'd curve lookup (graft.functions.SplineInterp): the prior
+    // interpolation + binom_sf stay in ONE whole-stage-codegen span — no
+    // UDF dispatch in the corpus-sized scoring pass. Inter pairs have no
+    // distance; the one-knot curve ignores it
+    val prior = SplineInterp.curve(xs, ys)(coalesce(col("dist"), lit(0L))) *
+      col("bias1") * col("bias2")
+    Stats.bhQ(biased.withColumn("prior", prior)
+        .withColumn("p_value",
+          BinomSf.column(col("contactCount"), n, col("prior"))),
+      "p_value", keys, "q_value", Some(m))
       .select((keys.map(col) :+ col("contactCount") :+ col("p_value") :+
         col("q_value")): _*)
   }

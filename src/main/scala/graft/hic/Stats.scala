@@ -1,6 +1,8 @@
 package graft.hic
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{JoinedRow, SpecificInternalRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -40,19 +42,16 @@ object Stats {
       assumeRanged: Boolean = false): DataFrame = {
     require(chunkRows > 0, s"chunkRows must be positive, got $chunkRows")
     val spark = df.sparkSession
-    import spark.implicits._
     val n = spark.sessionState.conf.numShufflePartitions
     val orderCols = col(pCol) +: tieCols.map(col)
-    // the range exchange samples its child first — persist so the
-    // upstream plan runs once; released once the ranged cache exists
-    // (inputs the caller already cached are left untouched)
-    val preCached = assumeRanged ||
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val src = if (preCached) df else df.persist()
+    // the range exchange samples its child, so `df` is computed twice
+    // before the ranged cache exists: a caller with an expensive upstream
+    // persists it first (every caller here hands over a narrow plan over
+    // a cache or a scan, where a second persist costs more than it saves)
     val ranged =
       if (assumeRanged) df // backed by the caller's layout/cache
       else Caches.register(
-        src.repartitionByRange(n, orderCols: _*)
+        df.repartitionByRange(n, orderCols: _*)
           .sortWithinPartitions(orderCols: _*)
           .persist())
     val pIdx = ranged.schema.fieldIndex(pCol)
@@ -64,14 +63,16 @@ object Stats {
     // partitions — a union (child offsets), a coalesce — hands every task
     // a SHIFTED id, silently misranking everything. (Found live: pass-2
     // of the refinement union had its ranks restarted per partition.)
-    val rangedRdd = ranged.rdd
+    // `toRdd`: the passes read Catalyst rows straight off the cache — no
+    // external-Row conversion, no per-schema encoder class
+    val rangedRdd = GraftColumnBridge.internalRdd(ranged)
     // job 1 (materializes the cache): per-partition row counts
-    val counts = rangedRdd.mapPartitionsWithIndex { (pid, it) =>
-      var c = 0L
-      it.foreach(_ => c += 1)
-      Iterator.single((pid, c))
-    }.collect().sortBy(_._1)
-    if (!preCached) src.unpersist()
+    val counts = GraftColumnBridge.collectInSession(spark,
+      rangedRdd.mapPartitionsWithIndex { (pid, it) =>
+        var c = 0L
+        it.foreach(_ => c += 1)
+        Iterator.single((pid, c))
+      }).sortBy(_._1)
     val m = mOpt.getOrElse(counts.map(_._2).sum)
     var acc = 0L
     val roffs: Map[Int, Long] = counts.map { case (pid, c) =>
@@ -88,29 +89,30 @@ object Stats {
     // job 2: per-(partition, chunk) min of p·M/rank (global rank =
     // local + offset); same single pass as the old per-partition min,
     // just finer-grained output (#chunks = rows/256Ki — driver-tiny)
-    val chunkMins = rangedRdd.mapPartitionsWithIndex { (pid, it) =>
-      var i = roffs.getOrElse(pid, 0L)
-      var mn = Double.MaxValue
-      var inChunk = 0
-      var chunk = 0
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-      it.foreach { r =>
-        i += 1
-        // fail with intent, not an unboxing NPE deep in a task: a null p
-        // would otherwise have silently sorted to rank 1 above
-        require(!r.isNullAt(pIdx),
-          s"bhQ: null $pCol at rank $i — p-values must be non-null")
-        val v = r.getDouble(pIdx) * m / i
-        if (v < mn) mn = v
-        inChunk += 1
-        if (inChunk == chunkRows) {
-          out += ((ckey(pid, chunk), mn))
-          chunk += 1; inChunk = 0; mn = Double.MaxValue
+    val chunkMins = GraftColumnBridge.collectInSession(spark,
+      rangedRdd.mapPartitionsWithIndex { (pid, it) =>
+        var i = roffs.getOrElse(pid, 0L)
+        var mn = Double.MaxValue
+        var inChunk = 0
+        var chunk = 0
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
+        it.foreach { r =>
+          i += 1
+          // fail with intent, not an unboxing NPE deep in a task: a null p
+          // would otherwise have silently sorted to rank 1 above
+          require(!r.isNullAt(pIdx),
+            s"bhQ: null $pCol at rank $i — p-values must be non-null")
+          val v = r.getDouble(pIdx) * m / i
+          if (v < mn) mn = v
+          inChunk += 1
+          if (inChunk == chunkRows) {
+            out += ((ckey(pid, chunk), mn))
+            chunk += 1; inChunk = 0; mn = Double.MaxValue
+          }
         }
-      }
-      if (inChunk > 0) out += ((ckey(pid, chunk), mn))
-      out.iterator
-    }.collect().sortBy(-_._1)
+        if (inChunk > 0) out += ((ckey(pid, chunk), mn))
+        out.iterator
+      }).sortBy(-_._1)
     // tail(pid, chunk) = min of p·M/rank over all strictly-later chunks
     // (keys sort descending as (pid, chunk) — ranges are p-ascending)
     var run = Double.MaxValue
@@ -119,35 +121,33 @@ object Stats {
     }.toMap
     val tailsBc = spark.sparkContext.broadcast(tails)
     // final narrow pass: backward suffix-min per CHUNK, seeded with the
-    // exact suffix-min of all later chunks/partitions
+    // exact suffix-min of all later chunks/partitions. The chunk is
+    // buffered, so its rows are copied off the scan's reused row; each
+    // output row is that copy joined to one mutable q cell
     val outSchema = ranged.schema.add(qCol, DoubleType, nullable = false)
     val outRdd = rangedRdd.mapPartitionsWithIndex { (pid, it) =>
       val off = roffs.getOrElse(pid, 0L)
-      it.grouped(chunkRows).zipWithIndex.flatMap { case (rows, cIdx) =>
-        val cOff = off + cIdx.toLong * chunkRows
-        val q = new Array[Double](rows.length)
-        var sm = tailsBc.value.getOrElse(ckey(pid, cIdx), Double.MaxValue)
-        var i = rows.length - 1
-        while (i >= 0) {
-          val v = rows(i).getDouble(pIdx) * m / (cOff + i + 1)
-          sm = math.min(sm, v)
-          q(i) = math.min(1.0, sm)
-          i -= 1
-        }
-        // single-array row build (the GlobalOrder discipline): this
-        // pass touches EVERY row of the scored table, and toSeq + :+
-        // pays several backing-array copies per row
-        val nBase = rows.headOption.map(_.length).getOrElse(0)
-        rows.iterator.zipWithIndex.map { case (r, k) =>
-          val vals = new Array[Any](nBase + 1)
-          var c = 0
-          while (c < nBase) { vals(c) = r.get(c); c += 1 }
-          vals(nBase) = q(k)
-          Row.fromSeq(scala.collection.immutable.ArraySeq
-            .unsafeWrapArray(vals))
-        }
+      val qRow = new SpecificInternalRow(Seq(DoubleType))
+      val joined = new JoinedRow
+      it.map(_.copy()).grouped(chunkRows).zipWithIndex.flatMap {
+        case (rows, cIdx) =>
+          val cOff = off + cIdx.toLong * chunkRows
+          val q = new Array[Double](rows.length)
+          var sm = tailsBc.value.getOrElse(ckey(pid, cIdx), Double.MaxValue)
+          var i = rows.length - 1
+          while (i >= 0) {
+            val v = rows(i).getDouble(pIdx) * m / (cOff + i + 1)
+            sm = math.min(sm, v)
+            q(i) = math.min(1.0, sm)
+            i -= 1
+          }
+          rows.iterator.zipWithIndex.map { case (r, k) =>
+            qRow.setDouble(0, q(k))
+            joined(r, qRow): InternalRow
+          }
       }
     }
-    spark.createDataFrame(outRdd, outSchema)
+    GraftColumnBridge.internalRows(spark, outRdd,
+      outSchema)
   }
 }

@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{JoinedRow, SpecificInternalRow}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Scalable global-order primitives: total-order rank and running sum
   * without ever collapsing to a single partition (SURVEY.md §7.3 #3).
@@ -62,105 +65,117 @@ object GlobalOrder {
     (out, cleanup)
   }
 
-  /** As [[rankAndCumsumCleanable]], also returning the per-partition
-    * [[RangeStats]] gathered by the offset job — the grand total comes
-    * for free here, so consumers like equal-occupancy binning never run
-    * a separate full-table aggregate.
+  /** The range-partitioned, sorted layout as Catalyst rows, with the
+    * per-partition [[RangeStats]] its first pass collected. `rows` is
+    * `queryExecution.toRdd` of the layout: its iterators may REUSE one
+    * row object, so a pass that buffers rows must copy them. When `cum`
+    * is given its long value is the schema's last column.
     */
-  /** `assumeRanged = true` promises that `df` is ALREADY range-partitioned
+  final case class Ranged(rows: RDD[InternalRow], schema: StructType,
+      stats: RangeStats, cleanup: () => Unit)
+
+  /** Lay `df` out in `orderCols` order and gather [[RangeStats]] in one
+    * narrow job.
+    *
+    * `assumeRanged = true` promises that `df` is ALREADY range-partitioned
     * and sorted on `orderCols` (e.g. a narrow, layout-preserving filter —
     * a broadcast join — over a previously ranged cache): the exchange, its
-    * sampling pass, and the internal persist are all skipped, and the two
+    * sampling pass, and the internal persist are all skipped, and the
     * narrow passes run directly over the caller's layout. Handing over a
     * frame whose layout does NOT match the promise silently corrupts the
     * global order — callers must guarantee it structurally (explicit
     * broadcast hints, never AQE luck).
     */
-  def rankAndCumsumWithStats(df: DataFrame, orderCols: Seq[Column],
-      rankCol: String, cum: Option[(Column, String)] = None,
-      keepPid: Boolean = false, assumeRanged: Boolean = false)
-      : (DataFrame, RangeStats, () => Unit) = {
+  def ranged(df: DataFrame, orderCols: Seq[Column], cum: Option[Column],
+      assumeRanged: Boolean = false): Ranged = {
     val spark = df.sparkSession
-    import spark.implicits._
     val n = spark.sessionState.conf.numShufflePartitions
-    // the range exchange SAMPLES its child before shuffling — persist the
-    // source so the upstream plan runs once, not twice; released as soon
-    // as the ranged cache is materialized by the stats job below (callers
-    // that already cached the input keep ownership of their cache)
-    val preCached = assumeRanged ||
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val src = if (preCached) df else df.persist()
+    // the range exchange SAMPLES its child before shuffling, so `df` is
+    // computed twice before the ranged cache exists: a caller with an
+    // expensive upstream persists it first
     val base =
-      if (assumeRanged) src
-      else src.repartitionByRange(n, orderCols: _*)
+      if (assumeRanged) df
+      else df.repartitionByRange(n, orderCols: _*)
         .sortWithinPartitions(orderCols: _*)
     val withCum = cum match {
-      case Some((c, _)) => base.withColumn(CUMV, c.cast("long"))
+      case Some(c) => base.withColumn(CUMV, c.cast("long"))
       case None => base
     }
-    val ranged =
+    val layout =
       if (assumeRanged) withCum // backed by the caller's cache
       else Caches.register(withCum.persist())
     val hasCum = cum.isDefined
-    val cumIdx = ranged.schema.fields.length - 1 // CUMV is last when present
+    val cumIdx = layout.schema.fields.length - 1 // CUMV is last when present
     // Partition indices MUST come from the RDD partition object
     // (mapPartitionsWithIndex), never TaskContext.getPartitionId(): the
-    // narrow rank pass below executes fused inside the CONSUMER's stage,
-    // and a consumer that renumbers partitions (a union's child offset, a
-    // coalesce) would hand it shifted task ids — wrong offsets for every
-    // partition (see Stats.bhQ for the live instance of this bug).
-    val rangedRdd = ranged.rdd
+    // narrow passes over these rows execute fused inside the CONSUMER's
+    // stage, and a consumer that renumbers partitions (a union's child
+    // offset, a coalesce) would hand them shifted task ids — wrong
+    // offsets for every partition (see Stats.bhQ for the live instance of
+    // this bug).
+    val rows = GraftColumnBridge.internalRdd(layout)
     // job 1 (materializes the cache): tiny per-partition summaries — no
     // shuffle, no window
-    val stats = rangedRdd.mapPartitionsWithIndex { (pid, it) =>
-      var cnt = 0L
-      var s = 0L
-      it.foreach { r =>
-        cnt += 1
-        if (hasCum && !r.isNullAt(cumIdx)) s += r.getLong(cumIdx)
-      }
-      Iterator.single((pid, cnt, s))
-    }.collect().sortBy(_._1)
-    if (!preCached) src.unpersist()
+    val stats = GraftColumnBridge.collectInSession(spark,
+      rows.mapPartitionsWithIndex { (pid, it) =>
+        var cnt = 0L
+        var s = 0L
+        it.foreach { r =>
+          cnt += 1
+          if (hasCum && !r.isNullAt(cumIdx)) s += r.getLong(cumIdx)
+        }
+        Iterator.single((pid, cnt, s))
+      }).sortBy(_._1)
     var accN = 0L
     var accS = 0L
     val offs: Map[Int, (Long, Long)] = stats.map { case (pid, cnt, s) =>
       val row = pid -> (accN, accS); accN += cnt; accS += s; row
     }.toMap
+    val cleanup: () => Unit =
+      if (assumeRanged) () => () else () => { layout.unpersist(); () }
+    Ranged(rows, layout.schema, RangeStats(offs, accN, accS), cleanup)
+  }
+
+  /** As [[rankAndCumsumCleanable]], also returning the per-partition
+    * [[RangeStats]] gathered by the offset job — the grand total comes
+    * for free here, so consumers never run a separate full-table
+    * aggregate. `assumeRanged` as on [[ranged]].
+    */
+  def rankAndCumsumWithStats(df: DataFrame, orderCols: Seq[Column],
+      rankCol: String, cum: Option[(Column, String)] = None,
+      keepPid: Boolean = false, assumeRanged: Boolean = false)
+      : (DataFrame, RangeStats, () => Unit) = {
+    val r = ranged(df, orderCols, cum.map(_._1), assumeRanged)
+    val offs = r.stats.offsets
+    val hasCum = cum.isDefined
+    val cumIdx = r.schema.fields.length - 1
     // pass 2 (narrow, runs inside the consumer's job): local scan of the
-    // sorted cache attaching rank = local index + row offset etc.
-    var outSchema = df.schema.add(rankCol, LongType, nullable = false)
-    for ((_, name) <- cum)
-      outSchema = outSchema.add(name, LongType, nullable = false)
-    if (keepPid) outSchema = outSchema.add(PID, IntegerType, nullable = false)
-    // single-array row build: this narrow pass touches EVERY row of the
-    // table inside the consumer's job, so the per-row cost matters — one
-    // preallocated Array[Any] and one wrap, not toSeq + repeated :+
-    // copies (up to 4 backing-array copies per row)
-    val nBase = df.schema.fields.length
-    val nOut = nBase + 1 + (if (cum.isDefined) 1 else 0) +
-      (if (keepPid) 1 else 0)
-    val outRdd = rangedRdd.mapPartitionsWithIndex { (pid, it) =>
+    // sorted cache attaching rank = local index + row offset etc. The
+    // extra values ride in one mutable row joined to the layout's row —
+    // no per-row copy of the base columns, no boxing
+    val extra = StructType(Seq(StructField(rankCol, LongType, false)) ++
+      cum.map { case (_, name) => StructField(name, LongType, false) } ++
+      (if (keepPid) Seq(StructField(PID, IntegerType, false)) else Nil))
+    val nExtra = extra.length
+    val outRdd = r.rows.mapPartitionsWithIndex { (pid, it) =>
       val (roff, soff) = offs.getOrElse(pid, (0L, 0L))
+      val add = new SpecificInternalRow(extra.map(_.dataType))
+      val joined = new JoinedRow
       var i = 0L
       var s = 0L
-      it.map { r =>
+      it.map { row =>
         i += 1
-        val arr = new Array[Any](nOut)
-        var c = 0
-        while (c < nBase) { arr(c) = r.get(c); c += 1 }
-        arr(nBase) = roff + i
+        add.setLong(0, roff + i)
         if (hasCum) {
-          if (!r.isNullAt(cumIdx)) s += r.getLong(cumIdx)
-          arr(nBase + 1) = soff + s
+          if (!row.isNullAt(cumIdx)) s += row.getLong(cumIdx)
+          add.setLong(1, soff + s)
         }
-        if (keepPid) arr(nOut - 1) = pid
-        Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
+        if (keepPid) add.setInt(nExtra - 1, pid)
+        joined(row, add): InternalRow
       }
     }
-    val out = spark.createDataFrame(outRdd, outSchema)
-    val cleanup: () => Unit =
-      if (assumeRanged) () => () else () => { ranged.unpersist(); () }
-    (out, RangeStats(offs, accN, accS), cleanup)
+    val out = GraftColumnBridge.internalRows(
+      df.sparkSession, outRdd, StructType(r.schema ++ extra))
+    (if (hasCum) out.drop(CUMV) else out, r.stats, r.cleanup)
   }
 }

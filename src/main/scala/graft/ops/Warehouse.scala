@@ -75,12 +75,23 @@ object Warehouse {
       schema: org.apache.spark.sql.types.StructType,
       explicit: Long = -1L): Long =
     if (explicit >= 0L) explicit
-    else {
-      val budget = sys.env.get("SPARK_GRAFT_BC_BUDGET_MB")
-        .flatMap(_.toLongOption).map(_ << 20).getOrElse(64L << 20)
-      math.max(1L,
-        budget / math.max(8L, schema.map(_.dataType.defaultSize).sum))
-    }
+    else math.max(1L,
+      broadcastBudgetBytes(sys.env.get("SPARK_GRAFT_BC_BUDGET_MB")) /
+        math.max(8L, schema.map(_.dataType.defaultSize).sum))
+
+  /** The broadcast budget in bytes from `SPARK_GRAFT_BC_BUDGET_MB` (unset:
+    * 64 MB). A value that is not a positive whole number of MB fails
+    * loudly: 0 would silently demote every broadcast to a shuffle, and
+    * garbage would silently fall back to the default.
+    */
+  private[graft] def broadcastBudgetBytes(mb: Option[String]): Long =
+    mb.map { v =>
+      val x = v.trim.toLongOption
+        .filter(x => x > 0 && x <= (Long.MaxValue >> 20))
+      require(x.isDefined, "SPARK_GRAFT_BC_BUDGET_MB must be a positive " +
+        s"whole number of MB, got '$v'")
+      x.get << 20
+    }.getOrElse(64L << 20)
 
   private def cdcSide(changes: org.apache.spark.sql.DataFrame, cap: Long)
       : org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =

@@ -1,6 +1,9 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
 /** `private[sql]` escape hatch for building Columns from custom Catalyst
   * expressions (the same technique every Spark extension library uses —
@@ -19,4 +22,39 @@ object GraftColumnBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `queryExecution.toRdd` of `df`: its rows as Catalyst rows, for
+    * narrow passes that read a layout without converting every row to an
+    * external `Row`. Built inside a SQL execution, as `Dataset.rdd` is:
+    * the jobs the plan runs to produce its RDD (a cache build's exchanges)
+    * then carry the session's job artifact state, so their tasks compile
+    * under the session's executor classloader instead of a fresh one.
+    */
+  def internalRdd(df: DataFrame): RDD[InternalRow] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution
+      .withNewExecutionId(qe, Some("rdd"))(qe.toRdd)
+  }
+
+  /** `rdd.collect()` under the session's job artifact state, as the
+    * session's own SQL jobs run: a narrow pass over [[internalRdd]] rows
+    * then compiles its tasks' classes under the same executor
+    * classloader as the SQL jobs that read the same layout, and shares
+    * them.
+    */
+  def collectInSession[T](spark: SparkSession, rdd: RDD[T]): Array[T] =
+    spark.asInstanceOf[classic.SparkSession].artifactManager
+      .withResources(rdd.collect())
+
+  /** DataFrame over an RDD of Catalyst rows (`internalCreateDataFrame` is
+    * `private[sql]`): the re-wrap for narrow passes that run on
+    * `queryExecution.toRdd`, so their rows never round-trip through
+    * external `Row`s and no per-schema encoder class is generated. The
+    * scan copies each row into its own UnsafeRow before any operator
+    * buffers it, so a pass may hand back one reused mutable row.
+    */
+  def internalRows(spark: SparkSession, rows: RDD[InternalRow],
+      schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 }

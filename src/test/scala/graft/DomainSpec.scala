@@ -103,6 +103,20 @@ class PipelineSpec extends AnyFunSuite with Matchers with SparkTest {
     slowI.except(fastI).count() shouldBe 0
   }
 
+  test("endsMappable is rejected above a mappability threshold of 1") {
+    // marginals guarantee hitCount >= 1 only: a threshold above that makes
+    // the assertion unprovable, and skipping the mappability probes would
+    // return unfiltered contacts
+    val (frags, contacts) = fixture
+    val cfg = FitHiCConfig(mappabilityThr = 2L)
+    an[IllegalArgumentException] should be thrownBy
+      Pipeline.intraSignificances(frags, contacts, None, cfg,
+        endsMappable = true)
+    an[IllegalArgumentException] should be thrownBy
+      Pipeline.interSignificances(frags, contacts, None, cfg,
+        endsMappable = true)
+  }
+
   test("bias factors scale priors (inter model)") {
     import spark.implicits._
     val frags = Seq(("c1", 0L, 2500L, 5L, 1), ("c2", 0L, 2500L, 5L, 1),
@@ -222,6 +236,90 @@ class FitHiCMainSpec extends AnyFunSuite with Matchers with SparkTest {
     bins(1).map(_.getDouble(5)).toSeq should not be
       bins(2).map(_.getDouble(5)).toSeq
   }
+
+  /** A two-chromosome gz-TSV genome that reaches every stage of
+    * `-t -p 2 -x All`: per chromosome 30 loci with near-diagonal contacts
+    * and one planted outlier (pass 2 refits without it), inter contacts
+    * between the chromosomes, and a bias table over both.
+    */
+  private lazy val genomeDir: String = {
+    import spark.implicits._
+    val dir = graft.io.Scratch.sub("fithic_cli_genome")
+    val chrs = Seq("c1", "c2")
+    val mids = (0 until 30).map(i => 2500L + 5000L * i)
+    val frags = for (c <- chrs; m <- mids) yield (c, 0L, m, 10L, 1)
+    val intra = for {
+      c <- chrs; i <- 0 until 30; j <- i + 1 until math.min(i + 6, 30)
+    } yield (c, mids(i), c, mids(j),
+      if (i == 10 && j == 11) 400L else math.max(1L, 8L / (j - i)))
+    val inter = for (i <- 0 until 30 by 3; j <- 0 until 30 by 4)
+      yield ("c1", mids(i), "c2", mids(j), 1L + (i + j) % 3)
+    val biases = for (c <- chrs; (m, i) <- mids.zipWithIndex)
+      yield (c, m, if (i % 7 == 0) -1.0 else 0.8 + 0.02 * i)
+    graft.io.Tsv.write(frags.toDF(graft.io.Tsv.fragmentSchema.fieldNames: _*),
+      s"$dir/frags.gz", graft.io.Tsv.fragmentSchema.fieldNames)
+    graft.io.Tsv.write((intra ++ inter)
+        .toDF(graft.io.Tsv.contactSchema.fieldNames: _*),
+      s"$dir/contacts.gz", graft.io.Tsv.contactSchema.fieldNames)
+    graft.io.Tsv.write(biases.toDF(graft.io.Tsv.biasSchema.fieldNames: _*),
+      s"$dir/biases.gz", graft.io.Tsv.biasSchema.fieldNames)
+    dir
+  }
+
+  /** The id the next Spark job gets (a marker job's own id + 1). */
+  private def nextJobId(): Int = {
+    val marker = spark.sparkContext.parallelize(Seq(1), 1).countAsync()
+    scala.concurrent.Await.ready(marker, scala.concurrent.duration.Duration.Inf)
+    marker.jobIds.head + 1
+  }
+
+  /** Each output table's name and its parts' decompressed bytes. */
+  private def contents(out: String): Seq[(String, Seq[Byte])] = {
+    def parts(f: java.io.File): Seq[java.io.File] =
+      if (f.isFile) Seq(f)
+      else f.listFiles().toSeq.filter(p => p.isFile &&
+        !p.getName.startsWith("_") && !p.getName.startsWith("."))
+        .sortBy(_.getName)
+    new java.io.File(out).listFiles().toSeq.sortBy(_.getName).map { t =>
+      t.getName -> parts(t).flatMap { p =>
+        val in = new java.util.zip.GZIPInputStream(
+          new java.io.FileInputStream(p))
+        try in.readAllBytes().toSeq finally in.close()
+      }
+    }
+  }
+
+  test("a repeated -t -p 2 -x All op fits Spark's default codegen cache " +
+      "and its job budget") {
+    // the gate is meaningless under an enlarged cache: it holds at the
+    // default every caller's session has
+    spark.conf.get("spark.sql.codegen.cache.maxEntries") shouldBe "100"
+    def op(): (String, Long, Int) = {
+      val c0 = org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount
+      val j0 = nextJobId()
+      val out = graft.io.Scratch.sub("fithic_cli_gate")
+      graft.hic.FitHiCMain.run(spark, Array("-i", s"$genomeDir/contacts.gz",
+        "-f", s"$genomeDir/frags.gz", "-t", s"$genomeDir/biases.gz",
+        "-o", out, "-l", "t", "-p", "2", "-x", "All"))
+      graft.ops.Caches.drain()
+      val jobs = nextJobId() - 1 - j0
+      (out, org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount - c0, jobs)
+    }
+    val (first, _, _) = op()
+    val (second, compiles, jobs) = op()
+    // every class the op needs is still cached from the first run: the
+    // op's generated-code working set fits the 100-entry cache
+    compiles shouldBe 0L
+    // the job census of the CLI op (75 before the shared front end)
+    jobs should be <= 75
+    val a = contents(first)
+    a.map(_._1) should contain allOf ("t.interOnly.res5000.significances.txt.gz",
+      "t.spline_pass2.res5000.significances.txt.gz")
+    a.foreach(t => t._2 should not be empty)
+    contents(second) shouldBe a
+  }
 }
 
 class BiasSpec extends AnyFunSuite with Matchers with SparkTest {
@@ -250,6 +348,20 @@ class BiasSpec extends AnyFunSuite with Matchers with SparkTest {
       .select("bias1", "bias2").first()
     r.getDouble(0) shouldBe 1.5
     r.getDouble(1) shouldBe 1.0
+  }
+}
+
+class BroadcastBudgetSpec extends AnyFunSuite with Matchers {
+  test("SPARK_GRAFT_BC_BUDGET_MB: default 64 MB; nonpositive or " +
+      "unparseable values fail loudly") {
+    import graft.ops.Warehouse.broadcastBudgetBytes
+    broadcastBudgetBytes(None) shouldBe (64L << 20)
+    broadcastBudgetBytes(Some(" 128 ")) shouldBe (128L << 20)
+    for (bad <- Seq("0", "-5", "64MB", "", "1e3", "99999999999999999"))
+      withClue(bad) {
+        an[IllegalArgumentException] should be thrownBy
+          broadcastBudgetBytes(Some(bad))
+      }
   }
 }
 

@@ -46,6 +46,33 @@ class ExpressionSpec extends AnyFunSuite with Matchers with SparkTest {
     q1 should be <= 1.0
   }
 
+  test("BinomSf.register is idempotent: a second call replaces nothing") {
+    BinomSf.register(spark)
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("binom_sf")
+    val registry = spark.sessionState.functionRegistry
+    val before = registry.lookupFunction(id)
+    BinomSf.register(spark)
+    before shouldBe defined
+    registry.lookupFunction(id).get should be theSameInstanceAs before.get
+  }
+
+  test("a Param N keeps binom_sf's generated code independent of N") {
+    def run(n: Long) = {
+      val df = spark.range(50)
+        .select(BinomSf.column(col("id"), n, lit(0.01)).as("sf"))
+      val body = df.queryExecution.executedPlan.collectFirst {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+          w.doCodeGen()._2.body
+      }
+      body shouldBe defined
+      df.collect().zipWithIndex.foreach { case (r, k) =>
+        r.getDouble(0) shouldBe Binom.sf(k.toLong, n, 0.01)
+      }
+      body.get
+    }
+    run(100L) shouldBe run(1000L)
+  }
+
   test("GraftExtensions injects binom_sf at session build") {
     // the extension class is instantiable and registers without error
     val ext = new graft.functions.GraftExtensions()
