@@ -56,11 +56,10 @@ object Binning {
         "equalOccupancy: empty contact set (no rows to bin)")
       val total = r.stats.total
       val offs = r.stats.offsets
-      val distIdx = r.schema.fieldIndex("dist")
-      val cumIdx = r.schema.fields.length - 1
-      val partials = GraftColumnBridge.collectInSession(
-        contacts.sparkSession,
-        r.rows.mapPartitionsWithIndex { (pid, it) =>
+      val distIdx = r.layout.schema.fieldIndex("dist")
+      val cumIdx = r.layout.schema.fields.length - 1
+      val partials = GraftColumnBridge.collectRows(r.layout)(
+        _.mapPartitionsWithIndex { (pid, it) =>
           // binIdx is non-decreasing within a partition (the layout is
           // cum-ordered), so an open accumulator per current bin suffices
           val out = scala.collection.mutable.ArrayBuffer

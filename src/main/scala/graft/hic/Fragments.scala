@@ -9,70 +9,84 @@ object Fragments {
   def mappable(frags: DataFrame, thr: Long): DataFrame =
     frags.filter(col("hitCount") >= thr)
 
+  /** A12: number of *possible* intra-chromosomal pairs with distance in
+    * [low, up] — the BH denominator (possible, not observed).
+    *
+    * Distributed closed form: per chromosome, for each locus count the
+    * loci at (mid + low .. mid + up] going forward via a range-frame
+    * window — O(n log n), no pair materialization (SURVEY §7.3 #6). Each
+    * unordered pair is counted exactly once (at its left end).
+    */
+  def possibleIntraInRange(frags: DataFrame, low: Long, up: Long): Long = {
+    import org.apache.spark.sql.expressions.Window
+    val lo = math.max(low, 1L) // a pair needs two distinct loci
+    val w = Window.partitionBy("chr").orderBy("mid")
+      .rangeBetween(lo, math.min(up, Long.MaxValue / 2))
+    frags.select(col("chr"), col("mid"))
+      .distinct()
+      .withColumn("fwd", count(lit(1)).over(w))
+      .agg(sum(col("fwd"))).first() match {
+        case r if r.isNullAt(0) => 0L
+        case r => r.getLong(0)
+      }
+  }
+
+  /** A12 inter: Σ_{c1<c2} n_c1·n_c2 = (T² − Σ n_c²) / 2 from per-chr locus
+    * counts — O(#chromosomes) on the driver.
+    */
+  def possibleInterAll(frags: DataFrame): Long = {
+    val counts = frags.select("chr", "mid").distinct()
+      .groupBy("chr").count().collect().map(_.getLong(1))
+    val t = counts.sum
+    (t * t - counts.map(c => c * c).sum) / 2
+  }
+
   /** BH's M for both models (A12): possible pairs, NOT observed rows. */
   final case class PossiblePairs(intraInRange: Long, interAll: Long)
-
-  /** A12 for both models from ONE pass over the distinct loci: per
-    * chromosome, its locus count n_c and, for each locus, the number of
-    * loci at [mid + max(low, 1), mid + up] — each unordered intra pair in
-    * range is counted exactly once, at its left end, and no pair is ever
-    * materialized (SURVEY §7.3 #6). The inter count is
-    * Σ_{c1<c2} n_c1·n_c2 = (T² − Σ n_c²) / 2 over the ≤ #chromosomes
-    * rows the driver collects.
-    */
-  def possiblePairs(frags: DataFrame, low: Long, up: Long): PossiblePairs =
-    possiblePairsOfLoci(loci(frags), low, up)
 
   /** The distinct (chr, mid) loci of a fragment table. */
   def loci(frags: DataFrame): DataFrame =
     frags.select(col("chr"), col("mid")).distinct()
 
-  /** [[possiblePairs]] over loci that are already distinct ([[loci]]).
-    * The loci are grouped by chromosome on the RDD side and each
-    * chromosome's sorted mids are counted by binary search — O(n log n),
-    * and no generated code beyond the scan of `loci`.
+  /** [[possibleIntraInRange]] and [[possibleInterAll]] together, from ONE
+    * pass over loci that are already distinct ([[loci]]) — the form the
+    * FitHiC front end uses, where both models need M and the window and
+    * aggregate plans would add their generated classes to every op. The
+    * loci are grouped by chromosome on the RDD side; per chromosome, n_c
+    * and, for each locus, the loci at [mid + max(low, 1), mid + up]
+    * counted by binary search over the sorted mids — O(n log n), each
+    * unordered intra pair in range counted once, at its left end, and no
+    * pair materialized. The inter count is (T² − Σ n_c²) / 2 over the
+    * ≤ #chromosomes rows the driver collects.
     */
   def possiblePairsOfLoci(loci: DataFrame, low: Long,
       up: Long): PossiblePairs = {
     val lo = math.max(low, 1L) // a pair needs two distinct loci
     val hi = math.min(up, Long.MaxValue / 2)
-    val spark = loci.sparkSession
-    val perChr = GraftColumnBridge.collectInSession(spark,
-      GraftColumnBridge.internalRdd(loci.select(col("chr"), col("mid")))
-        .map { r =>
-          require(!r.isNullAt(0) && !r.isNullAt(1),
-            "possiblePairs: null chr or mid in the fragment loci")
-          (r.getUTF8String(0).toString, r.getLong(1))
+    val perChr = GraftColumnBridge.collectRows(
+        loci.select(col("chr"), col("mid")))(rows => rows
+      .map { r =>
+        require(!r.isNullAt(0) && !r.isNullAt(1),
+          "possiblePairs: null chr or mid in the fragment loci")
+        (r.getUTF8String(0).toString, r.getLong(1))
+      }
+      .groupByKey()
+      .map { case (_, ms) =>
+        val mids = ms.toArray
+        java.util.Arrays.sort(mids)
+        // mids are distinct: [a, b] holds from(b + 1) - from(a) of them
+        def from(x: Long): Int = {
+          val i = java.util.Arrays.binarySearch(mids, x)
+          if (i >= 0) i else -i - 1
         }
-        .groupByKey()
-        .map { case (_, ms) =>
-          val mids = ms.toArray
-          java.util.Arrays.sort(mids)
-          // mids are distinct: [a, b] holds from(b + 1) - from(a) of them
-          def from(x: Long): Int = {
-            val i = java.util.Arrays.binarySearch(mids, x)
-            if (i >= 0) i else -i - 1
-          }
-          var fwd = 0L
-          for (m <- mids) fwd += from(m + hi + 1) - from(m + lo)
-          (mids.length.toLong, fwd)
-        })
+        var fwd = 0L
+        for (m <- mids) fwd += from(m + hi + 1) - from(m + lo)
+        (mids.length.toLong, fwd)
+      })
     val t = perChr.map(_._1).sum
     PossiblePairs(perChr.map(_._2).sum,
       (t * t - perChr.map(c => c._1 * c._1).sum) / 2)
   }
-
-  /** The intra half of [[possiblePairs]]: possible intra-chromosomal pairs
-    * with distance in [low, up].
-    */
-  def possibleIntraInRange(frags: DataFrame, low: Long, up: Long): Long =
-    possiblePairs(frags, low, up).intraInRange
-
-  /** The inter half of [[possiblePairs]] (an empty distance range: only
-    * the per-chromosome locus counts matter).
-    */
-  def possibleInterAll(frags: DataFrame): Long =
-    possiblePairs(frags, 0L, 0L).interAll
 
   /** A23: fixed-size binning of chromosome sizes → fragment skeleton
     * (chr, extraField=0, mid, hitCount=0, mappable=1).

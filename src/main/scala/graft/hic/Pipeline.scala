@@ -91,6 +91,9 @@ object Pipeline {
     * Under the assertion the two mappability semi probes are row-level
     * no-ops, so they are skipped outright. A threshold above 1 makes the
     * assertion unprovable and is rejected.
+    *
+    * Every check runs before the first future starts, and a failure
+    * while the rest is built settles both futures before it unwinds.
     */
   def frontEnd(frags: DataFrame, contacts: DataFrame,
       mkBiases: Option[() => DataFrame], cfg: FitHiCConfig,
@@ -100,6 +103,8 @@ object Pipeline {
       "endsMappable asserts every end has hitCount >= mappabilityThr, " +
         "which marginals only guarantee for a threshold <= 1, got " +
         cfg.mappabilityThr)
+    require(!intra || cfg.passes >= 1,
+      s"passes must be >= 1, got ${cfg.passes}")
     // the mapped loci feed the possible-pair query and, unless asserted
     // away, both semi joins: cached once, so the distinct runs once and
     // every reader shares the same scan
@@ -119,15 +124,17 @@ object Pipeline {
         mk(), cfg.biasLow, cfg.biasUp).persist())))
       case None => Future.successful(None)
     }
-    val filtered =
-      if (endsMappable) contacts
-      else Contacts.bothEndsMappable(contacts, lociCache)
-    val classes = (if (intra) Seq(IntraInRange) else Nil) ++
-      (if (inter) Seq(InterAll) else Nil)
-    val pairs = Caches.register(
-      Contacts.classify(filtered, cfg.distLow, cfg.distUp)
-        .filter(col("cls").isin(classes: _*))
-        .persist())
+    val pairs = settleOnFailure(possible, biases) {
+      val filtered =
+        if (endsMappable) contacts
+        else Contacts.bothEndsMappable(contacts, lociCache)
+      val classes = (if (intra) Seq(IntraInRange) else Nil) ++
+        (if (inter) Seq(InterAll) else Nil)
+      Caches.register(
+        Contacts.classify(filtered, cfg.distLow, cfg.distUp)
+          .filter(col("cls").isin(classes: _*))
+          .persist())
+    }
     FrontEnd(cfg, pairs, possible, biases)
   }
 
@@ -154,11 +161,16 @@ object Pipeline {
     intraSignificancesFrom(frontEnd(frags, contacts, mkBiases, cfg,
       endsMappable, inter = false), diagSink)
 
-  /** The intra model over a built [[FrontEnd]]. */
+  /** The intra model over a built [[FrontEnd]]. Any failure settles the
+    * front end's futures before it unwinds.
+    */
   def intraSignificancesFrom(fe: FrontEnd,
-      diagSink: Option[Seq[PassDiagnostics] => Unit] = None): DataFrame = {
+      diagSink: Option[Seq[PassDiagnostics] => Unit] = None): DataFrame =
+    settleOnFailure(fe.possible, fe.biases)(intraModel(fe, diagSink))
+
+  private def intraModel(fe: FrontEnd,
+      diagSink: Option[Seq[PassDiagnostics] => Unit]): DataFrame = {
     val cfg = fe.cfg
-    require(cfg.passes >= 1, s"passes must be >= 1, got ${cfg.passes}")
     // the dist-ranged cache serves binning only: every pass's
     // equal-occupancy binning re-bins a FILTERED view of this layout.
     // Scoring reads the front end's cache like the inter model does (bhQ
@@ -177,19 +189,17 @@ object Pipeline {
     var n = 0L
     var m = -1L
     // pass-k null = pairs minus the previous pass's outliers
-    var nullSource = without(rangedPairs, Set.empty)
+    var drop = rangedPairs.sparkSession.sparkContext.broadcast(NoKeys)
+    var nullSource = without(rangedPairs, drop)
     var layoutPreserved = true
     var result: DataFrame = null
     for (pass <- 1 to cfg.passes) {
-      // pass-1 binning runs while the front end's futures are in flight:
-      // if it throws, settle them before unwinding
-      val bins = settleOnFailure(fe.possible, fe.biases)(
-        Binning.collectBins(nullSource, cfg.nBins, keys,
-          assumeRanged = layoutPreserved))
+      val bins = Binning.collectBins(nullSource, cfg.nBins, keys,
+        assumeRanged = layoutPreserved)
+      drop.unpersist() // read only by the binning jobs just run
       if (pass == 1) {
         n = bins.map(_.getAs[Long]("sumCount")).sum
-        m = settleOnFailure(fe.biases)(
-          Await.result(fe.possible, Duration.Inf).intraInRange)
+        m = Await.result(fe.possible, Duration.Inf).intraInRange
       }
       require(n > 0, "no intra-in-range contacts after filtering")
       val (xs, raw, fitted) = Spline.fitFromBins(bins, n)
@@ -205,16 +215,16 @@ object Pipeline {
         val outliers = scored.filter(col("q_value") < cfg.qThreshold)
           .select(keys.map(col): _*)
         // a refinement outlier set is normally a tiny fraction of the
-        // pairs: its keys come to the driver and the next pass filters
-        // them out in a narrow pass, so the dist-ranged layout survives
-        // and the next pass skips the exchange. Above the cap (1M keys ≈
-        // tens of MB on the driver), fall back to the scale-safe shuffle
+        // pairs: its keys come to the driver and are broadcast, and the
+        // next pass filters them out in a narrow pass, so the
+        // dist-ranged layout survives and the next pass skips the
+        // exchange. Above the cap, fall back to the scale-safe shuffle
         // anti-join + re-range.
         val keysOut = outliers.limit(OutlierCap + 1).collect()
         if (keysOut.length <= OutlierCap) {
-          nullSource = without(rangedPairs, keysOut.map(r =>
-            (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3)))
-            .toSet)
+          drop = rangedPairs.sparkSession.sparkContext
+            .broadcast(keySet(keysOut))
+          nullSource = without(rangedPairs, drop)
           layoutPreserved = true
         } else {
           nullSource = rangedPairs.join(outliers, keys, "left_anti")
@@ -225,17 +235,35 @@ object Pipeline {
     result
   }
 
-  private val OutlierCap = 1000000
+  private type Key = (String, Long, String, Long)
+  private val NoKeys: Set[Key] = Set.empty
+
+  /** Outlier keys the driver holds at once: the collected `Row`s and the
+    * set built from them take ~320 bytes a key on the driver (measured
+    * 323 MB at 1M keys, 78 MB at 250k; the set alone ~110 bytes a key),
+    * so ~32 MB at the cap.
+    */
+  private val OutlierCap = 100000
+
+  /** The keys of `rows` (chr1, mid1, chr2, mid2), each chromosome name
+    * held once.
+    */
+  private def keySet(rows: Array[org.apache.spark.sql.Row]): Set[Key] = {
+    val names = scala.collection.mutable.HashMap.empty[String, String]
+    def name(s: String): String = names.getOrElseUpdate(s, s)
+    rows.iterator.map(r => (name(r.getString(0)), r.getLong(1),
+      name(r.getString(2)), r.getLong(3))).toSet
+  }
 
   /** `pairs` without the rows whose keys are in `drop`: a narrow filter
-    * whose generated code does not depend on the set (it rides as the
-    * predicate's captured reference), so every pass bins through one
-    * class, an empty set for pass 1 included.
+    * whose generated code does not depend on the set (the predicate
+    * captures only the broadcast handle), so every pass bins through one
+    * class, the empty set of pass 1 included.
     */
   private def without(pairs: DataFrame,
-      drop: Set[(String, Long, String, Long)]): DataFrame = {
+      drop: org.apache.spark.broadcast.Broadcast[Set[Key]]): DataFrame = {
     val keep = udf((c1: String, m1: Long, c2: String, m2: Long) =>
-      !drop.contains((c1, m1, c2, m2)))
+      !drop.value.contains((c1, m1, c2, m2)))
     pairs.filter(keep(keys.map(col): _*))
   }
 
@@ -248,21 +276,25 @@ object Pipeline {
     interSignificancesFrom(frontEnd(frags, contacts, biases.map(b => () => b),
       cfg, endsMappable, intra = false))
 
-  /** The inter model over a built [[FrontEnd]]. */
-  def interSignificancesFrom(fe: FrontEnd): DataFrame = {
-    // N and M are independent lineages — M's query is already running
-    val n = settleOnFailure(fe.possible, fe.biases)(
-      sumCounts(fe.pairs, InterAll))
-    val m = Await.result(fe.possible, Duration.Inf).interAll
-    val inter = fe.pairs.filter(col("cls") === InterAll)
-    if (n == 0) return inter.select((keys.map(col) :+
-      col("contactCount") :+ lit(1.0).as("p_value") :+
-      lit(1.0).as("q_value")): _*)
-    // the uniform prior 1/M as a one-knot curve: the lookup returns the
-    // knot's value for every distance, so the inter model runs the intra
-    // model's scoring plan
-    score(fe, InterAll, Array(0.0), Array(1.0 / m), n, m)
-  }
+  /** The inter model over a built [[FrontEnd]]. Any failure settles the
+    * front end's futures before it unwinds, and a failing bias table
+    * surfaces even when there is nothing to score.
+    */
+  def interSignificancesFrom(fe: FrontEnd): DataFrame =
+    settleOnFailure(fe.possible, fe.biases) {
+      // N and M are independent lineages — M's query is already running
+      val n = sumCounts(fe.pairs, InterAll)
+      val m = Await.result(fe.possible, Duration.Inf).interAll
+      // awaited here, so a failed bias table surfaces on both branches
+      Await.result(fe.biases, Duration.Inf)
+      if (n == 0) fe.pairs.filter(col("cls") === InterAll)
+        .select((keys.map(col) :+ col("contactCount") :+
+          lit(1.0).as("p_value") :+ lit(1.0).as("q_value")): _*)
+      // the uniform prior 1/M as a one-knot curve: the lookup returns the
+      // knot's value for every distance, so the inter model runs the
+      // intra model's scoring plan
+      else score(fe, InterAll, Array(0.0), Array(1.0 / m), n, m)
+    }
 
   /** Σ contactCount over the rows of class `cls`: one narrow pass over the
     * cached front end's rows, with no aggregate plan to generate.
@@ -271,14 +303,13 @@ object Pipeline {
     val clsIdx = pairs.schema.fieldIndex("cls")
     val countIdx = pairs.schema.fieldIndex("contactCount")
     val want = org.apache.spark.unsafe.types.UTF8String.fromString(cls)
-    GraftColumnBridge.collectInSession(pairs.sparkSession,
-      GraftColumnBridge.internalRdd(pairs).mapPartitions { it =>
-        var s = 0L
-        it.foreach { r =>
-          if (r.getUTF8String(clsIdx) == want) s += r.getLong(countIdx)
-        }
-        Iterator.single(s)
-      }).sum
+    GraftColumnBridge.collectRows(pairs)(_.mapPartitions { it =>
+      var s = 0L
+      it.foreach { r =>
+        if (r.getUTF8String(clsIdx) == want) s += r.getLong(countIdx)
+      }
+      Iterator.single(s)
+    }).sum
   }
 
   /** Score every front-end pair of class `cls`: prior = curve(dist) ·
@@ -305,7 +336,7 @@ object Pipeline {
     Stats.bhQ(biased.withColumn("prior", prior)
         .withColumn("p_value",
           BinomSf.column(col("contactCount"), n, col("prior"))),
-      "p_value", keys, "q_value", Some(m))
+      "p_value", keys, "q_value", Some(m), persistInput = false)
       .select((keys.map(col) :+ col("contactCount") :+ col("p_value") :+
         col("q_value")): _*)
   }

@@ -35,23 +35,33 @@ object Stats {
     * directly over the caller's layout. A frame whose layout does not
     * match the promise silently misranks every row — callers must
     * guarantee it structurally.
+    *
+    * `persistInput = false` skips the input persist that otherwise guards
+    * the range exchange's sampling pass, so the input is computed twice.
+    * Only for a caller whose input is a narrow plan over its own caches
+    * and whose A/B covers the choice: Pipeline's scoring plan, where a
+    * per-call persist also adds a cache build's generated classes to
+    * every FitHiC op.
     */
   def bhQ(df: DataFrame, pCol: String, tieCols: Seq[String], qCol: String,
       mOpt: Option[Long] = None,
       chunkRows: Int = 1 << 18,
-      assumeRanged: Boolean = false): DataFrame = {
+      assumeRanged: Boolean = false,
+      persistInput: Boolean = true): DataFrame = {
     require(chunkRows > 0, s"chunkRows must be positive, got $chunkRows")
     val spark = df.sparkSession
     val n = spark.sessionState.conf.numShufflePartitions
     val orderCols = col(pCol) +: tieCols.map(col)
-    // the range exchange samples its child, so `df` is computed twice
-    // before the ranged cache exists: a caller with an expensive upstream
-    // persists it first (every caller here hands over a narrow plan over
-    // a cache or a scan, where a second persist costs more than it saves)
+    // the range exchange samples its child first — persist so the
+    // upstream plan runs once; released once the ranged cache exists
+    // (inputs the caller already cached are left untouched)
+    val preCached = assumeRanged || !persistInput ||
+      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val src = if (preCached) df else df.persist()
     val ranged =
       if (assumeRanged) df // backed by the caller's layout/cache
       else Caches.register(
-        df.repartitionByRange(n, orderCols: _*)
+        src.repartitionByRange(n, orderCols: _*)
           .sortWithinPartitions(orderCols: _*)
           .persist())
     val pIdx = ranged.schema.fieldIndex(pCol)
@@ -63,16 +73,16 @@ object Stats {
     // partitions — a union (child offsets), a coalesce — hands every task
     // a SHIFTED id, silently misranking everything. (Found live: pass-2
     // of the refinement union had its ranks restarted per partition.)
-    // `toRdd`: the passes read Catalyst rows straight off the cache — no
-    // external-Row conversion, no per-schema encoder class
-    val rangedRdd = GraftColumnBridge.internalRdd(ranged)
+    // The passes read Catalyst rows straight off the cache — no
+    // external-Row conversion, no per-schema encoder class.
     // job 1 (materializes the cache): per-partition row counts
-    val counts = GraftColumnBridge.collectInSession(spark,
-      rangedRdd.mapPartitionsWithIndex { (pid, it) =>
+    val counts = GraftColumnBridge.collectRows(ranged)(
+      _.mapPartitionsWithIndex { (pid, it) =>
         var c = 0L
         it.foreach(_ => c += 1)
         Iterator.single((pid, c))
       }).sortBy(_._1)
+    if (!preCached) src.unpersist()
     val m = mOpt.getOrElse(counts.map(_._2).sum)
     var acc = 0L
     val roffs: Map[Int, Long] = counts.map { case (pid, c) =>
@@ -89,8 +99,8 @@ object Stats {
     // job 2: per-(partition, chunk) min of p·M/rank (global rank =
     // local + offset); same single pass as the old per-partition min,
     // just finer-grained output (#chunks = rows/256Ki — driver-tiny)
-    val chunkMins = GraftColumnBridge.collectInSession(spark,
-      rangedRdd.mapPartitionsWithIndex { (pid, it) =>
+    val chunkMins = GraftColumnBridge.collectRows(ranged)(
+      _.mapPartitionsWithIndex { (pid, it) =>
         var i = roffs.getOrElse(pid, 0L)
         var mn = Double.MaxValue
         var inChunk = 0
@@ -125,29 +135,28 @@ object Stats {
     // buffered, so its rows are copied off the scan's reused row; each
     // output row is that copy joined to one mutable q cell
     val outSchema = ranged.schema.add(qCol, DoubleType, nullable = false)
-    val outRdd = rangedRdd.mapPartitionsWithIndex { (pid, it) =>
-      val off = roffs.getOrElse(pid, 0L)
-      val qRow = new SpecificInternalRow(Seq(DoubleType))
-      val joined = new JoinedRow
-      it.map(_.copy()).grouped(chunkRows).zipWithIndex.flatMap {
-        case (rows, cIdx) =>
-          val cOff = off + cIdx.toLong * chunkRows
-          val q = new Array[Double](rows.length)
-          var sm = tailsBc.value.getOrElse(ckey(pid, cIdx), Double.MaxValue)
-          var i = rows.length - 1
-          while (i >= 0) {
-            val v = rows(i).getDouble(pIdx) * m / (cOff + i + 1)
-            sm = math.min(sm, v)
-            q(i) = math.min(1.0, sm)
-            i -= 1
-          }
-          rows.iterator.zipWithIndex.map { case (r, k) =>
-            qRow.setDouble(0, q(k))
-            joined(r, qRow): InternalRow
-          }
-      }
-    }
-    GraftColumnBridge.internalRows(spark, outRdd,
-      outSchema)
+    GraftColumnBridge.mapRows(ranged, outSchema)(
+      _.mapPartitionsWithIndex { (pid, it) =>
+        val off = roffs.getOrElse(pid, 0L)
+        val qRow = new SpecificInternalRow(Seq(DoubleType))
+        val joined = new JoinedRow
+        it.map(_.copy()).grouped(chunkRows).zipWithIndex.flatMap {
+          case (rows, cIdx) =>
+            val cOff = off + cIdx.toLong * chunkRows
+            val q = new Array[Double](rows.length)
+            var sm = tailsBc.value.getOrElse(ckey(pid, cIdx), Double.MaxValue)
+            var i = rows.length - 1
+            while (i >= 0) {
+              val v = rows(i).getDouble(pIdx) * m / (cOff + i + 1)
+              sm = math.min(sm, v)
+              q(i) = math.min(1.0, sm)
+              i -= 1
+            }
+            rows.iterator.zipWithIndex.map { case (r, k) =>
+              qRow.setDouble(0, q(k))
+              joined(r, qRow): InternalRow
+            }
+        }
+      })
   }
 }

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{JoinedRow, SpecificInternalRow}
@@ -65,14 +64,13 @@ object GlobalOrder {
     (out, cleanup)
   }
 
-  /** The range-partitioned, sorted layout as Catalyst rows, with the
-    * per-partition [[RangeStats]] its first pass collected. `rows` is
-    * `queryExecution.toRdd` of the layout: its iterators may REUSE one
-    * row object, so a pass that buffers rows must copy them. When `cum`
-    * is given its long value is the schema's last column.
+  /** The range-partitioned, sorted layout with the per-partition
+    * [[RangeStats]] its first pass collected; narrow passes read it
+    * through `GraftColumnBridge.collectRows`/`mapRows`. When `cum` is
+    * given its long value is the schema's last column.
     */
-  final case class Ranged(rows: RDD[InternalRow], schema: StructType,
-      stats: RangeStats, cleanup: () => Unit)
+  final case class Ranged(layout: DataFrame, stats: RangeStats,
+      cleanup: () => Unit)
 
   /** Lay `df` out in `orderCols` order and gather [[RangeStats]] in one
     * narrow job.
@@ -90,12 +88,16 @@ object GlobalOrder {
       assumeRanged: Boolean = false): Ranged = {
     val spark = df.sparkSession
     val n = spark.sessionState.conf.numShufflePartitions
-    // the range exchange SAMPLES its child before shuffling, so `df` is
-    // computed twice before the ranged cache exists: a caller with an
-    // expensive upstream persists it first
+    // the range exchange SAMPLES its child before shuffling — persist the
+    // source so the upstream plan runs once, not twice; released as soon
+    // as the ranged cache is materialized by the stats job below (callers
+    // that already cached the input keep ownership of their cache)
+    val preCached = assumeRanged ||
+      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val src = if (preCached) df else df.persist()
     val base =
-      if (assumeRanged) df
-      else df.repartitionByRange(n, orderCols: _*)
+      if (assumeRanged) src
+      else src.repartitionByRange(n, orderCols: _*)
         .sortWithinPartitions(orderCols: _*)
     val withCum = cum match {
       case Some(c) => base.withColumn(CUMV, c.cast("long"))
@@ -113,11 +115,10 @@ object GlobalOrder {
     // offset, a coalesce) would hand them shifted task ids — wrong
     // offsets for every partition (see Stats.bhQ for the live instance of
     // this bug).
-    val rows = GraftColumnBridge.internalRdd(layout)
     // job 1 (materializes the cache): tiny per-partition summaries — no
     // shuffle, no window
-    val stats = GraftColumnBridge.collectInSession(spark,
-      rows.mapPartitionsWithIndex { (pid, it) =>
+    val stats = GraftColumnBridge.collectRows(layout)(
+      _.mapPartitionsWithIndex { (pid, it) =>
         var cnt = 0L
         var s = 0L
         it.foreach { r =>
@@ -126,6 +127,7 @@ object GlobalOrder {
         }
         Iterator.single((pid, cnt, s))
       }).sortBy(_._1)
+    if (!preCached) src.unpersist()
     var accN = 0L
     var accS = 0L
     val offs: Map[Int, (Long, Long)] = stats.map { case (pid, cnt, s) =>
@@ -133,7 +135,7 @@ object GlobalOrder {
     }.toMap
     val cleanup: () => Unit =
       if (assumeRanged) () => () else () => { layout.unpersist(); () }
-    Ranged(rows, layout.schema, RangeStats(offs, accN, accS), cleanup)
+    Ranged(layout, RangeStats(offs, accN, accS), cleanup)
   }
 
   /** As [[rankAndCumsumCleanable]], also returning the per-partition
@@ -148,7 +150,7 @@ object GlobalOrder {
     val r = ranged(df, orderCols, cum.map(_._1), assumeRanged)
     val offs = r.stats.offsets
     val hasCum = cum.isDefined
-    val cumIdx = r.schema.fields.length - 1
+    val cumIdx = r.layout.schema.fields.length - 1
     // pass 2 (narrow, runs inside the consumer's job): local scan of the
     // sorted cache attaching rank = local index + row offset etc. The
     // extra values ride in one mutable row joined to the layout's row —
@@ -157,25 +159,25 @@ object GlobalOrder {
       cum.map { case (_, name) => StructField(name, LongType, false) } ++
       (if (keepPid) Seq(StructField(PID, IntegerType, false)) else Nil))
     val nExtra = extra.length
-    val outRdd = r.rows.mapPartitionsWithIndex { (pid, it) =>
-      val (roff, soff) = offs.getOrElse(pid, (0L, 0L))
-      val add = new SpecificInternalRow(extra.map(_.dataType))
-      val joined = new JoinedRow
-      var i = 0L
-      var s = 0L
-      it.map { row =>
-        i += 1
-        add.setLong(0, roff + i)
-        if (hasCum) {
-          if (!row.isNullAt(cumIdx)) s += row.getLong(cumIdx)
-          add.setLong(1, soff + s)
+    val out = GraftColumnBridge.mapRows(r.layout,
+        StructType(r.layout.schema ++ extra))(
+      _.mapPartitionsWithIndex { (pid, it) =>
+        val (roff, soff) = offs.getOrElse(pid, (0L, 0L))
+        val add = new SpecificInternalRow(extra.map(_.dataType))
+        val joined = new JoinedRow
+        var i = 0L
+        var s = 0L
+        it.map { row =>
+          i += 1
+          add.setLong(0, roff + i)
+          if (hasCum) {
+            if (!row.isNullAt(cumIdx)) s += row.getLong(cumIdx)
+            add.setLong(1, soff + s)
+          }
+          if (keepPid) add.setInt(nExtra - 1, pid)
+          joined(row, add): InternalRow
         }
-        if (keepPid) add.setInt(nExtra - 1, pid)
-        joined(row, add): InternalRow
-      }
-    }
-    val out = GraftColumnBridge.internalRows(
-      df.sparkSession, outRdd, StructType(r.schema ++ extra))
+      })
     (if (hasCum) out.drop(CUMV) else out, r.stats, r.cleanup)
   }
 }

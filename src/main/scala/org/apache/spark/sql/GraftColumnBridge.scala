@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.StructType
 /** `private[sql]` escape hatch for building Columns from custom Catalyst
   * expressions (the same technique every Spark extension library uses —
   * frameless, spark-daria, sedona all ship an `org.apache.spark.sql`
-  * bridge object). Kept to the two minimal conversions.
+  * bridge object). Kept to minimal conversions, plus the Catalyst-row
+  * passes below.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -23,38 +24,41 @@ object GraftColumnBridge {
       : DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** `queryExecution.toRdd` of `df`: its rows as Catalyst rows, for
-    * narrow passes that read a layout without converting every row to an
-    * external `Row`. Built inside a SQL execution, as `Dataset.rdd` is:
-    * the jobs the plan runs to produce its RDD (a cache build's exchanges)
-    * then carry the session's job artifact state, so their tasks compile
-    * under the session's executor classloader instead of a fresh one.
+  /** `f` applied to `df`'s rows as Catalyst rows, collected: the one way
+    * a narrow pass reads a layout to the driver without converting every
+    * row to an external `Row`. Both halves of the session policy live
+    * here so no caller can miss one: the RDD comes from
+    * `queryExecution.toRdd` built inside a SQL execution (as
+    * `Dataset.rdd` is), so the jobs the plan runs to produce it (a cache
+    * build's exchanges) carry the session's job artifact state; and the
+    * collect runs under that state too, so the pass's tasks compile
+    * under the same executor classloader as the session's SQL jobs and
+    * share their generated classes. Rows may be one REUSED object per
+    * iterator: a pass that buffers them must copy.
     */
-  def internalRdd(df: DataFrame): RDD[InternalRow] = {
+  def collectRows[T](df: DataFrame)(f: RDD[InternalRow] => RDD[T])
+      : Array[T] = {
+    val rdd = f(internalRdd(df))
+    df.sparkSession.asInstanceOf[classic.SparkSession].artifactManager
+      .withResources(rdd.collect())
+  }
+
+  /** `f` applied to `df`'s Catalyst rows, re-wrapped as a DataFrame of
+    * `schema` (`internalCreateDataFrame` is `private[sql]`; the SNIPPETS
+    * DatasetFactory pattern): a narrow pass that runs inside its
+    * consumer's own SQL jobs, with no external-`Row` round trip and no
+    * per-schema encoder class. The scan copies each row into its own
+    * UnsafeRow before any operator buffers it, so `f` may hand back one
+    * reused mutable row.
+    */
+  def mapRows(df: DataFrame, schema: StructType)(
+      f: RDD[InternalRow] => RDD[InternalRow]): DataFrame =
+    df.sparkSession.asInstanceOf[classic.SparkSession]
+      .internalCreateDataFrame(f(internalRdd(df)), schema)
+
+  private def internalRdd(df: DataFrame): RDD[InternalRow] = {
     val qe = df.queryExecution
     org.apache.spark.sql.execution.SQLExecution
       .withNewExecutionId(qe, Some("rdd"))(qe.toRdd)
   }
-
-  /** `rdd.collect()` under the session's job artifact state, as the
-    * session's own SQL jobs run: a narrow pass over [[internalRdd]] rows
-    * then compiles its tasks' classes under the same executor
-    * classloader as the SQL jobs that read the same layout, and shares
-    * them.
-    */
-  def collectInSession[T](spark: SparkSession, rdd: RDD[T]): Array[T] =
-    spark.asInstanceOf[classic.SparkSession].artifactManager
-      .withResources(rdd.collect())
-
-  /** DataFrame over an RDD of Catalyst rows (`internalCreateDataFrame` is
-    * `private[sql]`): the re-wrap for narrow passes that run on
-    * `queryExecution.toRdd`, so their rows never round-trip through
-    * external `Row`s and no per-schema encoder class is generated. The
-    * scan copies each row into its own UnsafeRow before any operator
-    * buffers it, so a pass may hand back one reused mutable row.
-    */
-  def internalRows(spark: SparkSession, rows: RDD[InternalRow],
-      schema: StructType): DataFrame =
-    spark.asInstanceOf[classic.SparkSession]
-      .internalCreateDataFrame(rows, schema)
 }

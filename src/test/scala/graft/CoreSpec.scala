@@ -246,6 +246,18 @@ class FragmentsSpec extends AnyFunSuite with Matchers with SparkTest {
     // 2*1 + 2*3 + 1*3 = 11
     Fragments.possibleInterAll(frags) shouldBe 11L
   }
+  test("possiblePairsOfLoci agrees with the window and aggregate forms") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val frags = (for (c <- Seq("c1", "c2", "c3"); _ <- 0 until 200)
+      yield (c, 500L + 1000L * rnd.nextInt(400))).toDF("chr", "mid")
+    for ((lo, up) <- Seq((0L, Long.MaxValue / 4), (0L, 0L), (1000L, 1000L),
+        (5000L, 60000L))) withClue((lo, up)) {
+      Fragments.possiblePairsOfLoci(Fragments.loci(frags), lo, up) shouldBe
+        Fragments.PossiblePairs(Fragments.possibleIntraInRange(frags, lo, up),
+          Fragments.possibleInterAll(frags))
+    }
+  }
   test("fixedSizeFragments lays a resolution grid") {
     val df = Fragments.fixedSizeFragments(spark,
       Seq(("c1", 20000L), ("c2", 7000L)), 5000L)

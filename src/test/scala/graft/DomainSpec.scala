@@ -117,6 +117,28 @@ class PipelineSpec extends AnyFunSuite with Matchers with SparkTest {
         endsMappable = true)
   }
 
+  test("config checks run before the front end starts its futures") {
+    val (frags, contacts) = fixture
+    val started = new java.util.concurrent.atomic.AtomicBoolean(false)
+    an[IllegalArgumentException] should be thrownBy
+      Pipeline.intraSignificancesWith(frags, contacts,
+        Some(() => { started.set(true); frags }), FitHiCConfig(passes = 0))
+    Thread.sleep(200)
+    started.get shouldBe false
+  }
+
+  test("a failing bias table surfaces from the inter model with no " +
+      "inter contacts") {
+    // the single-chromosome fixture takes the inter model's nothing-to-
+    // score branch, which must still await the bias table
+    import spark.implicits._
+    val (frags, contacts) = fixture
+    val noBiasColumn = Seq(("chr1", 2500L)).toDF("chr", "mid")
+    an[org.apache.spark.sql.AnalysisException] should be thrownBy
+      Pipeline.interSignificances(frags, contacts, Some(noBiasColumn),
+        FitHiCConfig())
+  }
+
   test("bias factors scale priors (inter model)") {
     import spark.implicits._
     val frags = Seq(("c1", 0L, 2500L, 5L, 1), ("c2", 0L, 2500L, 5L, 1),
