@@ -35,12 +35,14 @@ object DevProfile {
     }
     val L = HicQueries.L
     val U = HicQueries.U
-    t("possibleIntraInRange") {
-      Fragments.possibleIntraInRange(frags, L, U)
+    val loci = Fragments.loci(frags)
+    val chroms = t("possiblePairsWithChroms") {
+      Fragments.possiblePairsWithChroms(loci, L, U).chroms
     }
     val classified = t("classify+filter+persist") {
-      val x = Contacts.classify(
-        Contacts.bothEndsMappable(contacts, frags), L, U)
+      val x = Contacts.classify(Contacts.bothEndsMappable(
+          Contacts.withLocusKeys(contacts, chroms),
+          Contacts.keyedByLocus(loci, chroms)), L, U)
         .filter(col("cls") === "intraInRange")
         .withColumn("bias1", lit(1.0)).withColumn("bias2", lit(1.0))
         .persist()

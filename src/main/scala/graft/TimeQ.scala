@@ -35,8 +35,10 @@ object TimeQ {
         }
       })
     try SparkEntry.queries("q_scan_project")(spark, dir).count() catch { case _: Throwable => }
-    // SPARK_GRAFT_TIMEQ_FULL=1: force the FULL executed plan via toRdd
-    // (count() lets the optimizer prune unused expensive columns — e.g.
+    // SPARK_GRAFT_TIMEQ_FULL=1: force the FULL executed plan by counting
+    // its Catalyst rows (GraftColumnBridge.collectRows, which keeps the
+    // session's classloader, so a repeat does not recompile; count()
+    // lets the optimizer prune unused expensive columns — e.g.
     // an unreferenced window collapses entirely, which skews an A/B
     // against any operator the pruner can't see into)
     val full = sys.env.get("SPARK_GRAFT_TIMEQ_FULL").contains("1")
@@ -74,7 +76,10 @@ object TimeQ {
       val i0 = inputRecs.get()
       val t0 = System.nanoTime()
       val df = Registry.all(name).fn(spark, dir)
-      val n = if (full) df.queryExecution.toRdd.count() else df.count()
+      val n = if (full) org.apache.spark.sql.GraftColumnBridge
+          .collectRows(df)(rows => rows.mapPartitions(it =>
+            Iterator.single(it.size.toLong))).sum
+        else df.count()
       val t1 = System.nanoTime()
       println(f"TIME $name ${(t1-t0)/1e9}%.2f s rows=$n " +
         f"spillMB=${(quiesce() - s0) / 1e6}%.0f " +

@@ -102,7 +102,8 @@ object FitHiCMain {
     if (intraOn) {
       // per-pass spline/bin diagnostics (A26's data, sans plot): the bins
       // are already on the driver for the spline fit, in binIdx order, so
-      // emitting the table costs one tiny write per pass and no sort
+      // emitting the table costs one tiny one-task write per pass and no
+      // sort
       val diags = scala.collection.mutable.ArrayBuffer
         .empty[Pipeline.PassDiagnostics]
       val intra = Pipeline.intraSignificancesFrom(fe,
@@ -111,7 +112,8 @@ object FitHiCMain {
         writeSig(intra.filter(col("pass") === pass), s"spline_pass$pass")
       import spark.implicits._
       for (pass <- 1 to cfg.passes)
-        graft.io.Tsv.write(diags.filter(_.pass == pass).toSeq.toDF(),
+        graft.io.Tsv.write(diags.filter(_.pass == pass).toSeq.toDF()
+            .coalesce(1),
           s"$outDir/$lib.spline_pass$pass.res$res.bins.txt.gz",
           Seq("binIdx", "pairCount", "sumCount", "avgDist", "rawProb",
             "splineProb"))

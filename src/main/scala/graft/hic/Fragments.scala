@@ -15,10 +15,12 @@ object Fragments {
     * Distributed closed form: per chromosome, for each locus count the
     * loci at (mid + low .. mid + up] going forward via a range-frame
     * window — O(n log n), no pair materialization (SURVEY §7.3 #6). Each
-    * unordered pair is counted exactly once (at its left end).
+    * unordered pair is counted exactly once (at its left end). An empty
+    * range (`low > up`) holds no pair.
     */
   def possibleIntraInRange(frags: DataFrame, low: Long, up: Long): Long = {
     import org.apache.spark.sql.expressions.Window
+    if (low > up) return 0L
     val lo = math.max(low, 1L) // a pair needs two distinct loci
     val w = Window.partitionBy("chr").orderBy("mid")
       .rangeBetween(lo, math.min(up, Long.MaxValue / 2))
@@ -44,6 +46,11 @@ object Fragments {
   /** BH's M for both models (A12): possible pairs, NOT observed rows. */
   final case class PossiblePairs(intraInRange: Long, interAll: Long)
 
+  /** What the one pass of [[possiblePairsWithChroms]] yields: the
+    * possible pairs and the loci's chromosome names.
+    */
+  final case class LociCensus(possible: PossiblePairs, chroms: Seq[String])
+
   /** The distinct (chr, mid) loci of a fragment table. */
   def loci(frags: DataFrame): DataFrame =
     frags.select(col("chr"), col("mid")).distinct()
@@ -60,7 +67,14 @@ object Fragments {
     * ≤ #chromosomes rows the driver collects.
     */
   def possiblePairsOfLoci(loci: DataFrame, low: Long,
-      up: Long): PossiblePairs = {
+      up: Long): PossiblePairs =
+    possiblePairsWithChroms(loci, low, up).possible
+
+  /** [[possiblePairsOfLoci]] plus the chromosome names its per-chromosome
+    * rows carry to the driver anyway.
+    */
+  def possiblePairsWithChroms(loci: DataFrame, low: Long,
+      up: Long): LociCensus = {
     val lo = math.max(low, 1L) // a pair needs two distinct loci
     val hi = math.min(up, Long.MaxValue / 2)
     val perChr = GraftColumnBridge.collectRows(
@@ -71,7 +85,7 @@ object Fragments {
         (r.getUTF8String(0).toString, r.getLong(1))
       }
       .groupByKey()
-      .map { case (_, ms) =>
+      .map { case (chr, ms) =>
         val mids = ms.toArray
         java.util.Arrays.sort(mids)
         // mids are distinct: [a, b] holds from(b + 1) - from(a) of them
@@ -80,12 +94,13 @@ object Fragments {
           if (i >= 0) i else -i - 1
         }
         var fwd = 0L
-        for (m <- mids) fwd += from(m + hi + 1) - from(m + lo)
-        (mids.length.toLong, fwd)
+        if (lo <= hi)
+          for (m <- mids) fwd += from(m + hi + 1) - from(m + lo)
+        (chr, mids.length.toLong, fwd)
       })
-    val t = perChr.map(_._1).sum
-    PossiblePairs(perChr.map(_._2).sum,
-      (t * t - perChr.map(c => c._1 * c._1).sum) / 2)
+    val t = perChr.map(_._2).sum
+    LociCensus(PossiblePairs(perChr.map(_._3).sum,
+      (t * t - perChr.map(c => c._2 * c._2).sum) / 2), perChr.map(_._1).toSeq)
   }
 
   /** A23: fixed-size binning of chromosome sizes → fragment skeleton

@@ -716,8 +716,9 @@ object HicQueries {
         // frags = the reference's fragments INPUT file (A2) — standing
         // parquet shared with q_hic_significances
         val frags = standingFrags(spark, dir)
-        // thunked: the KR solve (and its eager routing count) runs on a
-        // background thread overlapping the marginals/possible-M jobs
+        // thunked: the front end calls it after its config checks, and
+        // the KR solve (with its eager routing count) overlaps the
+        // possible-M query
         val kr = () => Kr.biases(contacts.filter(
           abs(col("mid2") - col("mid1")).between(L, U)),
           trimPercentile = 0.05, iterations = 10)

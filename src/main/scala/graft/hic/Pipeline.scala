@@ -4,10 +4,10 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{BinomSf, SplineInterp}
+import graft.functions.{BinomSf, Param, SplineInterp}
 import graft.ops.Caches
 
 /** The full Fit-Hi-C significance pipeline (SURVEY.md §3.1 Entry 1,
@@ -41,17 +41,17 @@ object Pipeline {
   private val IntraInRange = "intraInRange"
   private val InterAll = "interAll"
 
-  /** Run `body`; if it throws while a concurrently-launched action is
-    * still in flight, wait for that action to settle (success or failure)
-    * before rethrowing — otherwise the detached job keeps running while
-    * the caller's Caches.drain() unpersists its inputs, and its own
-    * failure is silently dropped.
+  /** Run `body`; if it throws while the possible-pair query is still in
+    * flight, wait for it to settle (success or failure) before rethrowing
+    * — otherwise the detached job keeps running while the caller's
+    * Caches.drain() unpersists its inputs, and its own failure is
+    * silently dropped.
     */
-  private def settleOnFailure[A](futs: Future[_]*)(body: => A): A =
+  private def settleOnFailure[A](fut: Future[_])(body: => A): A =
     try body
     catch {
       case t: Throwable =>
-        futs.foreach(fut => scala.util.Try(Await.ready(fut, Duration.Inf)))
+        scala.util.Try(Await.ready(fut, Duration.Inf))
         throw t
     }
 
@@ -64,25 +64,27 @@ object Pipeline {
 
   /** The front half the intra and inter models share, built once by
     * [[frontEnd]]: `pairs` is the mapped, classified contact set holding
-    * only the classes a model will read (cached — each model traverses
-    * it several times); `possible` is BH's M for both models from one
-    * query over the mapped loci; `biases` is the clamped bias-factor
-    * table ([[Contacts.biasFactors]]), constructed and cached once. Both
-    * futures run while the caller bins.
+    * only the classes a model will read, with each end's bias factor
+    * (`bias1`, `bias2`; 1.0 for an end without one), cached — each model
+    * traverses it several times; `census` holds BH's M for both models
+    * from one query over the mapped loci.
     */
   final case class FrontEnd(cfg: FitHiCConfig, pairs: DataFrame,
-      possible: Future[Fragments.PossiblePairs],
-      biases: Future[Option[DataFrame]])
+      census: Future[Fragments.LociCensus])
 
   /** Build the shared front half for the models asked for (`intra`,
-    * `inter`).
+    * `inter`). It is the only place that looks anything up: the contacts
+    * are joined to the mappable loci and to the clamped bias factors
+    * ([[Contacts.biasFactors]]) once, each through broadcast joins on one
+    * packed locus key ([[graft.functions.LocusKey]]). The key's
+    * chromosome dictionary comes from the possible-pair pass, which runs
+    * concurrently with the caller's binning when there is nothing to
+    * look up.
     *
-    * `mkBiases` is a THUNK: bias construction that runs eager driver
-    * work (the KR solve's routing count) executes on a background
-    * thread, overlapping the possible-pair query and pass-1 binning
-    * instead of serializing in front of the whole pipeline. The table is
-    * persisted: a lazy upstream (a KR solve) must run once, not once per
-    * scoring plan.
+    * `mkBiases` is a THUNK, called once the config checks pass: bias
+    * construction may run eager driver work (the KR solve's routing
+    * count). The keyed factor table is persisted, so a lazy upstream (a
+    * KR solve) runs once for both ends' joins.
     *
     * `endsMappable = true` asserts that every contact end appears in
     * `frags` with hitCount ≥ mappabilityThr — true by construction when
@@ -92,8 +94,8 @@ object Pipeline {
     * no-ops, so they are skipped outright. A threshold above 1 makes the
     * assertion unprovable and is rejected.
     *
-    * Every check runs before the first future starts, and a failure
-    * while the rest is built settles both futures before it unwinds.
+    * Every check runs before the possible-pair query starts, and a
+    * failure while the rest is built settles it before it unwinds.
     */
   def frontEnd(frags: DataFrame, contacts: DataFrame,
       mkBiases: Option[() => DataFrame], cfg: FitHiCConfig,
@@ -105,38 +107,52 @@ object Pipeline {
         cfg.mappabilityThr)
     require(!intra || cfg.passes >= 1,
       s"passes must be >= 1, got ${cfg.passes}")
+    require(cfg.distLow <= cfg.distUp,
+      s"distLow must be <= distUp, got [${cfg.distLow}, ${cfg.distUp}]")
     // the mapped loci feed the possible-pair query and, unless asserted
     // away, both semi joins: cached once, so the distinct runs once and
     // every reader shares the same scan
     val loci = Fragments.loci(Fragments.mappable(frags, cfg.mappabilityThr))
     val lociCache =
       if (endsMappable) loci else Caches.register(loci.persist())
-    // (1) BH's M for both models: an independent lineage, launched first
-    // so its job runs CONCURRENTLY with the bias solve and the binning
-    // jobs
-    val possible = Future(
-      Fragments.possiblePairsOfLoci(lociCache, cfg.distLow, cfg.distUp))
-    // (2) bias construction on a background thread: binning reads only
-    // dist/count/keys, so pass-1 binning runs while a KR solve does — the
-    // table is awaited only at scoring
-    val biases = mkBiases match {
-      case Some(mk) => Future(Some(Caches.register(Contacts.biasFactors(
-        mk(), cfg.biasLow, cfg.biasUp).persist())))
-      case None => Future.successful(None)
-    }
-    val pairs = settleOnFailure(possible, biases) {
-      val filtered =
-        if (endsMappable) contacts
-        else Contacts.bothEndsMappable(contacts, lociCache)
+    // BH's M for both models, from an independent lineage
+    val census = Future(
+      Fragments.possiblePairsWithChroms(lociCache, cfg.distLow, cfg.distUp))
+    val pairs = settleOnFailure(census) {
+      val looked =
+        if (endsMappable && mkBiases.isEmpty) withUnitBiases(contacts)
+        else lookUp(contacts, if (endsMappable) None else Some(lociCache),
+          mkBiases.map(mk => Contacts.biasFactors(mk(), cfg.biasLow,
+            cfg.biasUp)),
+          Await.result(census, Duration.Inf).chroms)
       val classes = (if (intra) Seq(IntraInRange) else Nil) ++
         (if (inter) Seq(InterAll) else Nil)
       Caches.register(
-        Contacts.classify(filtered, cfg.distLow, cfg.distUp)
+        Contacts.classify(looked, cfg.distLow, cfg.distUp)
           .filter(col("cls").isin(classes: _*))
           .persist())
     }
-    FrontEnd(cfg, pairs, possible, biases)
+    FrontEnd(cfg, pairs, census)
   }
+
+  /** `contacts` without the rows with an end outside `loci` (when given)
+    * and with each end's bias factor from `factors` (1.0 without one),
+    * every table looked up on packed keys over the chromosome names
+    * `chroms`.
+    */
+  private def lookUp(contacts: DataFrame, loci: Option[DataFrame],
+      factors: Option[DataFrame], chroms: Seq[String]): DataFrame = {
+    val keyed = Contacts.withLocusKeys(contacts, chroms)
+    val mapped = loci.fold(keyed)(l =>
+      Contacts.bothEndsMappable(keyed, Contacts.keyedByLocus(l, chroms)))
+    factors.fold(withUnitBiases(mapped))(f =>
+        Contacts.withBiasFactors(mapped,
+          Caches.register(Contacts.keyedByLocus(f, chroms).persist())))
+      .drop("locus1", "locus2")
+  }
+
+  private def withUnitBiases(contacts: DataFrame): DataFrame =
+    contacts.withColumn("bias1", lit(1.0)).withColumn("bias2", lit(1.0))
 
   /** Run the intra-chromosomal pipeline; returns one row per tested pair
     * and pass: chr1, mid1, chr2, mid2, contactCount, p_value, q_value,
@@ -162,17 +178,17 @@ object Pipeline {
       endsMappable, inter = false), diagSink)
 
   /** The intra model over a built [[FrontEnd]]. Any failure settles the
-    * front end's futures before it unwinds.
+    * front end's possible-pair query before it unwinds.
     */
   def intraSignificancesFrom(fe: FrontEnd,
       diagSink: Option[Seq[PassDiagnostics] => Unit] = None): DataFrame =
-    settleOnFailure(fe.possible, fe.biases)(intraModel(fe, diagSink))
+    settleOnFailure(fe.census)(intraModel(fe, diagSink))
 
   private def intraModel(fe: FrontEnd,
       diagSink: Option[Seq[PassDiagnostics] => Unit]): DataFrame = {
     val cfg = fe.cfg
-    // the dist-ranged cache serves binning only: every pass's
-    // equal-occupancy binning re-bins a FILTERED view of this layout.
+    // the dist-ranged cache serves binning only: pass 1 bins this layout
+    // and every refinement pass a FILTERED view of it.
     // Scoring reads the front end's cache like the inter model does (bhQ
     // re-partitions on p_value regardless), so both models run one
     // scoring plan
@@ -188,18 +204,16 @@ object Pipeline {
     // (Σ sumCount over bins) — no separate full-table aggregate job
     var n = 0L
     var m = -1L
-    // pass-k null = pairs minus the previous pass's outliers
-    var drop = rangedPairs.sparkSession.sparkContext.broadcast(NoKeys)
-    var nullSource = without(rangedPairs, drop)
-    var layoutPreserved = true
+    // pass-k null = pairs minus the previous pass's outliers, a narrow
+    // filter over the ranged layout, so no pass needs an exchange
+    var nullSource = rangedPairs
     var result: DataFrame = null
     for (pass <- 1 to cfg.passes) {
       val bins = Binning.collectBins(nullSource, cfg.nBins, keys,
-        assumeRanged = layoutPreserved)
-      drop.unpersist() // read only by the binning jobs just run
+        assumeRanged = true)
       if (pass == 1) {
         n = bins.map(_.getAs[Long]("sumCount")).sum
-        m = Await.result(fe.possible, Duration.Inf).intraInRange
+        m = Await.result(fe.census, Duration.Inf).possible.intraInRange
       }
       require(n > 0, "no intra-in-range contacts after filtering")
       val (xs, raw, fitted) = Spline.fitFromBins(bins, n)
@@ -209,62 +223,38 @@ object Pipeline {
           bins(i).getAs[Long]("sumCount"), xs(i), raw(i), fitted(i))))
       }
       val scored = score(fe, IntraInRange, xs, fitted, n, m)
-        .withColumn("pass", lit(pass))
-      result = if (result == null) scored else result.unionByName(scored)
-      if (pass < cfg.passes) {
-        val outliers = scored.filter(col("q_value") < cfg.qThreshold)
-          .select(keys.map(col): _*)
-        // a refinement outlier set is normally a tiny fraction of the
-        // pairs: its keys come to the driver and are broadcast, and the
-        // next pass filters them out in a narrow pass, so the
-        // dist-ranged layout survives and the next pass skips the
-        // exchange. Above the cap, fall back to the scale-safe shuffle
-        // anti-join + re-range.
-        val keysOut = outliers.limit(OutlierCap + 1).collect()
-        if (keysOut.length <= OutlierCap) {
-          drop = rangedPairs.sparkSession.sparkContext
-            .broadcast(keySet(keysOut))
-          nullSource = without(rangedPairs, drop)
-          layoutPreserved = true
-        } else {
-          nullSource = rangedPairs.join(outliers, keys, "left_anti")
-          layoutPreserved = false
-        }
-      }
+      val tagged = scored.withColumn("pass", lit(pass))
+      result = if (result == null) tagged else result.unionByName(tagged)
+      // the outliers are the rows with q < qThreshold, which are exactly
+      // the rows with p <= p*, the largest such row's p (see
+      // largestSignificantP): the filter recomputes p with the same
+      // columns, so the doubles match, and p* rides a Param, so every
+      // refinement pass bins through one class
+      if (pass < cfg.passes)
+        nullSource = rangedPairs.filter(pValue(xs, fitted, n) >
+          GraftColumnBridge.column(
+            Param(largestSignificantP(scored, cfg.qThreshold))))
     }
     result
   }
 
-  private type Key = (String, Long, String, Long)
-  private val NoKeys: Set[Key] = Set.empty
-
-  /** Outlier keys the driver holds at once: the collected `Row`s and the
-    * set built from them take ~320 bytes a key on the driver (measured
-    * 323 MB at 1M keys, 78 MB at 250k; the set alone ~110 bytes a key),
-    * so ~32 MB at the cap.
+  /** The largest p-value of a scored pass whose q-value is below `qThr`,
+    * or −1 when there is none: one narrow pass, no aggregate plan. BH's
+    * q is non-decreasing in p, and tied p-values get one q whatever
+    * their order (each tie's q is the suffix min from the tie's last
+    * rank), so the rows with q < `qThr` are exactly those with p at or
+    * below this value.
     */
-  private val OutlierCap = 100000
-
-  /** The keys of `rows` (chr1, mid1, chr2, mid2), each chromosome name
-    * held once.
-    */
-  private def keySet(rows: Array[org.apache.spark.sql.Row]): Set[Key] = {
-    val names = scala.collection.mutable.HashMap.empty[String, String]
-    def name(s: String): String = names.getOrElseUpdate(s, s)
-    rows.iterator.map(r => (name(r.getString(0)), r.getLong(1),
-      name(r.getString(2)), r.getLong(3))).toSet
-  }
-
-  /** `pairs` without the rows whose keys are in `drop`: a narrow filter
-    * whose generated code does not depend on the set (the predicate
-    * captures only the broadcast handle), so every pass bins through one
-    * class, the empty set of pass 1 included.
-    */
-  private def without(pairs: DataFrame,
-      drop: org.apache.spark.broadcast.Broadcast[Set[Key]]): DataFrame = {
-    val keep = udf((c1: String, m1: Long, c2: String, m2: Long) =>
-      !drop.value.contains((c1, m1, c2, m2)))
-    pairs.filter(keep(keys.map(col): _*))
+  private def largestSignificantP(scored: DataFrame, qThr: Double): Double = {
+    val pIdx = scored.schema.fieldIndex("p_value")
+    val qIdx = scored.schema.fieldIndex("q_value")
+    GraftColumnBridge.collectRows(scored)(_.mapPartitions { it =>
+      var pMax = -1.0
+      it.foreach { r =>
+        if (r.getDouble(qIdx) < qThr) pMax = math.max(pMax, r.getDouble(pIdx))
+      }
+      Iterator.single(pMax)
+    }).max
   }
 
   /** Inter-chromosomal model (A21): uniform bias-scaled prior.
@@ -277,16 +267,13 @@ object Pipeline {
       cfg, endsMappable, intra = false))
 
   /** The inter model over a built [[FrontEnd]]. Any failure settles the
-    * front end's futures before it unwinds, and a failing bias table
-    * surfaces even when there is nothing to score.
+    * front end's possible-pair query before it unwinds.
     */
   def interSignificancesFrom(fe: FrontEnd): DataFrame =
-    settleOnFailure(fe.possible, fe.biases) {
+    settleOnFailure(fe.census) {
       // N and M are independent lineages — M's query is already running
       val n = sumCounts(fe.pairs, InterAll)
-      val m = Await.result(fe.possible, Duration.Inf).interAll
-      // awaited here, so a failed bias table surfaces on both branches
-      Await.result(fe.biases, Duration.Inf)
+      val m = Await.result(fe.census, Duration.Inf).possible.interAll
       if (n == 0) fe.pairs.filter(col("cls") === InterAll)
         .select((keys.map(col) :+ col("contactCount") :+
           lit(1.0).as("p_value") :+ lit(1.0).as("q_value")): _*)
@@ -312,32 +299,28 @@ object Pipeline {
     }).sum
   }
 
-  /** Score every front-end pair of class `cls`: prior = curve(dist) ·
-    * bias1 · bias2 with the curve the piecewise-linear lookup through
-    * (`xs`, `ys`); p-value = P[X ≥ contactCount], X ~ Binom(n, prior);
-    * BH q with M = `m`. One plan for every pass and both models: the
-    * class and the knots are reference objects and N is a `Param`, so
-    * none of them is baked into the generated code.
+  /** p-value = P[X ≥ contactCount], X ~ Binom(n, prior), with prior =
+    * curve(dist) · bias1 · bias2 and the curve the piecewise-linear
+    * lookup through (`xs`, `ys`). Codegen'd (graft.functions.SplineInterp,
+    * BinomSf): the lookup and binom_sf stay in ONE whole-stage-codegen
+    * span, and the knots are reference objects and N a `Param`, so none
+    * of them is baked into the generated code. Inter pairs have no
+    * distance; the one-knot curve ignores it.
+    */
+  private def pValue(xs: Array[Double], ys: Array[Double], n: Long): Column =
+    BinomSf.column(col("contactCount"), n,
+      SplineInterp.curve(xs, ys)(coalesce(col("dist"), lit(0L))) *
+        col("bias1") * col("bias2"))
+
+  /** Score every front-end pair of class `cls` ([[pValue]]) with BH q
+    * under M = `m`: keys, contactCount, p_value, q_value. One plan for
+    * every pass and both models; BH ranges, sorts and caches only the
+    * columns it returns.
     */
   private def score(fe: FrontEnd, cls: String, xs: Array[Double],
-      ys: Array[Double], n: Long, m: Long): DataFrame = {
-    val pairs = fe.pairs.filter(col("cls") === cls)
-    val biased = Await.result(fe.biases, Duration.Inf) match {
-      case Some(f) => Contacts.withBiasFactors(pairs, f)
-      case None => pairs.withColumn("bias1", lit(1.0))
-        .withColumn("bias2", lit(1.0))
-    }
-    // codegen'd curve lookup (graft.functions.SplineInterp): the prior
-    // interpolation + binom_sf stay in ONE whole-stage-codegen span — no
-    // UDF dispatch in the corpus-sized scoring pass. Inter pairs have no
-    // distance; the one-knot curve ignores it
-    val prior = SplineInterp.curve(xs, ys)(coalesce(col("dist"), lit(0L))) *
-      col("bias1") * col("bias2")
-    Stats.bhQ(biased.withColumn("prior", prior)
-        .withColumn("p_value",
-          BinomSf.column(col("contactCount"), n, col("prior"))),
+      ys: Array[Double], n: Long, m: Long): DataFrame =
+    Stats.bhQ(fe.pairs.filter(col("cls") === cls)
+        .select((keys.map(col) :+ col("contactCount") :+
+          pValue(xs, ys, n).as("p_value")): _*),
       "p_value", keys, "q_value", Some(m), persistInput = false)
-      .select((keys.map(col) :+ col("contactCount") :+ col("p_value") :+
-        col("q_value")): _*)
-  }
 }

@@ -1425,7 +1425,11 @@ object Warehouse {
       .groupBy("sc", "l_suppkey", "l_partkey").agg(sum("w").as("dw"))
       .filter(col("dw") =!= 0)
       .write.partitionBy("sc").mode("overwrite").parquet(p)
-    SupportState(state0 + "/base", Seq(p + "/sc=1", p + "/sc=2"))
+    // the partitioned write makes no directory for an empty delta: a
+    // sidecar with no rows has nothing to resolve, so it is left out
+    SupportState(state0 + "/base", Seq(1, 2).map(n => s"$p/sc=$n")
+      .filter(sc => java.nio.file.Files.isDirectory(
+        java.nio.file.Paths.get(sc))))
   }
 
   /** [[ivmDistinctFold]] plus the final merge-on-read support state

@@ -239,6 +239,14 @@ class FragmentsSpec extends AnyFunSuite with Matchers with SparkTest {
     for ((lo, up) <- Seq((0L, 100000L), (5000L, 10000L), (10000L, 20000L)))
       Fragments.possibleIntraInRange(frags, lo, up) shouldBe brute(lo, up)
   }
+  test("an empty distance range (low > up) holds no possible pair") {
+    import spark.implicits._
+    val frags = Seq(("c1", 2500L), ("c1", 7500L), ("c1", 12500L))
+      .toDF("chr", "mid")
+    Fragments.possibleIntraInRange(frags, 10000L, 4000L) shouldBe 0L
+    Fragments.possiblePairsOfLoci(Fragments.loci(frags), 10000L, 4000L)
+      .intraInRange shouldBe 0L
+  }
   test("possibleInterAll matches closed form") {
     import spark.implicits._
     val frags = Seq(("c1", 1L), ("c1", 2L), ("c2", 3L), ("c3", 4L),

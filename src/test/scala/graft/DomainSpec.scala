@@ -127,6 +127,93 @@ class PipelineSpec extends AnyFunSuite with Matchers with SparkTest {
     started.get shouldBe false
   }
 
+  test("distLow > distUp is rejected before any query starts") {
+    val (frags, contacts) = fixture
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val bad = FitHiCConfig(distLow = 3000L, distUp = 2000L)
+      val e = the[IllegalArgumentException] thrownBy
+        Pipeline.intraSignificances(frags, contacts, None, bad)
+      e.getMessage should include("distLow")
+      an[IllegalArgumentException] should be thrownBy
+        Pipeline.interSignificances(frags, contacts, None, bad)
+      Thread.sleep(500)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get shouldBe 0
+  }
+
+  /** One chromosome, 40 loci on a 5 kb grid, every pair up to 8 loci
+    * apart with a count set by the distance alone (so p-values tie within
+    * a distance), plus planted outliers: two tied ones at one locus
+    * apart, and single ones at one and two loci apart.
+    */
+  private def tiedFixture: (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val mids = (0 until 40).map(i => 2500L + 5000L * i)
+    val frags = mids.map(m => ("chr1", 0L, m, 10L, 1))
+      .toDF("chr", "extraField", "mid", "hitCount", "mappable")
+    val planted = Map((5, 6) -> 60L, (15, 16) -> 60L, (25, 26) -> 45L,
+      (30, 32) -> 40L)
+    val contacts = (for {
+      i <- 0 until 40; j <- i + 1 until math.min(i + 9, 40)
+    } yield ("chr1", mids(i), "chr1", mids(j),
+      planted.getOrElse((i, j), math.max(1L, 12L / (j - i)))))
+      .toDF("chr1", "mid1", "chr2", "mid2", "contactCount")
+    (frags, contacts)
+  }
+
+  test("pass 2's threshold null bins exactly as an anti-join of pass 1's " +
+      "q < qThreshold keys, with and without ties at the threshold p") {
+    val (frags, contacts) = tiedFixture
+    val keys = Seq("chr1", "mid1", "chr2", "mid2")
+    val base = FitHiCConfig(nBins = 10, passes = 1, distLow = 0,
+      distUp = 1000000L)
+    // pass 1 does not depend on the threshold
+    val pass1 = Pipeline.intraSignificances(frags, contacts, None, base)
+      .collect()
+    val pq = pass1.map(r =>
+      (r.getAs[Double]("p_value"), r.getAs[Double]("q_value")))
+    // each threshold just above a q value: the p of its largest
+    // significant row, and how many rows share that p
+    val cuts = pq.map(_._2).distinct.sorted.filter(_ < 1.0).map { q =>
+      val pStar = pq.filter(_._2 <= q).map(_._1).max
+      (Math.nextUp(q), pq.count(_._1 == pStar))
+    }
+    val single = cuts.find(_._2 == 1).map(_._1)
+    val tied = cuts.find(_._2 > 1).map(_._1)
+    single should not be empty
+    tied should not be empty
+    val pairs = graft.hic.Contacts.classify(contacts, base.distLow,
+        base.distUp).filter(col("cls") === "intraInRange")
+    val n = pairs.agg(sum("contactCount")).first().getLong(0)
+    for (thr <- Seq(single.get, tied.get)) withClue(s"qThreshold $thr: ") {
+      val diags = scala.collection.mutable.ArrayBuffer
+        .empty[Pipeline.PassDiagnostics]
+      Pipeline.intraSignificances(frags, contacts, None,
+        base.copy(passes = 2, qThreshold = thr),
+        diagSink = Some(diags ++= _)).count()
+      val outliers = pass1.filter(_.getAs[Double]("q_value") < thr)
+        .map(r => (r.getString(0), r.getLong(1), r.getString(2),
+          r.getLong(3)))
+      outliers should not be empty
+      import spark.implicits._
+      val explicit = graft.hic.Binning.collectBins(
+        pairs.join(outliers.toSeq.toDF(keys: _*), keys, "left_anti"),
+        base.nBins, keys)
+      val (xs, raw, fitted) = graft.hic.Spline.fitFromBins(explicit, n)
+      diags.filter(_.pass == 2).toSeq shouldBe explicit.indices.map(i =>
+        Pipeline.PassDiagnostics(2, explicit(i).getAs[Int]("binIdx"),
+          explicit(i).getAs[Long]("pairCount"),
+          explicit(i).getAs[Long]("sumCount"), xs(i), raw(i), fitted(i)))
+    }
+  }
+
   test("a failing bias table surfaces from the inter model with no " +
       "inter contacts") {
     // the single-chromosome fixture takes the inter model's nothing-to-
@@ -311,6 +398,53 @@ class FitHiCMainSpec extends AnyFunSuite with Matchers with SparkTest {
     }
   }
 
+  /** Every broadcast hash join in the SQL executions that end while
+    * `body` runs, final adaptive plans and cached plans included.
+    */
+  private def broadcastJoins(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val lastJobEnd = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(
+          j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        lastJobEnd.accumulateAndGet(j.jobId, math.max)
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case end: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd =>
+          // the event's QueryExecution is private[sql]: read it reflectively
+          Option(end.getClass.getMethod("qe").invoke(end)).foreach(qe =>
+            plans.add(qe.asInstanceOf[QueryExecution].executedPlan))
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      // the bus delivers in order: once a marker job's end arrives, so
+      // has every event posted before it
+      val marker = nextJobId() - 1
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (lastJobEnd.get < marker && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    def joins(p: SparkPlan): Seq[BroadcastHashJoinExec] = p match {
+      case j: BroadcastHashJoinExec => j +: j.children.flatMap(joins)
+      case a: AdaptiveSparkPlanExec => joins(a.executedPlan)
+      case s: QueryStageExec => joins(s.plan)
+      case m: InMemoryTableScanExec => joins(m.relation.cachedPlan)
+      case r: ReusedExchangeExec => joins(r.child)
+      case other => (other.children ++ other.subqueries).flatMap(joins)
+    }
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq.flatMap(joins)
+  }
+
   test("a repeated -t -p 2 -x All op fits Spark's default codegen cache " +
       "and its job budget") {
     // the gate is meaningless under an enlarged cache: it holds at the
@@ -329,13 +463,26 @@ class FitHiCMainSpec extends AnyFunSuite with Matchers with SparkTest {
       (out, org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME.getCount - c0, jobs)
     }
-    val (first, _, _) = op()
+    var first = ""
+    // every lookup the op plans joins on one packed long key, so each
+    // builds a LongHashedRelation, not a paged UnsafeHashedRelation
+    val bhjs = broadcastJoins { first = op()._1 }
+    bhjs should not be empty
+    bhjs.foreach { j =>
+      val buildKeys = j.buildSide match {
+        case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.leftKeys
+        case org.apache.spark.sql.catalyst.optimizer.BuildRight => j.rightKeys
+      }
+      buildKeys.map(_.dataType) shouldBe
+        Seq(org.apache.spark.sql.types.LongType)
+    }
     val (second, compiles, jobs) = op()
     // every class the op needs is still cached from the first run: the
     // op's generated-code working set fits the 100-entry cache
     compiles shouldBe 0L
-    // the job census of the CLI op (75 before the shared front end)
-    jobs should be <= 75
+    // the job census of the CLI op (75 before the shared front end, 53
+    // before the lookups moved to the front end and the threshold null)
+    jobs should be <= 46
     val a = contents(first)
     a.map(_._1) should contain allOf ("t.interOnly.res5000.significances.txt.gz",
       "t.spline_pass2.res5000.significances.txt.gz")
@@ -1281,6 +1428,31 @@ class IvmLawSpec extends AnyFunSuite with Matchers with SparkTest {
     rows2L(viewFb) shouldBe rows2L(Warehouse.ivmDistinctRecompute(
       spark, dir, "1997-07-01", 13L))
     stFb.sidecars should have size 2
+    graft.ops.Caches.drain()
+  }
+
+  test("an empty sidecar delta is left out of the support state, which " +
+      "still resolves and compacts to the from-scratch support") {
+    // a second cut beyond the corpus: no row ships on or after it, so
+    // sidecar 2's delta is empty and the partitioned write makes no
+    // directory for it
+    val (c0, c1, m) = ("1997-07-01", "2099-01-01", 13L)
+    val st = Warehouse.ivmDistinctSidecars(spark, dir, c0, c1, m)
+    st.sidecars should have size 1
+    val cut = graft.ops.Cols.ts(c0)
+    val expected = graft.Tables(spark, dir, "lineitem")
+      .filter(!(col("l_shipdate") < cut && col("l_orderkey") % m === 0))
+      .groupBy("l_suppkey", "l_partkey")
+      .agg(count(lit(1)).as("cnt"))
+    val got = Warehouse.resolveSupport(spark, st.base, st.sidecars)
+      .select("l_suppkey", "l_partkey", "cnt")
+    got.count() shouldBe expected.count()
+    got.exceptAll(expected).count() shouldBe 0L
+    val compacted = spark.read.parquet(Warehouse.compactSupport(spark,
+        st.base, st.sidecars, graft.io.Scratch.sub("ivm_law_compact_empty")))
+      .select("l_suppkey", "l_partkey", "cnt")
+    compacted.count() shouldBe expected.count()
+    compacted.exceptAll(expected).count() shouldBe 0L
     graft.ops.Caches.drain()
   }
 

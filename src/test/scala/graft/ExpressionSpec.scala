@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-import graft.functions.{Binom, BinomSf}
+import graft.functions.{Binom, BinomSf, LocusKey}
 
 /** The native Catalyst binom_sf expression: parity with the UDF/kernel and
   * participation in whole-stage codegen (SURVEY.md §4.2 upgrade path).
@@ -71,6 +71,79 @@ class ExpressionSpec extends AnyFunSuite with Matchers with SparkTest {
       body.get
     }
     run(100L) shouldBe run(1000L)
+  }
+
+  /** `rows` (chr, mid) as an RDD-backed frame: a local relation would be
+    * evaluated by the optimizer, not by generated code.
+    */
+  private def loci(rows: Seq[(String, Long)]) = {
+    import org.apache.spark.sql.Row
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map(r => Row(r._1, r._2)), 3),
+      org.apache.spark.sql.types.StructType.fromDDL("chr STRING, mid BIGINT"))
+  }
+
+  test("locus_key: an unknown chromosome gives null, generated and " +
+      "interpreted") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    val names = Seq("chr2", "chr1")
+    val got = loci(Seq(("chr1", 5L), ("chrX", 5L), ("chr2", 7L)))
+      .select(LocusKey.column(col("chr"), col("mid"), names).as("k"))
+      .collect().map(r => Option(r.get(0))).toSeq
+    got shouldBe Seq(Some(5L), None, Some((1L << 32) | 7L))
+    val e = LocusKey(
+      org.apache.spark.sql.catalyst.expressions.BoundReference(0,
+        org.apache.spark.sql.types.StringType, nullable = false),
+      org.apache.spark.sql.catalyst.expressions.BoundReference(1,
+        org.apache.spark.sql.types.LongType, nullable = false),
+      LocusKey.dictionary(names))
+    e.eval(InternalRow(UTF8String.fromString("chrX"), 5L)) shouldBe
+      (null: Any)
+    e.eval(InternalRow(UTF8String.fromString("chr2"), 7L)) shouldBe
+      ((1L << 32) | 7L)
+  }
+
+  test("locus_key orders as (chr, mid) under Spark's string ordering") {
+    val rnd = new scala.util.Random(3)
+    // case, digits, prefixes and non-ASCII: byte order, not numeric or
+    // locale order
+    val names = Seq("chr1", "chr10", "chr2", "chrX", "chr1_random", "Chr1",
+      "c", "chrÉ", "chrZ", "scaffold_7")
+    val rows = Seq.fill(400)((names(rnd.nextInt(names.length)),
+      if (rnd.nextInt(10) == 0) (1L << 32) - 1 - rnd.nextInt(3)
+      else rnd.nextInt(1 << 20).toLong)).distinct
+    val keyed = loci(rows)
+      .withColumn("k", LocusKey.column(col("chr"), col("mid"), names))
+    val byKey = keyed.orderBy("k").select("chr", "mid").collect().toSeq
+    byKey shouldBe keyed.orderBy("chr", "mid").select("chr", "mid")
+      .collect().toSeq
+    byKey.length shouldBe rows.length
+  }
+
+  test("locus_key fails loudly for a mid outside [0, 2^32)") {
+    for (bad <- Seq(-1L, 1L << 32, Long.MaxValue)) withClue(bad) {
+      val e = intercept[Exception](loci(Seq(("chr1", 1L), ("chr1", bad)))
+        .select(LocusKey.column(col("chr"), col("mid"), Seq("chr1")))
+        .collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[IllegalArgumentException]) shouldBe true
+    }
+    // the largest mid that fits still packs
+    loci(Seq(("chr1", (1L << 32) - 1)))
+      .select(LocusKey.column(col("chr"), col("mid"), Seq("chr1")))
+      .first().getLong(0) shouldBe (1L << 32) - 1
+  }
+
+  test("locus_key's generated code does not depend on the dictionary") {
+    def body(names: Seq[String]) = loci(Seq(("a", 1L)))
+      .select(LocusKey.column(col("chr"), col("mid"), names))
+      .queryExecution.executedPlan.collectFirst {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+          w.doCodeGen()._2.body
+      }
+    body(Seq("a")) shouldBe defined
+    body(Seq("a")) shouldBe body(Seq("b", "a", "c"))
   }
 
   test("GraftExtensions injects binom_sf at session build") {
