@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Add, AggregateWindowFunction, AttributeReference, Expression, If, IsNull, Literal, ShiftRight}
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -64,11 +65,17 @@ object EmaWindow {
     org.apache.spark.sql.functions.call_function("ema_cents", c)
   }
 
-  /** Imperative registration for an existing session (idempotent). */
+  /** Imperative registration for an existing session, once: a session
+    * that already has `ema_cents` (an earlier call, or
+    * [[GraftExtensions]]) is left as is (the `BinomSf.register` guard).
+    */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ema_cents", { children =>
-        require(children.length == 1, "ema_cents(x) takes 1 argument")
-        EmaCents(children.head)
-      }, "built-in")
+    synchronized {
+      val registry = spark.sessionState.functionRegistry
+      if (!registry.functionExists(FunctionIdentifier("ema_cents")))
+        registry.createOrReplaceTempFunction("ema_cents", { children =>
+          require(children.length == 1, "ema_cents(x) takes 1 argument")
+          EmaCents(children.head)
+        }, "built-in")
+    }
 }

@@ -97,8 +97,8 @@ object FitHiCMain {
     val interOn = mode == "interOnly" || mode == "All"
     // one front end for both models: the mappable set, both-ends filter,
     // classify, bias table and both possible-pair counts are built once
-    val fe = Pipeline.frontEnd(frags, contacts, biases.map(b => () => b),
-      cfg, intra = intraOn, inter = interOn)
+    val fe = Pipeline.frontEnd(frags, contacts, biases, cfg,
+      intra = intraOn, inter = interOn)
     if (intraOn) {
       // per-pass spline/bin diagnostics (A26's data, sans plot): the bins
       // are already on the driver for the spline fit, in binIdx order, so

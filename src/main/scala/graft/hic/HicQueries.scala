@@ -716,16 +716,16 @@ object HicQueries {
         // frags = the reference's fragments INPUT file (A2) — standing
         // parquet shared with q_hic_significances
         val frags = standingFrags(spark, dir)
-        // thunked: the front end calls it after its config checks, and
-        // the KR solve (with its eager routing count) overlaps the
-        // possible-M query
-        val kr = () => Kr.biases(contacts.filter(
+        // the config is checked when it is built, before the KR solve
+        // (with its eager routing count) starts any job
+        val cfg = FitHiCConfig(nBins = 100, passes = 1, distLow = L,
+          distUp = U)
+        val kr = Kr.biases(contacts.filter(
           abs(col("mid2") - col("mid1")).between(L, U)),
           trimPercentile = 0.05, iterations = 10)
         // endsMappable: frags is this view's own marginals (see
         // q_hic_significances) — the mappability probes are no-ops
-        Pipeline.intraSignificancesWith(frags, contacts, Some(kr),
-            FitHiCConfig(nBins = 100, passes = 1, distLow = L, distUp = U),
+        Pipeline.intraSignificances(frags, contacts, Some(kr), cfg,
             endsMappable = true)
           .select(col("chr1").as("chr"), col("mid1"), col("mid2"),
             col("contactCount"),

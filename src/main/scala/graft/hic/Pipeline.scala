@@ -1,9 +1,5 @@
 package graft.hic
 
-import scala.concurrent.{Await, Future}
-import scala.concurrent.ExecutionContext.Implicits.global
-import scala.concurrent.duration.Duration
-
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
@@ -34,26 +30,22 @@ final case class FitHiCConfig(
     mappabilityThr: Long = 1L,
     biasLow: Double = 0.5,
     biasUp: Double = 2.0,
-    qThreshold: Double = 0.05)
+    qThreshold: Double = 0.05) {
+  // a config is checked when it is built, so no bias work or Spark job
+  // can start from a bad one: a zero bin count would put every row in
+  // bin 0, and an empty bias clamp would turn every factor into 1.0
+  require(nBins >= 1, s"nBins must be >= 1, got $nBins")
+  require(passes >= 1, s"passes must be >= 1, got $passes")
+  require(distLow <= distUp,
+    s"distLow must be <= distUp, got [$distLow, $distUp]")
+  require(biasLow <= biasUp,
+    s"biasLow must be <= biasUp, got [$biasLow, $biasUp]")
+}
 
 object Pipeline {
   private val keys = Seq("chr1", "mid1", "chr2", "mid2")
   private val IntraInRange = "intraInRange"
   private val InterAll = "interAll"
-
-  /** Run `body`; if it throws while the possible-pair query is still in
-    * flight, wait for it to settle (success or failure) before rethrowing
-    * — otherwise the detached job keeps running while the caller's
-    * Caches.drain() unpersists its inputs, and its own failure is
-    * silently dropped.
-    */
-  private def settleOnFailure[A](fut: Future[_])(body: => A): A =
-    try body
-    catch {
-      case t: Throwable =>
-        scala.util.Try(Await.ready(fut, Duration.Inf))
-        throw t
-    }
 
   /** Per-pass null-model diagnostics (A26's data content, sans plot):
     * one row per equal-occupancy bin with its average distance, raw
@@ -66,11 +58,11 @@ object Pipeline {
     * [[frontEnd]]: `pairs` is the mapped, classified contact set holding
     * only the classes a model will read, with each end's bias factor
     * (`bias1`, `bias2`; 1.0 for an end without one), cached — each model
-    * traverses it several times; `census` holds BH's M for both models
-    * from one query over the mapped loci.
+    * traverses it several times; `possible` holds BH's M for both models,
+    * counted by one query over the mapped loci.
     */
   final case class FrontEnd(cfg: FitHiCConfig, pairs: DataFrame,
-      census: Future[Fragments.LociCensus])
+      possible: Fragments.PossiblePairs)
 
   /** Build the shared front half for the models asked for (`intra`,
     * `inter`). It is the only place that looks anything up: the contacts
@@ -78,13 +70,10 @@ object Pipeline {
     * ([[Contacts.biasFactors]]) once, each through broadcast joins on one
     * packed locus key ([[graft.functions.LocusKey]]). The key's
     * chromosome dictionary comes from the possible-pair pass, which runs
-    * concurrently with the caller's binning when there is nothing to
-    * look up.
-    *
-    * `mkBiases` is a THUNK, called once the config checks pass: bias
-    * construction may run eager driver work (the KR solve's routing
-    * count). The keyed factor table is persisted, so a lazy upstream (a
-    * KR solve) runs once for both ends' joins.
+    * first. Every job runs on the caller's thread, so each carries the
+    * caller's local properties (job tags, SQL execution id). The keyed
+    * factor table is persisted, so a lazy `biases` upstream (a KR solve)
+    * runs once for both ends' joins.
     *
     * `endsMappable = true` asserts that every contact end appears in
     * `frags` with hitCount ≥ mappabilityThr — true by construction when
@@ -92,47 +81,36 @@ object Pipeline {
     * thr ≤ 1 (every locus's hitCount is a sum of ≥ 1 contactCounts).
     * Under the assertion the two mappability semi probes are row-level
     * no-ops, so they are skipped outright. A threshold above 1 makes the
-    * assertion unprovable and is rejected.
-    *
-    * Every check runs before the possible-pair query starts, and a
-    * failure while the rest is built settles it before it unwinds.
+    * assertion unprovable and is rejected before any job starts.
     */
   def frontEnd(frags: DataFrame, contacts: DataFrame,
-      mkBiases: Option[() => DataFrame], cfg: FitHiCConfig,
+      biases: Option[DataFrame], cfg: FitHiCConfig,
       endsMappable: Boolean = false, intra: Boolean = true,
       inter: Boolean = true): FrontEnd = {
     require(!endsMappable || cfg.mappabilityThr <= 1,
       "endsMappable asserts every end has hitCount >= mappabilityThr, " +
         "which marginals only guarantee for a threshold <= 1, got " +
         cfg.mappabilityThr)
-    require(!intra || cfg.passes >= 1,
-      s"passes must be >= 1, got ${cfg.passes}")
-    require(cfg.distLow <= cfg.distUp,
-      s"distLow must be <= distUp, got [${cfg.distLow}, ${cfg.distUp}]")
+    // analysed before any job, so a malformed bias table fails first
+    val factors = biases.map(Contacts.biasFactors(_, cfg.biasLow, cfg.biasUp))
     // the mapped loci feed the possible-pair query and, unless asserted
     // away, both semi joins: cached once, so the distinct runs once and
     // every reader shares the same scan
     val loci = Fragments.loci(Fragments.mappable(frags, cfg.mappabilityThr))
     val lociCache =
       if (endsMappable) loci else Caches.register(loci.persist())
-    // BH's M for both models, from an independent lineage
-    val census = Future(
-      Fragments.possiblePairsWithChroms(lociCache, cfg.distLow, cfg.distUp))
-    val pairs = settleOnFailure(census) {
-      val looked =
-        if (endsMappable && mkBiases.isEmpty) withUnitBiases(contacts)
-        else lookUp(contacts, if (endsMappable) None else Some(lociCache),
-          mkBiases.map(mk => Contacts.biasFactors(mk(), cfg.biasLow,
-            cfg.biasUp)),
-          Await.result(census, Duration.Inf).chroms)
-      val classes = (if (intra) Seq(IntraInRange) else Nil) ++
-        (if (inter) Seq(InterAll) else Nil)
-      Caches.register(
-        Contacts.classify(looked, cfg.distLow, cfg.distUp)
-          .filter(col("cls").isin(classes: _*))
-          .persist())
-    }
-    FrontEnd(cfg, pairs, census)
+    val census =
+      Fragments.possiblePairsWithChroms(lociCache, cfg.distLow, cfg.distUp)
+    val looked =
+      if (endsMappable && factors.isEmpty) withUnitBiases(contacts)
+      else lookUp(contacts, if (endsMappable) None else Some(lociCache),
+        factors, census.chroms)
+    val classes = (if (intra) Seq(IntraInRange) else Nil) ++
+      (if (inter) Seq(InterAll) else Nil)
+    FrontEnd(cfg, Caches.register(
+      Contacts.classify(looked, cfg.distLow, cfg.distUp)
+        .filter(col("cls").isin(classes: _*))
+        .persist()), census.possible)
   }
 
   /** `contacts` without the rows with an end outside `loci` (when given)
@@ -158,34 +136,19 @@ object Pipeline {
     * and pass: chr1, mid1, chr2, mid2, contactCount, p_value, q_value,
     * pass. `diagSink`, when given, receives each pass's ≤ nBins
     * diagnostic rows (driver-side — the bins are already collected for
-    * the spline fit, so this adds no Spark job).
+    * the spline fit, so this adds no Spark job). `endsMappable` as on
+    * [[frontEnd]].
     */
   def intraSignificances(frags: DataFrame, contacts: DataFrame,
       biases: Option[DataFrame], cfg: FitHiCConfig,
       diagSink: Option[Seq[PassDiagnostics] => Unit] = None,
       endsMappable: Boolean = false): DataFrame =
-    intraSignificancesWith(frags, contacts, biases.map(b => () => b), cfg,
-      diagSink, endsMappable)
-
-  /** As [[intraSignificances]], taking the bias table as a THUNK (see
-    * [[frontEnd]]); `endsMappable` as on [[frontEnd]].
-    */
-  def intraSignificancesWith(frags: DataFrame, contacts: DataFrame,
-      mkBiases: Option[() => DataFrame], cfg: FitHiCConfig,
-      diagSink: Option[Seq[PassDiagnostics] => Unit] = None,
-      endsMappable: Boolean = false): DataFrame =
-    intraSignificancesFrom(frontEnd(frags, contacts, mkBiases, cfg,
+    intraSignificancesFrom(frontEnd(frags, contacts, biases, cfg,
       endsMappable, inter = false), diagSink)
 
-  /** The intra model over a built [[FrontEnd]]. Any failure settles the
-    * front end's possible-pair query before it unwinds.
-    */
+  /** The intra model over a built [[FrontEnd]]. */
   def intraSignificancesFrom(fe: FrontEnd,
-      diagSink: Option[Seq[PassDiagnostics] => Unit] = None): DataFrame =
-    settleOnFailure(fe.census)(intraModel(fe, diagSink))
-
-  private def intraModel(fe: FrontEnd,
-      diagSink: Option[Seq[PassDiagnostics] => Unit]): DataFrame = {
+      diagSink: Option[Seq[PassDiagnostics] => Unit] = None): DataFrame = {
     val cfg = fe.cfg
     // the dist-ranged cache serves binning only: pass 1 bins this layout
     // and every refinement pass a FILTERED view of it.
@@ -203,7 +166,6 @@ object Pipeline {
     // N = observedIntraInRangeSum falls out of the pass-1 bin stats
     // (Σ sumCount over bins) — no separate full-table aggregate job
     var n = 0L
-    var m = -1L
     // pass-k null = pairs minus the previous pass's outliers, a narrow
     // filter over the ranged layout, so no pass needs an exchange
     var nullSource = rangedPairs
@@ -211,10 +173,7 @@ object Pipeline {
     for (pass <- 1 to cfg.passes) {
       val bins = Binning.collectBins(nullSource, cfg.nBins, keys,
         assumeRanged = true)
-      if (pass == 1) {
-        n = bins.map(_.getAs[Long]("sumCount")).sum
-        m = Await.result(fe.census, Duration.Inf).possible.intraInRange
-      }
+      if (pass == 1) n = bins.map(_.getAs[Long]("sumCount")).sum
       require(n > 0, "no intra-in-range contacts after filtering")
       val (xs, raw, fitted) = Spline.fitFromBins(bins, n)
       diagSink.foreach { sink =>
@@ -222,7 +181,8 @@ object Pipeline {
           bins(i).getAs[Int]("binIdx"), bins(i).getAs[Long]("pairCount"),
           bins(i).getAs[Long]("sumCount"), xs(i), raw(i), fitted(i))))
       }
-      val scored = score(fe, IntraInRange, xs, fitted, n, m)
+      val scored = score(fe, IntraInRange, xs, fitted, n,
+        fe.possible.intraInRange)
       val tagged = scored.withColumn("pass", lit(pass))
       result = if (result == null) tagged else result.unionByName(tagged)
       // the outliers are the rows with q < qThreshold, which are exactly
@@ -263,25 +223,21 @@ object Pipeline {
   def interSignificances(frags: DataFrame, contacts: DataFrame,
       biases: Option[DataFrame], cfg: FitHiCConfig,
       endsMappable: Boolean = false): DataFrame =
-    interSignificancesFrom(frontEnd(frags, contacts, biases.map(b => () => b),
-      cfg, endsMappable, intra = false))
+    interSignificancesFrom(frontEnd(frags, contacts, biases, cfg,
+      endsMappable, intra = false))
 
-  /** The inter model over a built [[FrontEnd]]. Any failure settles the
-    * front end's possible-pair query before it unwinds.
-    */
-  def interSignificancesFrom(fe: FrontEnd): DataFrame =
-    settleOnFailure(fe.census) {
-      // N and M are independent lineages — M's query is already running
-      val n = sumCounts(fe.pairs, InterAll)
-      val m = Await.result(fe.census, Duration.Inf).possible.interAll
-      if (n == 0) fe.pairs.filter(col("cls") === InterAll)
-        .select((keys.map(col) :+ col("contactCount") :+
-          lit(1.0).as("p_value") :+ lit(1.0).as("q_value")): _*)
-      // the uniform prior 1/M as a one-knot curve: the lookup returns the
-      // knot's value for every distance, so the inter model runs the
-      // intra model's scoring plan
-      else score(fe, InterAll, Array(0.0), Array(1.0 / m), n, m)
-    }
+  /** The inter model over a built [[FrontEnd]]. */
+  def interSignificancesFrom(fe: FrontEnd): DataFrame = {
+    val n = sumCounts(fe.pairs, InterAll)
+    val m = fe.possible.interAll
+    if (n == 0) fe.pairs.filter(col("cls") === InterAll)
+      .select((keys.map(col) :+ col("contactCount") :+
+        lit(1.0).as("p_value") :+ lit(1.0).as("q_value")): _*)
+    // the uniform prior 1/M as a one-knot curve: the lookup returns the
+    // knot's value for every distance, so the inter model runs the
+    // intra model's scoring plan
+    else score(fe, InterAll, Array(0.0), Array(1.0 / m), n, m)
+  }
 
   /** Σ contactCount over the rows of class `cls`: one narrow pass over the
     * cached front end's rows, with no aggregate plan to generate.

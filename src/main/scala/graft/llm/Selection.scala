@@ -1,5 +1,6 @@
 package graft.llm
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 import org.apache.spark.sql.functions._
@@ -19,16 +20,20 @@ object Selection {
 
   /** Spark ships `bloom_filter_agg` / `might_contain` as Catalyst
     * expressions (they power runtime join filters) but does not expose
-    * them in the public FunctionRegistry — register them for the session.
+    * them in the public FunctionRegistry — register them for the session,
+    * once: a name the session already has is left as is (the
+    * `BinomSf.register` guard).
     */
-  def registerBloom(spark: SparkSession): Unit = {
+  def registerBloom(spark: SparkSession): Unit = synchronized {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("bloom_filter_agg",
-      (c: Seq[Expression]) => new BloomFilterAggregate(c(0), c(1), c(2)),
-      "built-in")
-    reg.createOrReplaceTempFunction("might_contain",
-      (c: Seq[Expression]) => BloomFilterMightContain(c(0), c(1)),
-      "built-in")
+    if (!reg.functionExists(FunctionIdentifier("bloom_filter_agg")))
+      reg.createOrReplaceTempFunction("bloom_filter_agg",
+        (c: Seq[Expression]) => new BloomFilterAggregate(c(0), c(1), c(2)),
+        "built-in")
+    if (!reg.functionExists(FunctionIdentifier("might_contain")))
+      reg.createOrReplaceTempFunction("might_contain",
+        (c: Seq[Expression]) => BloomFilterMightContain(c(0), c(1)),
+        "built-in")
   }
 
   /** Distributed Bloom-filter build over `keyCol`: per-partition partial

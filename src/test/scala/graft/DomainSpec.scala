@@ -117,35 +117,99 @@ class PipelineSpec extends AnyFunSuite with Matchers with SparkTest {
         endsMappable = true)
   }
 
-  test("config checks run before the front end starts its futures") {
+  /** The starts of the Spark jobs that `body` runs, from a listener. */
+  private def jobsStartedBy(body: => Unit)
+      : Seq[org.apache.spark.scheduler.SparkListenerJobStart] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[
+      SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        started.add(j)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    try {
+      body
+      // the bus delivers in order: once a marker job's start arrives, so
+      // has the start of every job before it
+      val marker = spark.sparkContext.parallelize(Seq(1), 1).countAsync()
+      scala.concurrent.Await.ready(marker,
+        scala.concurrent.duration.Duration.Inf)
+      val markerId = marker.jobIds.head
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!started.asScala.exists(_.jobId == markerId) &&
+          System.nanoTime() < deadline)
+        Thread.sleep(10)
+      started.asScala.toSeq.filter(_.jobId < markerId)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a bad config cannot be built, and no job starts from one") {
     val (frags, contacts) = fixture
-    val started = new java.util.concurrent.atomic.AtomicBoolean(false)
-    an[IllegalArgumentException] should be thrownBy
-      Pipeline.intraSignificancesWith(frags, contacts,
-        Some(() => { started.set(true); frags }), FitHiCConfig(passes = 0))
-    Thread.sleep(200)
-    started.get shouldBe false
+    // gz-TSV inputs the CLI could read, written before jobs are counted
+    val dir = graft.io.Scratch.sub("fithic_bad_config")
+    graft.io.Tsv.write(frags, s"$dir/frags.gz",
+      graft.io.Tsv.fragmentSchema.fieldNames)
+    graft.io.Tsv.write(contacts, s"$dir/contacts.gz",
+      graft.io.Tsv.contactSchema.fieldNames)
+    def cli(flags: String*): Unit = graft.hic.FitHiCMain.run(spark,
+      Array("-i", s"$dir/contacts.gz", "-f", s"$dir/frags.gz",
+        "-o", s"$dir/out") ++ flags)
+    val jobs = jobsStartedBy {
+      for ((field, build) <- Seq[(String, () => Any)](
+          "passes" -> (() => FitHiCConfig(passes = 0)),
+          "distLow" -> (() => FitHiCConfig(distLow = 3000L, distUp = 2000L)),
+          "nBins" -> (() => FitHiCConfig(nBins = 0)),
+          "biasLow" -> (() => FitHiCConfig(biasLow = 3.0, biasUp = 2.0)),
+          "nBins" -> (() => cli("-b", "0")),
+          "biasLow" -> (() => cli("-bL", "3", "-bU", "2")),
+          "passes" -> (() => cli("-x", "interOnly", "-p", "0"))))
+        withClue(s"$field: ") {
+          val e = the[IllegalArgumentException] thrownBy build()
+          e.getMessage should include(field)
+        }
+    }
+    jobs shouldBe empty
   }
 
   test("distLow > distUp is rejected before any query starts") {
     val (frags, contacts) = fixture
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val bad = FitHiCConfig(distLow = 3000L, distUp = 2000L)
+    val jobs = jobsStartedBy {
       val e = the[IllegalArgumentException] thrownBy
-        Pipeline.intraSignificances(frags, contacts, None, bad)
+        Pipeline.intraSignificances(frags, contacts, None,
+          FitHiCConfig(distLow = 3000L, distUp = 2000L))
       e.getMessage should include("distLow")
       an[IllegalArgumentException] should be thrownBy
-        Pipeline.interSignificances(frags, contacts, None, bad)
-      Thread.sleep(500)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get shouldBe 0
+        Pipeline.interSignificances(frags, contacts, None,
+          FitHiCConfig(distLow = 3000L, distUp = 2000L))
+    }
+    jobs shouldBe empty
+  }
+
+  test("every job of the front end carries the caller's job tags") {
+    import spark.implicits._
+    val (frags, contacts) = fixture
+    val biases = Seq(("chr1", 2500L, 1.2)).toDF("chr", "mid", "bias")
+    def run(): Unit = Pipeline.intraSignificances(frags, contacts,
+      Some(biases), FitHiCConfig(nBins = 3, passes = 2, distLow = 0,
+        distUp = 1000000L)).collect()
+    // an untagged call first, so any worker thread the library uses
+    // already exists before the tag is set
+    run()
+    val tag = "pipeline-caller-tag"
+    val jobs = jobsStartedBy {
+      spark.sparkContext.addJobTag(tag)
+      try run() finally spark.sparkContext.removeJobTag(tag)
+    }
+    jobs should not be empty
+    jobs.foreach { j =>
+      withClue(s"job ${j.jobId}: ") {
+        Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.tags")))
+          .toSeq.flatMap(_.split(",")) should contain(tag)
+      }
+    }
   }
 
   /** One chromosome, 40 loci on a 5 kb grid, every pair up to 8 loci

@@ -47,13 +47,22 @@ class ExpressionSpec extends AnyFunSuite with Matchers with SparkTest {
   }
 
   test("BinomSf.register is idempotent: a second call replaces nothing") {
-    BinomSf.register(spark)
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("binom_sf")
+    // every session function the library registers on demand, with the
+    // call that registers it
+    val registers = Seq[(String, org.apache.spark.sql.SparkSession => Unit)](
+      "binom_sf" -> BinomSf.register,
+      "bloom_filter_agg" -> graft.llm.Selection.registerBloom,
+      "might_contain" -> graft.llm.Selection.registerBloom,
+      "ema_cents" -> graft.functions.EmaWindow.register)
     val registry = spark.sessionState.functionRegistry
-    val before = registry.lookupFunction(id)
-    BinomSf.register(spark)
-    before shouldBe defined
-    registry.lookupFunction(id).get should be theSameInstanceAs before.get
+    for ((name, register) <- registers) withClue(s"$name: ") {
+      register(spark)
+      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
+      val before = registry.lookupFunction(id)
+      register(spark)
+      before shouldBe defined
+      registry.lookupFunction(id).get should be theSameInstanceAs before.get
+    }
   }
 
   test("a Param N keeps binom_sf's generated code independent of N") {
