@@ -10,14 +10,13 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * knots, constant extrapolation beyond the ends — the same kernel as
   * `hic.Spline.eval`, on the same knot arrays.
   *
-  * Unlike the Scala UDF (`Spline.interpUdf`) this participates in
+  * Unlike a Scala UDF over `Spline.eval` this participates in
   * whole-stage codegen: the generated Java binary-searches the
   * reference-object knot arrays directly, so the per-pair prior lookup
   * in the scoring pass — together with the `binom_sf` call it feeds
   * ([[BinomSf]]) — stays inside ONE codegen span with no UDF closure
   * dispatch or Double boxing. The knot arrays are O(nBins) doubles
-  * riding the plan as reference objects (the same payload the UDF
-  * closure captured).
+  * riding the plan as reference objects.
   */
 case class SplineInterp(child: Expression, xs: Array[Double],
     ys: Array[Double]) extends UnaryExpression {
@@ -60,8 +59,8 @@ case class SplineInterp(child: Expression, xs: Array[Double],
 }
 
 object SplineInterp {
-  /** Column-DSL entry: `SplineInterp.curve(xs, ys)(col)` — the drop-in
-    * replacement for `Spline.interpUdf(xs, ys)`.
+  /** Column-DSL entry: `SplineInterp.curve(xs, ys)(col)`, the curve
+    * through the knots as a column of `col`.
     */
   def curve(xs: Array[Double], ys: Array[Double])(x: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(

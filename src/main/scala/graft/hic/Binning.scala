@@ -50,14 +50,14 @@ object Binning {
   def collectBins(contacts: DataFrame, nBins: Int, tieCols: Seq[String],
       assumeRanged: Boolean = false): Array[Row] = {
     val r = GlobalOrder.ranged(contacts, col("dist") +: tieCols.map(col),
-      Some(col("contactCount")), assumeRanged)
+      Some("contactCount"), assumeRanged)
     try {
       require(r.stats.rows > 0,
         "equalOccupancy: empty contact set (no rows to bin)")
       val total = r.stats.total
       val offs = r.stats.offsets
       val distIdx = r.layout.schema.fieldIndex("dist")
-      val cumIdx = r.layout.schema.fields.length - 1
+      val countIdx = r.layout.schema.fieldIndex("contactCount")
       val partials = GraftColumnBridge.collectRows(r.layout)(
         _.mapPartitionsWithIndex { (pid, it) =>
           // binIdx is non-decreasing within a partition (the layout is
@@ -71,9 +71,9 @@ object Binning {
           def flush(): Unit = if (bin >= 0)
             out += ((bin, cnt, sumC, sumD, minD, maxD))
           it.foreach { row =>
-            require(!row.isNullAt(distIdx) && !row.isNullAt(cumIdx),
+            require(!row.isNullAt(distIdx) && !row.isNullAt(countIdx),
               "equalOccupancy: null dist or contactCount")
-            val c = row.getLong(cumIdx)
+            val c = row.getLong(countIdx)
             val d = row.getLong(distIdx)
             cum += c
             // the SQL form's ((cum - 1) * nBins) div total, overflow-checked

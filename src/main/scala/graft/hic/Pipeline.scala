@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{BinomSf, Param, SplineInterp}
-import graft.ops.Caches
+import graft.ops.{Caches, GlobalOrder}
 
 /** The full Fit-Hi-C significance pipeline (SURVEY.md §3.1 Entry 1,
   * A13–A21), recomposed from the operator library as pure
@@ -155,14 +155,9 @@ object Pipeline {
     // Scoring reads the front end's cache like the inter model does (bhQ
     // re-partitions on p_value regardless), so both models run one
     // scoring plan
-    val src = fe.pairs.filter(col("cls") === IntraInRange)
-    val distOrder = col("dist") +: keys.map(col)
-    val rangedPairs = Caches.register(src
-      .repartitionByRange(
-        src.sparkSession.sessionState.conf.numShufflePartitions,
-        distOrder: _*)
-      .sortWithinPartitions(distOrder: _*)
-      .persist())
+    val rangedPairs = GlobalOrder.sortedLayout(
+      fe.pairs.filter(col("cls") === IntraInRange),
+      col("dist") +: keys.map(col))
     // N = observedIntraInRangeSum falls out of the pass-1 bin stats
     // (Σ sumCount over bins) — no separate full-table aggregate job
     var n = 0L
@@ -271,12 +266,14 @@ object Pipeline {
   /** Score every front-end pair of class `cls` ([[pValue]]) with BH q
     * under M = `m`: keys, contactCount, p_value, q_value. One plan for
     * every pass and both models; BH ranges, sorts and caches only the
-    * columns it returns.
+    * columns it returns. Its input only filters and projects the front
+    * end's cache, so the range exchange's sampling pass re-reads that
+    * cache rather than persisting a copy.
     */
   private def score(fe: FrontEnd, cls: String, xs: Array[Double],
       ys: Array[Double], n: Long, m: Long): DataFrame =
     Stats.bhQ(fe.pairs.filter(col("cls") === cls)
         .select((keys.map(col) :+ col("contactCount") :+
           pValue(xs, ys, n).as("p_value")): _*),
-      "p_value", keys, "q_value", Some(m), persistInput = false)
+      "p_value", keys, "q_value", Some(m))
 }

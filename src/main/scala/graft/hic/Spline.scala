@@ -1,8 +1,5 @@
 package graft.hic
 
-import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.udf
-
 /** Monotone null-curve fitting (SURVEY.md A15–A17).
   *
   * The reference smooths (avgDistance, avgContactProb) with a univariate
@@ -64,12 +61,9 @@ object Spline {
   }
 
   /** Piecewise-linear interpolation through (xs, ys) knots (xs ascending,
-    * distinct); constant extrapolation beyond the ends. Returned as a UDF
-    * over a broadcast-captured knot array — pure, deterministic.
+    * distinct); constant extrapolation beyond the ends — pure,
+    * deterministic. [[graft.functions.SplineInterp]] is its Catalyst form.
     */
-  def interpUdf(xs: Array[Double], ys: Array[Double]): UserDefinedFunction =
-    udf((x: Double) => eval(xs, ys, x))
-
   def eval(xs: Array[Double], ys: Array[Double], x: Double): Double = {
     val n = xs.length
     require(n > 0, "empty knots")

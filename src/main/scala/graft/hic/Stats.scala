@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{JoinedRow, SpecificInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.ops.Caches
+import graft.ops.GlobalOrder
 
 /** Statistical kernels of the significance pipeline (SURVEY.md A18–A19). */
 object Stats {
@@ -18,76 +18,43 @@ object Stats {
     * the offset job already yields — no separate count() runs either way).
     *
     * Shape (SURVEY §7.3 #3): ONE range exchange on (p, tieCols) into a
-    * sorted cache, then three narrow passes over it — per-partition row
-    * counts (job), per-partition min of p·M/rank (job), and the final
-    * backward suffix-min walk that runs inside the consumer's own job.
-    * No single-partition window, and no `Window.partitionBy(pid)` either:
+    * sorted cache ([[GlobalOrder.ranged]], whose first job counts each
+    * partition's rows), then two more narrow passes over it — the
+    * per-partition min of p·M/rank (job), and the final backward
+    * suffix-min walk that runs inside the consumer's own job. No
+    * single-partition window, and no `Window.partitionBy(pid)` either:
     * that would hash-exchange the full table a second time. Per-task
     * memory for the backward walk is one CHUNK (256Ki rows), not one
     * partition — a mis-sized shuffle partitioning costs extra chunks,
     * never an executor OOM.
-    */
-  /** `assumeRanged = true` promises `df` is ALREADY range-partitioned and
+    *
+    * `assumeRanged = true` promises `df` is ALREADY range-partitioned and
     * sorted ascending on (pCol, tieCols) AND cheap to re-traverse (e.g. a
     * narrow filter over a previously ranged persisted cache — the
-    * GlobalOrder.assumeRanged contract): the exchange, its sampling pass,
-    * and the internal persist are all skipped, and the three passes run
+    * GlobalOrder.ranged contract): the exchange, its sampling pass, and
+    * the internal persist are all skipped, and the three passes run
     * directly over the caller's layout. A frame whose layout does not
     * match the promise silently misranks every row — callers must
     * guarantee it structurally.
-    *
-    * `persistInput = false` skips the input persist that otherwise guards
-    * the range exchange's sampling pass, so the input is computed twice.
-    * Only for a caller whose input is a narrow plan over its own caches
-    * and whose A/B covers the choice: Pipeline's scoring plan, where a
-    * per-call persist also adds a cache build's generated classes to
-    * every FitHiC op.
     */
   def bhQ(df: DataFrame, pCol: String, tieCols: Seq[String], qCol: String,
       mOpt: Option[Long] = None,
       chunkRows: Int = 1 << 18,
-      assumeRanged: Boolean = false,
-      persistInput: Boolean = true): DataFrame = {
+      assumeRanged: Boolean = false): DataFrame = {
     require(chunkRows > 0, s"chunkRows must be positive, got $chunkRows")
     val spark = df.sparkSession
-    val n = spark.sessionState.conf.numShufflePartitions
-    val orderCols = col(pCol) +: tieCols.map(col)
-    // the range exchange samples its child first — persist so the
-    // upstream plan runs once; released once the ranged cache exists
-    // (inputs the caller already cached are left untouched)
-    val preCached = assumeRanged || !persistInput ||
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val src = if (preCached) df else df.persist()
-    val ranged =
-      if (assumeRanged) df // backed by the caller's layout/cache
-      else Caches.register(
-        src.repartitionByRange(n, orderCols: _*)
-          .sortWithinPartitions(orderCols: _*)
-          .persist())
+    val r = GlobalOrder.ranged(df, col(pCol) +: tieCols.map(col), None,
+      assumeRanged)
+    // the passes key their offsets by the layout's partition index
+    // (mapPartitionsWithIndex, see GlobalOrder.ranged) and read Catalyst
+    // rows straight off the cache — no external-Row conversion, no
+    // per-schema encoder class
+    val ranged = r.layout
     val pIdx = ranged.schema.fieldIndex(pCol)
-    // The per-partition passes key their offset maps by the RANGED
-    // CACHE's partition index. That index must come from the RDD
-    // partition object (mapPartitionsWithIndex), NEVER from
-    // TaskContext.getPartitionId(): the final narrow pass executes fused
-    // inside the CONSUMER's stage, and a consumer that renumbers
-    // partitions — a union (child offsets), a coalesce — hands every task
-    // a SHIFTED id, silently misranking everything. (Found live: pass-2
-    // of the refinement union had its ranks restarted per partition.)
-    // The passes read Catalyst rows straight off the cache — no
-    // external-Row conversion, no per-schema encoder class.
-    // job 1 (materializes the cache): per-partition row counts
-    val counts = GraftColumnBridge.collectRows(ranged)(
-      _.mapPartitionsWithIndex { (pid, it) =>
-        var c = 0L
-        it.foreach(_ => c += 1)
-        Iterator.single((pid, c))
-      }).sortBy(_._1)
-    if (!preCached) src.unpersist()
-    val m = mOpt.getOrElse(counts.map(_._2).sum)
-    var acc = 0L
-    val roffs: Map[Int, Long] = counts.map { case (pid, c) =>
-      val row = pid -> acc; acc += c; row
-    }.toMap
+    val m = mOpt.getOrElse(r.stats.rows)
+    val roffs: Map[Int, Long] = r.stats.offsets.map { case (pid, (n, _)) =>
+      pid -> n
+    }
     // Chunk size for the final backward walk: per-task memory is one
     // chunk of Rows (~tens of MB), NOT one partition — so a stale
     // numShufflePartitions (partitions ≫ chunk) degrades to more chunks,

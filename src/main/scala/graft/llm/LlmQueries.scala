@@ -638,20 +638,17 @@ object LlmQueries {
         // sampling in a training-mixture pipeline.
         val docs = Tables(spark, dir, "documents")
           .select(col("doc_id"), col("n_chars").cast("long").as("w"))
-        val (ranked, stats, cleanup) =
+        val (ranked, stats) =
           graft.ops.GlobalOrder.rankAndCumsumWithStats(docs,
-            Seq(col("doc_id")), "__rank", cum = Some((col("w"), "__cum")))
+            Seq(col("doc_id")), "__rank", cum = Some(("w", "__cum")))
         val k = 100L
         val step = (stats.total + k - 1) / k
-        val out = ranked
+        // the filter+order consumer re-reads the ranged cache after this
+        // query's action; Caches.drain releases it
+        ranked
           .filter(expr(s"(__cum div ${step}L) > ((__cum - w) div ${step}L)"))
           .select(col("doc_id"), col("w"), col("__cum").as("cum"))
           .orderBy("doc_id")
-        // the filter+order consumer re-reads the ranged cache after this
-        // query's action; Caches.drain releases it (cleanup kept for the
-        // operator-library callers that drain eagerly)
-        val _ = cleanup
-        out
       },
       Some("WITH w AS (SELECT doc_id, CAST(n_chars AS BIGINT) AS w " +
         "FROM documents), " +
@@ -696,7 +693,7 @@ object LlmQueries {
             size(split(col("text"), " ")).cast("long").as("n_tokens"))
         graft.ops.GlobalOrder.rankAndCumsum(d,
             Seq(col("n_tokens"), col("doc_id")), "__rank",
-            cum = Some((col("n_tokens"), "__cum")))
+            cum = Some(("n_tokens", "__cum")))
           .withColumn("pack_id", expr("(__cum - n_tokens) div 512"))
           .groupBy("pack_id")
           .agg(count(lit(1)).as("n_docs"),

@@ -35,14 +35,6 @@ object Warehouse {
   private def asMoney(c: org.apache.spark.sql.Column) =
     Cols.fround(c.cast("double") / lit(10000.0), 4)
 
-  /** Picks the join strategy for a changeset-derived side: broadcast
-    * for the nominal daily delta, a forced shuffle join once the
-    * collapsed changeset exceeds `cap` keys — the backfill/initial-load
-    * case where the changeset is comparable to the base and a
-    * broadcast build would not fit. Shared by [[applyCdc]] and
-    * [[applyCdcFull]]; CdcLawSpec parity-pins the branches (cap forced
-    * to 0) and gates the fallback broadcast-free.
-    */
   /** The ONE broadcast-capacity probe (shared by [[cdcSide]],
     * [[deltaSide]], the MoR IVM step, and `Selection.probeDedupState`):
     * true iff `probeRows` has at most `cap` rows, decided by a
@@ -93,6 +85,14 @@ object Warehouse {
       x.get << 20
     }.getOrElse(64L << 20)
 
+  /** Picks the join strategy for a changeset-derived side: broadcast
+    * for the nominal daily delta, a forced shuffle join once the
+    * collapsed changeset exceeds `cap` keys — the backfill/initial-load
+    * case where the changeset is comparable to the base and a
+    * broadcast build would not fit. Shared by [[applyCdc]] and
+    * [[applyCdcFull]]; CdcLawSpec parity-pins the branches (cap forced
+    * to 0) and gates the fallback broadcast-free.
+    */
   private def cdcSide(changes: org.apache.spark.sql.DataFrame, cap: Long)
       : org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
     // sized from the RAW changeset's distinct keys (== collapsed rows)

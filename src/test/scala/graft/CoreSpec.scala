@@ -78,7 +78,7 @@ class GlobalOrderSpec extends AnyFunSuite with Matchers with SparkTest {
     val df = (1 to 500).map(i => (i.toLong, rnd.nextInt(50).toLong,
       rnd.nextInt(10).toLong)).toDF("id", "v", "w")
     val got = GlobalOrder.rankAndCumsum(df, Seq(col("v"), col("id")), "rk",
-        cum = Some((col("w"), "cum")))
+        cum = Some(("w", "cum")))
       .select("id", "rk", "cum")
     val wRef = Window.orderBy("v", "id")
     val ref = df.select(col("id"),
@@ -87,6 +87,42 @@ class GlobalOrderSpec extends AnyFunSuite with Matchers with SparkTest {
         Window.currentRow)).as("cum"))
     got.except(ref).count() shouldBe 0
     ref.except(got).count() shouldBe 0
+  }
+  test("the input is re-read, not persisted, only when it filters and " +
+      "projects cached data") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("go_rule").toString
+    Seq((1L, 2L), (3L, 4L)).toDF("id", "g").write.mode("overwrite")
+      .parquet(dir)
+    val parquet = spark.read.parquet(dir)
+    val local = Seq((5L, 6L)).toDF("id", "g")
+    val cached = parquet.select(col("id"), col("g") + 1 as "g").persist()
+    try {
+      GlobalOrder.readsCachesOnly(cached) shouldBe true
+      GlobalOrder.readsCachesOnly(cached.filter(col("g") > 2)
+        .select(col("id"), col("g") * 2 as "g2").as("t")) shouldBe true
+      GlobalOrder.readsCachesOnly(parquet) shouldBe false
+      GlobalOrder.readsCachesOnly(parquet.filter(col("g") > 2)) shouldBe false
+      GlobalOrder.readsCachesOnly(local) shouldBe false
+      GlobalOrder.readsCachesOnly(cached.groupBy("g").count()) shouldBe false
+      GlobalOrder.readsCachesOnly(
+        cached.join(cached.select(col("id"), col("g") as "h"), "id")) shouldBe
+        false
+    } finally {
+      cached.unpersist()
+      new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+    }
+  }
+  test("a cum column that is not bigint is rejected, naming the column") {
+    import spark.implicits._
+    val df = (1 to 10).map(i => (i.toLong, i, i.toLong))
+      .toDF("id", "w", "dist")
+    val e = intercept[IllegalArgumentException](GlobalOrder.rankAndCumsum(
+      df, Seq(col("id")), "rk", cum = Some(("w", "cum"))))
+    e.getMessage should include("cum column w must be bigint, got int")
+    val bins = intercept[IllegalArgumentException](Binning.collectBins(
+      df.withColumnRenamed("w", "contactCount"), 2, Seq("id")))
+    bins.getMessage should include("cum column contactCount must be bigint")
   }
 }
 
