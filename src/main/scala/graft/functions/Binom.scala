@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.commons.math3.special.Beta
-import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.udf
 
 /** Binomial survival function (SURVEY.md A18): P[X ≥ k], X ~ Binom(n, p).
   *
@@ -18,8 +16,4 @@ object Binom {
     else if (p <= 0.0) 0.0
     else if (p >= 1.0) 1.0
     else Beta.regularizedBeta(p, k.toDouble, (n - k + 1).toDouble)
-
-  /** Spark UDF: binom_sf(k, n, p) = P[X ≥ k]. Deterministic pure function. */
-  val sfUdf: UserDefinedFunction =
-    udf((k: Long, n: Long, p: Double) => sf(k, n, p))
 }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 /** Native Catalyst expression for the binomial survival function
   * (SURVEY.md §4.2): `binom_sf(k, n, p) = P[X ≥ k], X ~ Binom(n, p)`.
   *
-  * Unlike the Scala UDF ([[Binom.sfUdf]]) this participates in
-  * whole-stage codegen — the generated Java calls the static kernel
+  * The one p-value of the library: it participates in whole-stage
+  * codegen — the generated Java calls the static kernel ([[Binom.sf]])
   * directly, with no encoder boxing or UDF closure dispatch in the
   * per-row hot path of the significance pipeline (A18).
   */

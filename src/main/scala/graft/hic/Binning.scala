@@ -34,8 +34,10 @@ object Binning {
       binSchema)
 
   /** Materialize the bins (binIdx-ordered) and release the internal cache
-    * — the form every statistical consumer (Pipeline, spline queries)
-    * wants.
+    * — the form every statistical consumer (Pipeline, spline queries,
+    * the stream refit) wants. An input with no rows, or whose counts sum
+    * to ≤ 0, has no bins; otherwise Σ sumCount over the bins is the
+    * input's total count N, so no consumer runs its own aggregate.
     *
     * No groupBy exchange: the pass runs partition-local over the ranged
     * layout, so each task folds its rows into ≤ nBins partial summaries
@@ -52,9 +54,9 @@ object Binning {
     val r = GlobalOrder.ranged(contacts, col("dist") +: tieCols.map(col),
       Some("contactCount"), assumeRanged)
     try {
-      require(r.stats.rows > 0,
-        "equalOccupancy: empty contact set (no rows to bin)")
       val total = r.stats.total
+      // no mass, no bins: the bin index divides by the total
+      if (r.stats.rows == 0 || total <= 0) return Array.empty
       val offs = r.stats.offsets
       val distIdx = r.layout.schema.fieldIndex("dist")
       val countIdx = r.layout.schema.fieldIndex("contactCount")

@@ -261,13 +261,9 @@ object Compartments {
       if (prevCkpt != null) graft.ops.Caches.releaseLocalCheckpoint(prevCkpt)
       prevCkpt = v
     }
-    if (phase1Final != null) {
-      // phase 2 ran → its eager steps consumed shifts; otherwise keep the
-      // blocks until drain()
-      if (prevCkpt != null)
-        graft.ops.Caches.releaseLocalCheckpoint(phase1Final)
-      else graft.ops.Caches.registerCheckpoint(phase1Final)
-    }
+    // phase 2 always runs (scores requires iterations > EstIters), and its
+    // eager steps have consumed shifts
+    graft.ops.Caches.releaseLocalCheckpoint(phase1Final)
     // drain-immune handoff of the final iterate to the returned plan
     // (a registered checkpoint dies under a concurrent caller's drain)
     val vOut = graft.ops.Caches.parquetHandoff(v, "compartments_v")

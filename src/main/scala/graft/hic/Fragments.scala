@@ -9,40 +9,6 @@ object Fragments {
   def mappable(frags: DataFrame, thr: Long): DataFrame =
     frags.filter(col("hitCount") >= thr)
 
-  /** A12: number of *possible* intra-chromosomal pairs with distance in
-    * [low, up] — the BH denominator (possible, not observed).
-    *
-    * Distributed closed form: per chromosome, for each locus count the
-    * loci at (mid + low .. mid + up] going forward via a range-frame
-    * window — O(n log n), no pair materialization (SURVEY §7.3 #6). Each
-    * unordered pair is counted exactly once (at its left end). An empty
-    * range (`low > up`) holds no pair.
-    */
-  def possibleIntraInRange(frags: DataFrame, low: Long, up: Long): Long = {
-    import org.apache.spark.sql.expressions.Window
-    if (low > up) return 0L
-    val lo = math.max(low, 1L) // a pair needs two distinct loci
-    val w = Window.partitionBy("chr").orderBy("mid")
-      .rangeBetween(lo, math.min(up, Long.MaxValue / 2))
-    frags.select(col("chr"), col("mid"))
-      .distinct()
-      .withColumn("fwd", count(lit(1)).over(w))
-      .agg(sum(col("fwd"))).first() match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0)
-      }
-  }
-
-  /** A12 inter: Σ_{c1<c2} n_c1·n_c2 = (T² − Σ n_c²) / 2 from per-chr locus
-    * counts — O(#chromosomes) on the driver.
-    */
-  def possibleInterAll(frags: DataFrame): Long = {
-    val counts = frags.select("chr", "mid").distinct()
-      .groupBy("chr").count().collect().map(_.getLong(1))
-    val t = counts.sum
-    (t * t - counts.map(c => c * c).sum) / 2
-  }
-
   /** BH's M for both models (A12): possible pairs, NOT observed rows. */
   final case class PossiblePairs(intraInRange: Long, interAll: Long)
 
@@ -55,23 +21,20 @@ object Fragments {
   def loci(frags: DataFrame): DataFrame =
     frags.select(col("chr"), col("mid")).distinct()
 
-  /** [[possibleIntraInRange]] and [[possibleInterAll]] together, from ONE
-    * pass over loci that are already distinct ([[loci]]) — the form the
-    * FitHiC front end uses, where both models need M and the window and
-    * aggregate plans would add their generated classes to every op. The
-    * loci are grouped by chromosome on the RDD side; per chromosome, n_c
-    * and, for each locus, the loci at [mid + max(low, 1), mid + up]
+  /** A12: BH's M for both models — the number of *possible* pairs, not
+    * the observed rows — counted in ONE pass over loci that are already
+    * distinct ([[loci]]); the only census of the library, shared by the
+    * FitHiC front end and the q_hic_* queries. Intra: unordered pairs on
+    * one chromosome with distance in [low, up]; an empty range
+    * (`low > up`) holds none. Inter: Σ_{c1<c2} n_c1·n_c2.
+    *
+    * The loci are grouped by chromosome on the RDD side; per chromosome,
+    * n_c and, for each locus, the loci at [mid + max(low, 1), mid + up]
     * counted by binary search over the sorted mids — O(n log n), each
     * unordered intra pair in range counted once, at its left end, and no
     * pair materialized. The inter count is (T² − Σ n_c²) / 2 over the
-    * ≤ #chromosomes rows the driver collects.
-    */
-  def possiblePairsOfLoci(loci: DataFrame, low: Long,
-      up: Long): PossiblePairs =
-    possiblePairsWithChroms(loci, low, up).possible
-
-  /** [[possiblePairsOfLoci]] plus the chromosome names its per-chromosome
-    * rows carry to the driver anyway.
+    * ≤ #chromosomes rows the driver collects, which also carry the
+    * chromosome names.
     */
   def possiblePairsWithChroms(loci: DataFrame, low: Long,
       up: Long): LociCensus = {

@@ -1,9 +1,11 @@
 package graft.hic
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.ops.Cols
+import graft.stream.HicStream
 
 /** Declared Hi-C-shaped queries over the contacts view (SURVEY.md §2.B
   * q_hic_*). These exercise the statistical plumbing of the significance
@@ -60,9 +62,9 @@ object HicQueries {
     spark.read.parquet(standingViewPath(spark, dir))
 
   /** The fragment-marginals table (chr, mid, hitCount — the reference's
-    * FRAGMENTS input file, A2) as a standing parquet; shared by the
-    * full-pipeline queries, which previously each re-derived it with a
-    * union + groupBy over the contacts view.
+    * FRAGMENTS input file, A2) as a standing parquet of the contacts
+    * view's [[HicStream.marginals]]; shared by the full-pipeline queries
+    * and q_csv_roundtrip.
     */
   private def standingFrags(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
@@ -72,16 +74,19 @@ object HicQueries {
     // the keys share a bin)
     val viewPath = standingViewPath(spark, dir)
     val p = standing("hic_frags", dir) { p =>
-      val c = spark.read.parquet(viewPath)
-      c.select(col("chr"), col("mid1").as("mid"), col("contactCount"))
-        .unionByName(c.select(col("chr"), col("mid2").as("mid"),
-          col("contactCount")))
-        .groupBy("chr", "mid")
-        .agg(sum(col("contactCount")).as("hitCount"))
+      HicStream.marginals(contactPairs(spark.read.parquet(viewPath)))
+        .select("chr", "mid", "hitCount")
         .write.mode("overwrite").parquet(p)
     }
     spark.read.parquet(p)
   }
+
+  /** The intra contacts view as a contact table (chr1, mid1, chr2, mid2,
+    * contactCount).
+    */
+  private[graft] def contactPairs(c: DataFrame): DataFrame =
+    c.select(col("chr").as("chr1"), col("mid1"), col("chr").as("chr2"),
+      col("mid2"), col("contactCount"))
 
   /** [[InterView]] persisted — the q_hic_inter* queries traverse it along
     * several lineages (contacts + marginal loci + N/M aggregates).
@@ -101,10 +106,8 @@ object HicQueries {
     "q_hic_merge_filter" -> Q(
       (spark, dir) => {
         // A25: merge runs of adjacent (5 kb apart) significant bin pairs
-        val sig = standingView(spark, dir)
-          .filter(col("pseudo_p") < 0.15 && col("dist").between(L, U))
-          .select(col("chr").as("chr1"), col("mid1"),
-            col("chr").as("chr2"), col("mid2"), col("contactCount"))
+        val sig = contactPairs(standingView(spark, dir)
+          .filter(col("pseudo_p") < 0.15 && col("dist").between(L, U)))
         MergeFilter.mergeAdjacent(sig, 5000L)
           .select(col("chr1").as("chr"), col("mid1"), col("mid2_start"),
             col("mid2_end"), col("n_bins"), col("sumCount"))
@@ -131,9 +134,7 @@ object HicQueries {
         // standingView, not cachedView: the pipeline traverses the
         // contacts lineage ONCE (into its own internal persist), so a
         // second in-memory copy was pure materialization cost
-        val c = standingView(spark, dir)
-        val contacts = c.select(col("chr").as("chr1"), col("mid1"),
-          col("chr").as("chr2"), col("mid2"), col("contactCount"))
+        val contacts = contactPairs(standingView(spark, dir))
         // frags = the reference's fragments INPUT file (A2) — standing
         // parquet, not per-query re-derivation
         val frags = standingFrags(spark, dir)
@@ -164,9 +165,7 @@ object HicQueries {
         val out = graft.io.Scratch.sub("hic_tsv_src")
         // standingView: the view feeds the connector write once; the
         // read-back comes from the connector's own files
-        val c = standingView(spark, dir)
-        c.select(col("chr").as("chr1"), col("mid1"),
-            col("chr").as("chr2"), col("mid2"), col("contactCount"))
+        contactPairs(standingView(spark, dir))
           .write.format("hic-tsv").option("kind", "contacts")
           .mode("overwrite").save(out)
         spark.read.format("hic-tsv").option("kind", "contacts").load(out)
@@ -223,9 +222,8 @@ object HicQueries {
         // A22: matrix-balancing bias vector over the contacts view
         // (iterative float fixed point → not SQL-expressible; rows-only.
         // Convergence + trim semantics pinned by KrSpec.)
-        val c = cachedView(spark, dir).filter(col("dist").between(L, U))
-        val contacts = c.select(col("chr").as("chr1"), col("mid1"),
-          col("chr").as("chr2"), col("mid2"), col("contactCount"))
+        val contacts = contactPairs(
+          cachedView(spark, dir).filter(col("dist").between(L, U)))
         Kr.biases(contacts, trimPercentile = 0.05, iterations = 10)
           .select(col("chr"), col("mid"), Cols.fround(col("bias"), 6)
             .as("bias"))
@@ -242,9 +240,8 @@ object HicQueries {
         // integer-valued (exact under any order); iteration 2's float
         // sums drift by ULPs across engines, absorbed by fround(…, 6).
         // Only the iteration count differs from the production entry.
-        val c = cachedView(spark, dir).filter(col("dist").between(L, U))
-        val contacts = c.select(col("chr").as("chr1"), col("mid1"),
-          col("chr").as("chr2"), col("mid2"), col("contactCount"))
+        val contacts = contactPairs(
+          cachedView(spark, dir).filter(col("dist").between(L, U)))
         Kr.biases(contacts, trimPercentile = 0.05, iterations = 2)
           .select(col("chr"), col("mid"), Cols.fround(col("bias"), 6)
             .as("bias"))
@@ -374,14 +371,8 @@ object HicQueries {
 
     "q_hic_marginals" -> Q(
       (spark, dir) => {
-        // A1/A24: per-locus marginal counts — union both contact ends
-        val c = cachedView(spark, dir)
-        c.select(col("chr"), col("mid1").as("mid"), col("contactCount"))
-          .unionByName(c.select(col("chr"), col("mid2").as("mid"),
-            col("contactCount")))
-          .groupBy("chr", "mid")
-          .agg(sum(col("contactCount")).as("hitCount"),
-            count(lit(1)).as("n_pairs"))
+        // A1/A24: per-locus marginal counts over both contact ends
+        HicStream.marginals(contactPairs(cachedView(spark, dir)))
           .orderBy("chr", "mid")
       },
       Some(ContactsView.cte + " SELECT chr, mid, " +
@@ -483,15 +474,12 @@ object HicQueries {
         // A15/A16: equal-occupancy bins → per-pair contact probability →
         // PAVA monotone non-increasing fit; ≤ nBins rows collected to the
         // driver (the single deliberate driver round-trip, SURVEY §3.2).
-        // registered (not manual-unpersist): a throw inside collectBins
-        // would otherwise pin the corpus-scale cache for the JVM life —
-        // drain() reclaims registered entries on every path
-        val f = graft.ops.Caches.register(
-          standingView(spark, dir).filter(col("dist").between(L, U))
-            .persist())
-        val bins = Binning.collectBins(f, 100, keys)
+        // collectBins persists its input for the range sampling pass
+        val bins = Binning.collectBins(
+          standingView(spark, dir).filter(col("dist").between(L, U)), 100,
+          keys)
         // N = Σ sumCount over the equal-occupancy bins (they partition
-        // every row of f) — no separate full-table aggregate job, the
+        // every in-range row) — no separate full-table aggregate job, the
         // Pipeline discipline
         val total = bins.map(_.getAs[Long]("sumCount")).sum
         val (xs, raw, fit) = Spline.fitFromBins(bins, total)
@@ -510,8 +498,8 @@ object HicQueries {
     "q_hic_binom_pvalues" -> Q(
       (spark, dir) => {
         // A17+A18: spline-derived prior per pair → binomial survival
-        // p-value (commons-math3 regularized incomplete beta UDF). Not
-        // SQL-expressible in DuckDB → no oracle; pinned by GraftSpec
+        // p-value (BinomSf, the expression the FitHiC pipeline scores
+        // with). Not SQL-expressible in DuckDB → no oracle; pinned by
         // golden/property tests plus q_hic_binom_tail_check's
         // closed-form oracle twin on the same binom_sf kernel.
         val f = graft.ops.Caches.register(
@@ -524,8 +512,8 @@ object HicQueries {
         val (xs, _, fit) = Spline.fitFromBins(bins, total)
         val prior = graft.functions.SplineInterp.curve(xs, fit) _
         f.withColumn("prior", prior(col("dist").cast("double")))
-          .withColumn("pval", graft.functions.Binom.sfUdf(
-            col("contactCount"), lit(total), col("prior")))
+          .withColumn("pval", graft.functions.BinomSf.column(
+            col("contactCount"), total, col("prior")))
           .select(col("chr"), col("mid1"), col("mid2"), col("contactCount"),
             Cols.fround(col("prior") * 1e6, 6).as("prior_ppm"),
             Cols.fround(col("pval"), 8).as("pval"))
@@ -622,16 +610,16 @@ object HicQueries {
         // A12+A19: BH with M = the POSSIBLE intra-in-range pair count —
         // the FitHiC subtlety naive ports get wrong: the test universe is
         // every mappable pair at an eligible distance, not the observed
-        // rows. M comes from the O(n log n) range-frame closed form
-        // (Fragments.possibleIntraInRange); the oracle recomputes it as an
-        // explicit pair self-join and it is pinned as the m_possible
-        // output column.
+        // rows. M comes from the FitHiC front end's census
+        // (Fragments.possiblePairsWithChroms) over the distinct loci of
+        // both contact ends; the oracle recomputes it as an explicit pair
+        // self-join and it is pinned as the m_possible output column.
         val c = cachedView(spark, dir)
-        val f = c.filter(col("dist").between(L, U))
-        val loci = c.select(col("chr"), col("mid1").as("mid"))
-          .unionByName(c.select(col("chr"), col("mid2").as("mid")))
-        val m = Fragments.possibleIntraInRange(loci, L, U)
-        Stats.bhQ(f, "pseudo_p", keys, "q_value", Some(m))
+        val m = Fragments.possiblePairsWithChroms(
+            Fragments.loci(HicStream.locusUpdates(contactPairs(c))), L, U)
+          .possible.intraInRange
+        Stats.bhQ(c.filter(col("dist").between(L, U)), "pseudo_p", keys,
+            "q_value", Some(m))
           .select(col("chr"), col("mid1"), col("mid2"), col("contactCount"),
             lit(m).as("m_possible"),
             Cols.fround(col("pseudo_p"), 6).as("pseudo_p"),
@@ -659,20 +647,13 @@ object HicQueries {
         // bias (marginal / per-chr mean marginal) → clamp-or-ignore to
         // [0.5, 2] (outside → factor 1, the reference's behavior) → attach
         // to both contact ends → bias-normalized counts.
-        val c = cachedView(spark, dir)
-        val marg = c.select(col("chr"), col("mid1").as("mid"),
-            col("contactCount"))
-          .unionByName(c.select(col("chr"), col("mid2").as("mid"),
-            col("contactCount")))
-          .groupBy("chr", "mid")
-          .agg(sum(col("contactCount")).as("hitCount"))
+        val contacts = contactPairs(cachedView(spark, dir))
+        val marg = HicStream.marginals(contacts)
         val means = marg.groupBy("chr")
           .agg((sum(col("hitCount")) / count(lit(1))).as("mean_h"))
         val bias = marg.join(broadcast(means), "chr")
           .select(col("chr"), col("mid"),
             (col("hitCount") / col("mean_h")).as("bias"))
-        val contacts = c.select(col("chr").as("chr1"), col("mid1"),
-          col("chr").as("chr2"), col("mid2"), col("contactCount"))
         Contacts.withBiases(contacts, bias, 0.5, 2.0)
           .select(col("chr1").as("chr"), col("mid1"), col("mid2"),
             col("contactCount"),
@@ -710,9 +691,7 @@ object HicQueries {
         // fixed point + binomial sf → rows-only by contract; the
         // SQL-expressible clamp/join/coalesce leg is oracle-pinned by
         // q_hic_bias_vector.
-        val c = cachedView(spark, dir)
-        val contacts = c.select(col("chr").as("chr1"), col("mid1"),
-          col("chr").as("chr2"), col("mid2"), col("contactCount"))
+        val contacts = contactPairs(cachedView(spark, dir))
         // frags = the reference's fragments INPUT file (A2) — standing
         // parquet shared with q_hic_significances
         val frags = standingFrags(spark, dir)
@@ -744,16 +723,10 @@ object HicQueries {
         val v = cachedInter(spark, dir)
         val contacts = v.select("chr1", "mid1", "chr2", "mid2",
           "contactCount")
-        val frags = v.select(col("chr1").as("chr"), col("mid1").as("mid"),
-            col("contactCount"))
-          .unionByName(v.select(col("chr2").as("chr"), col("mid2").as("mid"),
-            col("contactCount")))
-          .groupBy("chr", "mid")
-          .agg(sum(col("contactCount")).as("hitCount"))
-        // endsMappable: frags is derived above as v's own marginals —
-        // every end present, hitCount ≥ 1 = thr; probes skipped
-        Pipeline.interSignificances(frags, contacts, None, FitHiCConfig(),
-            endsMappable = true)
+        // endsMappable: frags are v's own marginals — every end present,
+        // hitCount ≥ 1 = thr; probes skipped
+        Pipeline.interSignificances(HicStream.marginals(contacts), contacts,
+            None, FitHiCConfig(), endsMappable = true)
           .select(col("chr1"), col("mid1"), col("chr2"), col("mid2"),
             col("contactCount"),
             Cols.fround(col("p_value"), 8).as("p_value"),
@@ -765,12 +738,13 @@ object HicQueries {
     "q_hic_inter_prior_bh" -> Q(
       (spark, dir) => {
         // A12-inter + the oracle-expressible core of A21: M = possible
-        // inter pairs from the closed form (T² − Σ n_c²)/2, uniform prior
-        // 1/M (pinned as prior_ppm), BH over possible-not-observed M.
+        // inter pairs (T² − Σ n_c²)/2 from the FitHiC front end's census
+        // over the distinct loci of both contact ends, uniform prior 1/M
+        // (pinned as prior_ppm), BH over possible-not-observed M.
         val v = cachedInter(spark, dir)
-        val loci = v.select(col("chr1").as("chr"), col("mid1").as("mid"))
-          .unionByName(v.select(col("chr2").as("chr"), col("mid2").as("mid")))
-        val m = Fragments.possibleInterAll(loci)
+        val m = Fragments.possiblePairsWithChroms(
+            Fragments.loci(HicStream.locusUpdates(v)), L, U)
+          .possible.interAll
         Stats.bhQ(v, "pseudo_p", Seq("chr1", "mid1", "chr2", "mid2"),
             "q_value", Some(m))
           .select(col("chr1"), col("mid1"), col("chr2"), col("mid2"),

@@ -16,11 +16,12 @@ import graft.ops.{Caches, GlobalOrder}
   *    per-bin mean contact probability, isotonized non-increasing;
   *  - per-pair prior p = curve(dist) · bias1 · bias2;
   *  - p-value = P[X ≥ count], X ~ Binom(N = observedIntraInRangeSum, p);
-  *  - BH q with M = possibleIntraInRangeCount (possible, NOT observed);
+  *  - BH q with M = the possible intra-in-range pair count (possible,
+  *    NOT observed; [[Fragments.possiblePairsWithChroms]]);
   *  - refinement pass k ≥ 2 re-estimates the null without the previous
   *    pass's q < threshold outliers, then re-scores ALL pairs;
-  *  - inter model: uniform prior 1/possibleInterAllCount, bias-scaled,
-  *    N = observedInterAllSum, own BH with M = possibleInterAllCount.
+  *  - inter model: uniform prior 1/M_inter, bias-scaled, N = observed
+  *    inter contact sum, own BH with M_inter = the possible inter pairs.
   */
 final case class FitHiCConfig(
     nBins: Int = 100,
@@ -168,8 +169,9 @@ object Pipeline {
     for (pass <- 1 to cfg.passes) {
       val bins = Binning.collectBins(nullSource, cfg.nBins, keys,
         assumeRanged = true)
+      require(bins.nonEmpty,
+        s"pass $pass: no intra-in-range contact mass to bin for the null")
       if (pass == 1) n = bins.map(_.getAs[Long]("sumCount")).sum
-      require(n > 0, "no intra-in-range contacts after filtering")
       val (xs, raw, fitted) = Spline.fitFromBins(bins, n)
       diagSink.foreach { sink =>
         sink(bins.indices.map(i => PassDiagnostics(pass,

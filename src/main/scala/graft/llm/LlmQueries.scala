@@ -401,7 +401,8 @@ object LlmQueries {
       },
       Some("WITH tf AS (SELECT doc_id, tok AS term, COUNT(*) AS tf FROM " +
         "(SELECT doc_id, unnest(string_split(text, ' ')) AS tok " +
-        "FROM documents) WHERE tok <> '' GROUP BY doc_id, tok), " +
+        "FROM documents WHERE doc_id IS NOT NULL) WHERE tok <> '' " +
+        "GROUP BY doc_id, tok), " +
         "lens AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS doc_len " +
         "FROM tf GROUP BY doc_id), " +
         "idf AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term), " +

@@ -19,15 +19,6 @@ object Caches {
   def register[T <: Dataset[_]](ds: T): T =
     synchronized { bag += (() => ds.unpersist()); ds }
 
-  /** Register a localCheckpoint'ed Dataset for release at [[drain]] —
-    * for the FINAL iterate of a checkpointing loop, which the operator's
-    * returned plan still references lazily (releasing it before the
-    * consumer materializes would make the lineage-truncated RDD
-    * unrecoverable; intermediate iterates are released inline instead).
-    */
-  def registerCheckpoint[T <: Dataset[_]](ds: T): T =
-    synchronized { bag += (() => releaseLocalCheckpoint(ds)); ds }
-
   def drain(): Unit = synchronized {
     bag.foreach(f => scala.util.Try(f()))
     bag.clear()
@@ -36,9 +27,9 @@ object Caches {
   /** DRAIN-IMMUNE handoff of a computed state to a lazily-read returned
     * plan: round-trips through a scratch parquet and — when the source
     * was localCheckpoint'ed — releases its blocks IMMEDIATELY (the
-    * write has fully consumed it). This replaces [[registerCheckpoint]]
-    * for final iterates handed to consumers: a registered checkpoint is
-    * released by ANY caller's [[drain]], and once the lineage is
+    * write has fully consumed it). Final iterates handed to consumers
+    * go through here, never through [[register]]: a registered checkpoint
+    * would be released by ANY caller's [[drain]], and once the lineage is
     * truncated the reader cannot recompute — it crashes with
     * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND under concurrent queries on one
     * session (ConcurrencySpec). A parquet read needs no cache entry at

@@ -61,6 +61,19 @@ object HicStream {
     a.unionByName(b)
   }
 
+  /** The per-locus marginals of a contact table (A1/A24): hitCount =
+    * Σ contactCount and n_pairs = the number of contact ends over the
+    * [[locusUpdates]] of both ends — the batch form of what
+    * [[incrementalMarginals]] keeps as state, and the one marginal
+    * aggregate of the library (the q_hic_* fragment tables, the
+    * marginal and bias queries).
+    */
+  def marginals(contacts: DataFrame): DataFrame =
+    locusUpdates(contacts)
+      .groupBy("chr", "mid")
+      .agg(sum(col("contactCount")).as("hitCount"),
+        count(lit(1)).as("n_pairs"))
+
   /** Incremental per-locus marginal counts over a contact stream:
     * `flatMapGroupsWithState` in Update mode keyed by locus. A watermark
     * on event time bounds disorder — contact observations older than the
@@ -113,12 +126,11 @@ object HicStream {
     * (the same bound as the batch input); the per-batch merge is one
     * shuffle over it. A production deployment would bucket the cumulative
     * table by (chr, mid1) and compact on a cadence instead of every
-    * micro-batch — the refit cadence is the caller's knob (`refitEvery`).
+    * micro-batch. Every folded batch is refitted.
     * At-least-once delivery should be fronted by the dedup stage
     * ([[Events.dedup]]); counts here are treated as per-pair deltas.
     */
   final class SplineRefitter(nBins: Int, distLo: Long, distHi: Long,
-      refitEvery: Int = 1,
       // durable-restart knob: when set, every folded batch snapshots the
       // cumulative pair table to `<stateDir>/cum_b<batchId>` (parquet,
       // _SUCCESS-gated, two newest kept) and a FRESH refitter pointed at
@@ -129,21 +141,18 @@ object HicStream {
       // standard idempotent-sink discipline). Off by default: the
       // snapshot costs one write of the bounded pair table per batch.
       stateDir: Option[String] = None) {
-    require(refitEvery >= 1, "refitEvery must be >= 1")
-
     /** One refit result: the A15/A16 outputs over the cumulative table. */
     case class Fit(batchId: Long, total: Long, avgDist: Array[Double],
         rawProb: Array[Double], fittedProb: Array[Double])
 
     @volatile private var cum: DataFrame = _
     @volatile private var fitsRev: List[Fit] = Nil
-    private var sinceRefit = 0
     private var lastFolded = -1L
 
     def latest: Option[Fit] = fitsRev.headOption
     def refitCount: Int = fitsRev.length
 
-    /** foreachBatch body: fold the micro-batch, refit on cadence. */
+    /** foreachBatch body: fold the micro-batch and refit. */
     def processBatch(batch: Dataset[ContactEvent], batchId: Long): Unit =
       synchronized {
         if (cum == null) stateDir.foreach(recover(batch.sparkSession, _))
@@ -165,8 +174,7 @@ object HicStream {
           cum.write.mode("overwrite").parquet(s"$d/cum_b$batchId")
           reapSnapshots(d, keepFrom = batchId - 1)
         }
-        sinceRefit += 1
-        if (sinceRefit >= refitEvery) { sinceRefit = 0; refit(batchId) }
+        refit(batchId)
       }
 
     /** Load the newest _SUCCESS-complete snapshot, if any. */
@@ -206,21 +214,20 @@ object HicStream {
       }
     }
 
+    /** The batch null fit over the in-range cumulative pairs; N is
+      * Σ sumCount over the bins, and a table with no in-range mass has
+      * no bins and adds no [[Fit]].
+      */
     private def refit(batchId: Long): Unit = {
-      val f = cum
-        .withColumn("dist", abs(col("mid1") - col("mid2")))
-        .filter(col("dist").between(distLo, distHi))
-        .persist()
-      try {
-        val total = f.agg(coalesce(sum(col("contactCount")), lit(0L)))
-          .first().getLong(0)
-        if (total > 0L) {
-          val bins = Binning.collectBins(f, nBins,
-            Seq("chr", "mid1", "mid2"))
-          val (xs, raw, fit) = Spline.fitFromBins(bins, total)
-          fitsRev ::= Fit(batchId, total, xs, raw, fit)
-        }
-      } finally f.unpersist()
+      val bins = Binning.collectBins(cum
+          .withColumn("dist", abs(col("mid1") - col("mid2")))
+          .filter(col("dist").between(distLo, distHi)),
+        nBins, Seq("chr", "mid1", "mid2"))
+      if (bins.nonEmpty) {
+        val total = bins.map(_.getAs[Long]("sumCount")).sum
+        val (xs, raw, fit) = Spline.fitFromBins(bins, total)
+        fitsRev ::= Fit(batchId, total, xs, raw, fit)
+      }
     }
 
     /** Release the cumulative checkpoint (call after stopping the query). */

@@ -196,13 +196,8 @@ object StreamQueries {
         // summary the streaming state converges to (StreamingSpec pins
         // the stream side against batch q_hic_marginals per locus; this
         // declared query oracle-pins the shared transform per chr).
-        val c = graft.hic.HicQueries.standingView(spark, dir)
-          .select(col("chr").as("chr1"), col("mid1"),
-            col("chr").as("chr2"), col("mid2"), col("contactCount"))
-        HicStream.locusUpdates(c)
-          .groupBy("chr", "mid")
-          .agg(sum(col("contactCount")).as("hitCount"),
-            count(lit(1)).as("n_pairs"))
+        HicStream.marginals(graft.hic.HicQueries.contactPairs(
+            graft.hic.HicQueries.standingView(spark, dir)))
           .groupBy("chr")
           .agg(count(lit(1)).as("n_loci"),
             sum(col("hitCount")).as("sum_hits"),

@@ -207,6 +207,16 @@ class BhSpec extends AnyFunSuite with Matchers with SparkTest {
 }
 
 class BinningSpec extends AnyFunSuite with Matchers with SparkTest {
+  test("an input with no rows or no contact mass has no bins") {
+    import spark.implicits._
+    val keys = Seq("chr", "mid1", "mid2")
+    val zero = (1 to 20).map(i => ("chrT", i.toLong, i.toLong + 1, 0L,
+      i.toLong * 1000L)).toDF("chr", "mid1", "mid2", "contactCount", "dist")
+    Binning.collectBins(zero, 10, keys) shouldBe empty
+    Binning.collectBins(zero.filter(col("dist") < 0), 10, keys) shouldBe
+      empty
+    Binning.equalOccupancy(zero, 10, keys).count() shouldBe 0L
+  }
   test("equal-occupancy bins partition rows and conserve mass") {
     import spark.implicits._
     val rnd = new scala.util.Random(3)
@@ -257,7 +267,7 @@ class SkewSpec extends AnyFunSuite with Matchers with SparkTest {
 }
 
 class FragmentsSpec extends AnyFunSuite with Matchers with SparkTest {
-  test("possibleIntraInRange matches brute force") {
+  test("possible intra pairs match brute force") {
     import spark.implicits._
     val frags = Seq(
       ("c1", 2500L), ("c1", 7500L), ("c1", 12500L), ("c1", 22500L),
@@ -273,33 +283,45 @@ class FragmentsSpec extends AnyFunSuite with Matchers with SparkTest {
       }.sum.toLong
     }
     for ((lo, up) <- Seq((0L, 100000L), (5000L, 10000L), (10000L, 20000L)))
-      Fragments.possibleIntraInRange(frags, lo, up) shouldBe brute(lo, up)
+      Fragments.possiblePairsWithChroms(Fragments.loci(frags), lo, up)
+        .possible.intraInRange shouldBe brute(lo, up)
   }
   test("an empty distance range (low > up) holds no possible pair") {
     import spark.implicits._
     val frags = Seq(("c1", 2500L), ("c1", 7500L), ("c1", 12500L))
       .toDF("chr", "mid")
-    Fragments.possibleIntraInRange(frags, 10000L, 4000L) shouldBe 0L
-    Fragments.possiblePairsOfLoci(Fragments.loci(frags), 10000L, 4000L)
-      .intraInRange shouldBe 0L
+    Fragments.possiblePairsWithChroms(Fragments.loci(frags), 10000L, 4000L)
+      .possible.intraInRange shouldBe 0L
   }
-  test("possibleInterAll matches closed form") {
+  test("possible inter pairs match the closed form") {
     import spark.implicits._
     val frags = Seq(("c1", 1L), ("c1", 2L), ("c2", 3L), ("c3", 4L),
       ("c3", 5L), ("c3", 6L)).toDF("chr", "mid")
     // 2*1 + 2*3 + 1*3 = 11
-    Fragments.possibleInterAll(frags) shouldBe 11L
+    Fragments.possiblePairsWithChroms(Fragments.loci(frags), 0L, 0L)
+      .possible.interAll shouldBe 11L
   }
-  test("possiblePairsOfLoci agrees with the window and aggregate forms") {
+  test("possiblePairsWithChroms agrees with an enumeration of every " +
+      "locus pair") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
-    val frags = (for (c <- Seq("c1", "c2", "c3"); _ <- 0 until 200)
-      yield (c, 500L + 1000L * rnd.nextInt(400))).toDF("chr", "mid")
+    // 200 draws per chromosome from 400 mids: duplicate loci included
+    val drawn = for (c <- Seq("c1", "c2", "c3"); _ <- 0 until 200)
+      yield (c, 500L + 1000L * rnd.nextInt(400))
+    val frags = drawn.toDF("chr", "mid")
+    val loci = drawn.distinct
+    val pairs = for (i <- loci.indices; j <- i + 1 until loci.length)
+      yield (loci(i), loci(j))
     for ((lo, up) <- Seq((0L, Long.MaxValue / 4), (0L, 0L), (1000L, 1000L),
         (5000L, 60000L))) withClue((lo, up)) {
-      Fragments.possiblePairsOfLoci(Fragments.loci(frags), lo, up) shouldBe
-        Fragments.PossiblePairs(Fragments.possibleIntraInRange(frags, lo, up),
-          Fragments.possibleInterAll(frags))
+      val got = Fragments.possiblePairsWithChroms(Fragments.loci(frags),
+        lo, up)
+      got.possible shouldBe Fragments.PossiblePairs(
+        pairs.count { case ((c1, m1), (c2, m2)) =>
+          val d = math.abs(m2 - m1); c1 == c2 && d >= lo && d <= up
+        }.toLong,
+        pairs.count { case ((c1, _), (c2, _)) => c1 != c2 }.toLong)
+      got.chroms.sorted shouldBe Seq("c1", "c2", "c3")
     }
   }
   test("fixedSizeFragments lays a resolution grid") {

@@ -117,34 +117,6 @@ class PipelineSpec extends AnyFunSuite with Matchers with SparkTest {
         endsMappable = true)
   }
 
-  /** The starts of the Spark jobs that `body` runs, from a listener. */
-  private def jobsStartedBy(body: => Unit)
-      : Seq[org.apache.spark.scheduler.SparkListenerJobStart] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[
-      SparkListenerJobStart]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        started.add(j)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    try {
-      body
-      // the bus delivers in order: once a marker job's start arrives, so
-      // has the start of every job before it
-      val marker = spark.sparkContext.parallelize(Seq(1), 1).countAsync()
-      scala.concurrent.Await.ready(marker,
-        scala.concurrent.duration.Duration.Inf)
-      val markerId = marker.jobIds.head
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!started.asScala.exists(_.jobId == markerId) &&
-          System.nanoTime() < deadline)
-        Thread.sleep(10)
-      started.asScala.toSeq.filter(_.jobId < markerId)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("a bad config cannot be built, and no job starts from one") {
     val (frags, contacts) = fixture
     // gz-TSV inputs the CLI could read, written before jobs are counted
@@ -276,6 +248,28 @@ class PipelineSpec extends AnyFunSuite with Matchers with SparkTest {
           explicit(i).getAs[Long]("pairCount"),
           explicit(i).getAs[Long]("sumCount"), xs(i), raw(i), fitted(i)))
     }
+  }
+
+  test("an empty refinement null fails naming its pass, before that " +
+      "pass scores") {
+    val (frags, contacts) = fixture
+    // every pass-1 q is below the threshold, so every pair is an outlier
+    // and pass 2 has nothing to bin
+    val cfg = FitHiCConfig(nBins = 3, passes = 2, distLow = 0,
+      distUp = 1000000L, qThreshold = 1.5)
+    def scoring(jobs: Seq[org.apache.spark.scheduler.SparkListenerJobStart])
+        : Int = jobs.count(_.stageInfos.maxBy(_.stageId).details
+      .contains("Pipeline$.score("))
+    val onePass = jobsStartedBy(
+      Pipeline.intraSignificances(frags, contacts, None, cfg.copy(passes = 1)))
+    var message = ""
+    val twoPasses = jobsStartedBy {
+      message = (the[IllegalArgumentException] thrownBy
+        Pipeline.intraSignificances(frags, contacts, None, cfg)).getMessage
+    }
+    message should include("pass 2")
+    scoring(onePass) should be > 0
+    scoring(twoPasses) shouldBe scoring(onePass)
   }
 
   test("a failing bias table surfaces from the inter model with no " +

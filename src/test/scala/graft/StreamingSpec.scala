@@ -405,6 +405,42 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkTest {
     } finally { q.stop(); refitter.close() }
   }
 
+  test("a batch with no in-range intra mass adds no fit and throws nothing") {
+    val sp = spark
+    import sp.implicits._
+    val refitter = new HicStream.SplineRefitter(nBins = 10, distLo = 10000L,
+      distHi = 100000L)
+    def batch(chr2: String, mid2: Long, count: Long) = Seq(HicStream
+      .ContactEvent(ts(0), "c1", 2500L, chr2, mid2, count)).toDS()
+    try {
+      refitter.processBatch(batch("c2", 2500L, 3L), 0L) // inter only
+      refitter.processBatch(batch("c1", 7500L, 3L), 1L) // below distLo
+      refitter.processBatch(batch("c1", 52500L, 0L), 2L) // zero mass
+      refitter.refitCount shouldBe 0
+      refitter.processBatch(batch("c1", 42500L, 4L), 3L)
+      refitter.refitCount shouldBe 1
+      refitter.latest.map(f => (f.batchId, f.total)) shouldBe Some((3L, 4L))
+    } finally refitter.close()
+  }
+
+  test("a refit runs only the binning's jobs: N comes from the bins") {
+    val sp = spark
+    import sp.implicits._
+    val refitter = new HicStream.SplineRefitter(nBins = 10, distLo = 0L,
+      distHi = Long.MaxValue)
+    val events = (0 until 40).map(i => HicStream.ContactEvent(ts(0), "c1",
+      2500L, "c1", 2500L + 5000L * i, 1L + i % 3))
+    try {
+      val jobs = jobsStartedBy(refitter.processBatch(events.toDS(), 0L))
+      // the call site of each job's result stage, innermost frame first
+      val refitJobs = jobs.map(_.stageInfos.maxBy(_.stageId).details)
+        .filter(_.contains("refit(HicStream.scala"))
+      refitJobs should not be empty
+      refitJobs.foreach(_ should include("Binning$.collectBins("))
+      refitter.latest.map(_.total) shouldBe Some(events.map(_.contactCount).sum)
+    } finally refitter.close()
+  }
+
   test("interval join: stream-stream purchase x prior-views equals batch") {
     val sp = spark
     import sp.implicits._
