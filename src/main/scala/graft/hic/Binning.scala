@@ -67,10 +67,14 @@ object Binning {
           val out = scala.collection.mutable.ArrayBuffer
             .empty[(Int, Long, Long, Long, Long, Long)]
           var cum = offs.getOrElse(pid, (0L, 0L))._2
-          var bin = -1
+          // zero-count rows before any mass get a negative bin (cum = 0,
+          // and the division truncates toward zero as SQL's does); they
+          // are still a bin, so openness is a flag, not a bin sentinel
+          var open = false
+          var bin = 0
           var cnt = 0L; var sumC = 0L; var sumD = 0L
           var minD = Long.MaxValue; var maxD = Long.MinValue
-          def flush(): Unit = if (bin >= 0)
+          def flush(): Unit = if (open)
             out += ((bin, cnt, sumC, sumD, minD, maxD))
           it.foreach { row =>
             require(!row.isNullAt(distIdx) && !row.isNullAt(countIdx),
@@ -81,8 +85,8 @@ object Binning {
             // the SQL form's ((cum - 1) * nBins) div total, overflow-checked
             // as ANSI long arithmetic is
             val b = (Math.multiplyExact(cum - 1, nBins.toLong) / total).toInt
-            if (b != bin) {
-              flush(); bin = b
+            if (!open || b != bin) {
+              flush(); bin = b; open = true
               cnt = 0L; sumC = 0L; sumD = 0L
               minD = Long.MaxValue; maxD = Long.MinValue
             }

@@ -144,19 +144,44 @@ class BhSpec extends AnyFunSuite with Matchers with SparkTest {
     got.except(ref).count() shouldBe 0
     ref.except(got).count() shouldBe 0
   }
-  test("chunked backward walk (chunkRows ≪ partition) is bit-identical") {
-    // the final pass buffers one CHUNK, not one partition — force many
-    // chunks per partition and require exact equality with the default
-    // (single-chunk-per-partition at this size) configuration
+  test("BH matches the naive reference at 1, 4, 64 partitions") {
+    // heavy p ties; 64 partitions over 11 distinct p values leaves most
+    // of them empty. Exact bits of q, not a tolerance
     import spark.implicits._
     val rnd = new scala.util.Random(23)
-    val df = (1 to 1000).map(i => (i.toLong, rnd.nextDouble()))
+    val df = (1 to 1000).map(i =>
+      (i.toLong, math.rint(rnd.nextDouble() * 10) / 10)).toDF("id", "p")
+    val n = df.count()
+    def bits(d: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      d.select("id", "q").collect().map(r =>
+        r.getLong(0) -> java.lang.Double.doubleToLongBits(r.getDouble(1)))
+        .toSet
+    def naive(m: Long) = df
+      .withColumn("rk", row_number().over(Window.orderBy("p", "id")))
+      .withColumn("q", least(lit(1.0), min(col("p") * m / col("rk")).over(
+        Window.orderBy(col("rk").desc)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    try {
+      for (parts <- Seq(1, 4, 64); m <- Seq(None, Some(3 * n + 7))) {
+        spark.conf.set(key, parts.toString)
+        withClue(s"$parts partitions, M = $m: ") {
+          bits(Stats.bhQ(df, "p", Seq("id"), "q", m)) shouldBe
+            bits(naive(m.getOrElse(n)))
+        }
+      }
+    } finally spark.conf.set(key, prev)
+  }
+  test("a null p fails BH with its message") {
+    import spark.implicits._
+    val df = Seq((1L, Some(0.2)), (2L, None), (3L, Some(0.7)))
       .toDF("id", "p")
-    val tiny = Stats.bhQ(df, "p", Seq("id"), "q", chunkRows = 7)
-      .select("id", "q")
-    val dflt = Stats.bhQ(df, "p", Seq("id"), "q").select("id", "q")
-    tiny.except(dflt).count() shouldBe 0
-    dflt.except(tiny).count() shouldBe 0
+    val e = intercept[Exception](
+      Stats.bhQ(df, "p", Seq("id"), "q").collect())
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n") should
+      include("bhQ: null p")
   }
   test("BH with M=1 gives q = min(1, p)") {
     import spark.implicits._
@@ -227,6 +252,7 @@ class BinningSpec extends AnyFunSuite with Matchers with SparkTest {
     val bins = Binning.equalOccupancy(contacts, 10,
       Seq("chr", "mid1", "mid2")).collect()
     bins.map(_.getAs[Long]("pairCount")).sum shouldBe 1000L
+    binsOf(bins) shouldBe formulaBins(contacts, 10)
     val total = contacts.agg(sum("contactCount")).first().getLong(0)
     bins.map(_.getAs[Long]("sumCount")).sum shouldBe total
     val target = total / 10.0
@@ -239,6 +265,36 @@ class BinningSpec extends AnyFunSuite with Matchers with SparkTest {
     sorted.sliding(2).foreach { case Array(a, b) =>
       a.getAs[Long]("maxDist") should be <= b.getAs[Long]("minDist")
     }
+    // a zero-count row before any mass, with total ≤ nBins: its bin
+    // ((0 − 1)·10) / 3 = −3 is negative, and it is still a bin
+    val probe = Seq(("chrT", 1L, 2L, 0L, 1000L), ("chrT", 3L, 4L, 3L, 2000L))
+      .toDF("chr", "mid1", "mid2", "contactCount", "dist")
+    val probeBins = Binning.collectBins(probe, 10, Seq("chr", "mid1", "mid2"))
+    probeBins.map(_.getAs[Long]("pairCount")).sum shouldBe 2L
+    binsOf(probeBins) shouldBe formulaBins(probe, 10)
+  }
+
+  /** binIdx → (pairCount, sumCount) of collected bins. */
+  private def binsOf(bins: Array[org.apache.spark.sql.Row])
+      : Map[Int, (Long, Long)] =
+    bins.map(b => b.getAs[Int]("binIdx") ->
+      (b.getAs[Long]("pairCount"), b.getAs[Long]("sumCount"))).toMap
+
+  /** The q_hic_equal_occupancy formula on the driver: rows in (dist, chr,
+    * mid1, mid2) order, each in bin ((cum − 1)·nBins) / total with the
+    * division truncating toward zero, as DuckDB's `//` does.
+    */
+  private def formulaBins(contacts: org.apache.spark.sql.DataFrame,
+      nBins: Int): Map[Int, (Long, Long)] = {
+    val rows = contacts.select("dist", "chr", "mid1", "mid2", "contactCount")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+        r.getLong(3), r.getLong(4))).sortBy(r => (r._1, r._2, r._3, r._4))
+    val total = rows.map(_._5).sum
+    var cum = 0L
+    rows.map { r => cum += r._5; ((cum - 1) * nBins / total).toInt -> r._5 }
+      .groupBy(_._1).map { case (b, rs) =>
+        b -> (rs.length.toLong, rs.map(_._2).sum)
+      }
   }
 }
 
