@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 /** Dev-only: one warm pass over every declared query, printing per-query
   * job count, summed job wall, and query wall — the census that tells the
   * optimization rounds where scheduling barriers (actions, broadcast
-  * builds, probe jobs) concentrate. Sorted by job count descending.
+  * builds, probe jobs) concentrate. Sorted by job count descending. A
+  * query that fails on either run is marked FAILED with its error, its
+  * counts are left out of the total, and the census exits 1.
   */
 object DevJobCensus {
   def main(args: Array[String]): Unit = {
@@ -32,9 +34,9 @@ object DevJobCensus {
           jobNanos.addAndGet(System.nanoTime() - t0)
         }
       })
-    // warm: JIT + parquet reader + codegen
-    try SparkEntry.queries("q_scan_project")(spark, dir).count()
-    catch { case _: Throwable => () }
+    // warm: JIT + parquet reader + codegen; the census below reports
+    // every failure of the queries it counts
+    scala.util.Try(SparkEntry.queries("q_scan_project")(spark, dir).count())
     def quiesce(): Unit = { Thread.sleep(300) }
     // run each query twice: the first pass pays memoized builds
     // (standing parquet, persisted indexes) exactly as the bench's first
@@ -46,24 +48,38 @@ object DevJobCensus {
     val selected =
       if (wanted.isEmpty) SparkEntry.queries.toSeq
       else SparkEntry.queries.filter(q => wanted(q._1)).toSeq
+    // the first error of a query's two runs, if any
+    def attempt(fn: => Unit): Option[String] =
+      try { fn; None } catch {
+        case t: Throwable => Some(s"${t.getClass.getSimpleName}: " +
+          String.valueOf(t.getMessage).linesIterator.nextOption()
+            .getOrElse(""))
+      }
     val rows = selected.sortBy(_._1).map { case (name, fn) =>
-      try fn(spark, dir).count() catch { case _: Throwable => () }
+      val warm = attempt(fn(spark, dir).count())
       graft.ops.Caches.drain()
       quiesce()
       val j0 = jobs.get(); val n0 = jobNanos.get()
       val t0 = System.nanoTime()
-      try fn(spark, dir).count() catch { case _: Throwable => () }
+      val failure = warm.orElse(attempt(fn(spark, dir).count()))
       val wall = (System.nanoTime() - t0) / 1e9
       graft.ops.Caches.drain()
       quiesce()
-      (name, jobs.get() - j0, (jobNanos.get() - n0) / 1e9, wall)
+      (name, jobs.get() - j0, (jobNanos.get() - n0) / 1e9, wall, failure)
     }
     println(f"${"query"}%-45s jobs jobsum wall")
-    rows.sortBy(-_._2).foreach { case (n, j, js, w) =>
-      println(f"$n%-45s $j%4d $js%6.2f $w%6.2f")
+    rows.sortBy(-_._2).foreach { case (n, j, js, w, failure) =>
+      println(f"$n%-45s $j%4d $js%6.2f $w%6.2f" +
+        failure.fold("")(e => s"  FAILED: $e"))
     }
-    println(f"TOTAL jobs=${rows.map(_._2).sum} " +
-      f"wall=${rows.map(_._4).sum}%.1f")
+    val (failed, ok) = rows.partition(_._5.nonEmpty)
+    println(f"TOTAL jobs=${ok.map(_._2).sum} " +
+      f"wall=${ok.map(_._4).sum}%.1f failed=${failed.size}")
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println("DevJobCensus: failed queries: " +
+        failed.map(_._1).mkString(", "))
+      sys.exit(1)
+    }
   }
 }

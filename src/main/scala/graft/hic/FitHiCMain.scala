@@ -84,9 +84,12 @@ object FitHiCMain {
 
     val sigCols = Seq("chr1", "mid1", "chr2", "mid2", "contactCount",
       "p_value", "q_value")
-    // one sort for every table: intra rows have chr1 == chr2, so the
+    // one order for every table: intra rows have chr1 == chr2, so the
     // inter order (chr1, mid1, chr2, mid2) is also their (chr1, mid1,
-    // mid2) order, and all three writes share one plan
+    // mid2) order, and all three writes share one plan. Every table is a
+    // projection of the front end's layout in this order, so the order
+    // plans no exchange and no sort: each write runs one task per layout
+    // partition
     def writeSig(df: DataFrame, name: String): Unit =
       df.orderBy("chr1", "mid1", "chr2", "mid2")
         .select(sigCols.head, sigCols.tail: _*)

@@ -428,14 +428,13 @@ object HicQueries {
         // (chr, mid1, mid2) is unique in the view (ContactsView
         // pre-aggregates), so the pass-2 test set is a row FILTER of the
         // scored frame — the old shape ranked the full view twice and
-        // anti-joined for the same rows. The filter is narrow over
-        // pass 1's ranged cache (its p-descending layout preserved), so
-        // pass 2 also skips its range exchange (assumeRanged) and its
-        // passes re-read that cache.
+        // anti-joined for the same rows. When pass 1's q is a projection
+        // of its cached input (its steps fit the driver), pass 2's BH
+        // re-reads that cache too.
         val bh1 = Stats.bhQ(standingView(spark, dir), "pseudo_p", keys,
           "q1")
         val c2 = bh1.filter(col("q1") >= 0.05).drop("q1")
-        Stats.bhQ(c2, "pseudo_p", keys, "q_value", assumeRanged = true)
+        Stats.bhQ(c2, "pseudo_p", keys, "q_value")
           .select(col("chr"), col("mid1"), col("mid2"), col("contactCount"),
             Cols.fround(col("pseudo_p"), 6).as("pseudo_p"),
             Cols.fround(col("q_value"), 6).as("q_value"))

@@ -41,6 +41,10 @@ final case class FitHiCConfig(
     s"distLow must be <= distUp, got [$distLow, $distUp]")
   require(biasLow <= biasUp,
     s"biasLow must be <= biasUp, got [$biasLow, $biasUp]")
+  // a q-value lies in [0, 1]: above 1 every row would be an outlier and
+  // the next pass would have no null to fit
+  require(qThreshold >= 0.0 && qThreshold <= 1.0,
+    s"qThreshold must be in [0, 1], got $qThreshold")
 }
 
 object Pipeline {
@@ -58,9 +62,12 @@ object Pipeline {
   /** The front half the intra and inter models share, built once by
     * [[frontEnd]]: `pairs` is the mapped, classified contact set holding
     * only the classes a model will read, with each end's bias factor
-    * (`bias1`, `bias2`; 1.0 for an end without one), cached — each model
-    * traverses it several times; `possible` holds BH's M for both models,
-    * counted by one query over the mapped loci.
+    * (`bias1`, `bias2`; 1.0 for an end without one), laid out in
+    * (chr1, mid1, chr2, mid2) order and cached
+    * ([[GlobalOrder.sortedLayout]]) — each model traverses it several
+    * times, and each pass's scores are a narrow map of it, so a write in
+    * that order needs no exchange; `possible` holds BH's M for both
+    * models, counted by one query over the mapped loci.
     */
   final case class FrontEnd(cfg: FitHiCConfig, pairs: DataFrame,
       possible: Fragments.PossiblePairs)
@@ -108,10 +115,12 @@ object Pipeline {
         factors, census.chroms)
     val classes = (if (intra) Seq(IntraInRange) else Nil) ++
       (if (inter) Seq(InterAll) else Nil)
-    FrontEnd(cfg, Caches.register(
+    // the layout's range exchange samples its input before shuffling it:
+    // a persisted input is read and looked up once, not twice
+    FrontEnd(cfg, GlobalOrder.sortedLayout(Caches.register(
       Contacts.classify(looked, cfg.distLow, cfg.distUp)
-        .filter(col("cls").isin(classes: _*))
-        .persist()), census.possible)
+        .filter(col("cls").isin(classes: _*)).persist()), keys.map(col)),
+      census.possible)
   }
 
   /** `contacts` without the rows with an end outside `loci` (when given)
@@ -153,9 +162,8 @@ object Pipeline {
     val cfg = fe.cfg
     // the dist-ranged cache serves binning only: pass 1 bins this layout
     // and every refinement pass a FILTERED view of it.
-    // Scoring reads the front end's cache like the inter model does (bhQ
-    // re-partitions on p_value regardless), so both models run one
-    // scoring plan
+    // Scoring reads the front end's cache like the inter model does, so
+    // both models run one scoring plan
     val rangedPairs = GlobalOrder.sortedLayout(
       fe.pairs.filter(col("cls") === IntraInRange),
       col("dist") +: keys.map(col))
@@ -178,40 +186,20 @@ object Pipeline {
           bins(i).getAs[Int]("binIdx"), bins(i).getAs[Long]("pairCount"),
           bins(i).getAs[Long]("sumCount"), xs(i), raw(i), fitted(i))))
       }
-      val scored = score(fe, IntraInRange, xs, fitted, n,
+      val bh = score(fe, IntraInRange, xs, fitted, n,
         fe.possible.intraInRange)
-      val tagged = scored.withColumn("pass", lit(pass))
+      val tagged = bh.scored.withColumn("pass", lit(pass))
       result = if (result == null) tagged else result.unionByName(tagged)
       // the outliers are the rows with q < qThreshold, which are exactly
-      // the rows with p <= p*, the largest such row's p (see
-      // largestSignificantP): the filter recomputes p with the same
-      // columns, so the doubles match, and p* rides a Param, so every
-      // refinement pass bins through one class
+      // the rows with p <= p*, read off BH's steps: the filter recomputes
+      // p with the same columns, so the doubles match, and p* rides a
+      // Param, so every refinement pass bins through one class
       if (pass < cfg.passes)
         nullSource = rangedPairs.filter(pValue(xs, fitted, n) >
           GraftColumnBridge.column(
-            Param(largestSignificantP(scored, cfg.qThreshold))))
+            Param(bh.largestPBelow(cfg.qThreshold))))
     }
     result
-  }
-
-  /** The largest p-value of a scored pass whose q-value is below `qThr`,
-    * or −1 when there is none: one narrow pass, no aggregate plan. BH's
-    * q is non-decreasing in p, and tied p-values get one q whatever
-    * their order (each tie's q is the suffix min from the tie's last
-    * rank), so the rows with q < `qThr` are exactly those with p at or
-    * below this value.
-    */
-  private def largestSignificantP(scored: DataFrame, qThr: Double): Double = {
-    val pIdx = scored.schema.fieldIndex("p_value")
-    val qIdx = scored.schema.fieldIndex("q_value")
-    GraftColumnBridge.collectRows(scored)(_.mapPartitions { it =>
-      var pMax = -1.0
-      it.foreach { r =>
-        if (r.getDouble(qIdx) < qThr) pMax = math.max(pMax, r.getDouble(pIdx))
-      }
-      Iterator.single(pMax)
-    }).max
   }
 
   /** Inter-chromosomal model (A21): uniform bias-scaled prior.
@@ -233,7 +221,7 @@ object Pipeline {
     // the uniform prior 1/M as a one-knot curve: the lookup returns the
     // knot's value for every distance, so the inter model runs the
     // intra model's scoring plan
-    else score(fe, InterAll, Array(0.0), Array(1.0 / m), n, m)
+    else score(fe, InterAll, Array(0.0), Array(1.0 / m), n, m).scored
   }
 
   /** Σ contactCount over the rows of class `cls`: one narrow pass over the
@@ -267,14 +255,14 @@ object Pipeline {
 
   /** Score every front-end pair of class `cls` ([[pValue]]) with BH q
     * under M = `m`: keys, contactCount, p_value, q_value. One plan for
-    * every pass and both models; BH ranges, sorts and caches only the
-    * columns it returns. Its input only filters and projects the front
-    * end's cache, so the range exchange's sampling pass re-reads that
-    * cache rather than persisting a copy.
+    * every pass and both models. BH's input only filters and projects the
+    * front end's cache, so its passes re-read that cache rather than
+    * persisting a copy, and with BH's steps on the driver the scores stay
+    * a projection of the front end's position-ordered layout.
     */
   private def score(fe: FrontEnd, cls: String, xs: Array[Double],
-      ys: Array[Double], n: Long, m: Long): DataFrame =
-    Stats.bhQ(fe.pairs.filter(col("cls") === cls)
+      ys: Array[Double], n: Long, m: Long): Stats.Bh =
+    Stats.bh(fe.pairs.filter(col("cls") === cls)
         .select((keys.map(col) :+ col("contactCount") :+
           pValue(xs, ys, n).as("p_value")): _*),
       "p_value", keys, "q_value", Some(m))

@@ -190,23 +190,23 @@ class BhSpec extends AnyFunSuite with Matchers with SparkTest {
       .select("q").first().getDouble(0)
     q shouldBe 0.4
   }
-  test("assumeRanged over a filtered pass-1 frame ≡ the exchanged path " +
-      "(the refine_pass2 shape)") {
-    // pass 2 of the BH refinement filters pass 1's OUTPUT (a narrow op
-    // over the ranged layout) and re-ranks with assumeRanged = true —
-    // must be row-identical to handing the filtered frame back through
-    // the full repartitionByRange path
+  test("bhQ over a filter of a bhQ output ≡ bhQ over the same rows") {
+    // the refine_pass2 shape: pass 2 of the BH refinement filters pass 1's
+    // OUTPUT and re-ranks it, which must give the q-values of the same
+    // rows handed to BH afresh
     import spark.implicits._
     val rnd = new scala.util.Random(31)
     val df = (1 to 800).map(i => (i.toLong, rnd.nextDouble()))
       .toDF("id", "p")
     val bh1 = Stats.bhQ(df, "p", Seq("id"), "q1")
     val kept = bh1.filter(col("q1") >= 0.3).drop("q1")
-    val fast = Stats.bhQ(kept, "p", Seq("id"), "q", assumeRanged = true)
-      .select("id", "q")
-    val slow = Stats.bhQ(kept, "p", Seq("id"), "q").select("id", "q")
-    fast.except(slow).count() shouldBe 0
-    slow.except(fast).count() shouldBe 0
+    val fresh = kept.collect().map(r => (r.getLong(0), r.getDouble(1)))
+      .toSeq.toDF("id", "p")
+    fresh.count() should (be > 0L and be < 800L)
+    val filtered = Stats.bhQ(kept, "p", Seq("id"), "q").select("id", "q")
+    val direct = Stats.bhQ(fresh, "p", Seq("id"), "q").select("id", "q")
+    filtered.except(direct).count() shouldBe 0
+    direct.except(filtered).count() shouldBe 0
   }
   test("BH q-values survive partition-renumbering consumers (union)") {
     // regression: the final narrow pass once read the STAGE task id for
@@ -228,6 +228,124 @@ class BhSpec extends AnyFunSuite with Matchers with SparkTest {
       .select("id", "q").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     viaUnion shouldBe direct
+  }
+
+  /** (id, bits of q) for every row of a scored frame. */
+  private def qBits(d: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    d.select("id", "q").collect().map(r =>
+      r.getLong(0) -> java.lang.Double.doubleToLongBits(r.getDouble(1)))
+      .toSet
+
+  /** BH by its definition over two windows, with `m` tests. */
+  private def naive(df: org.apache.spark.sql.DataFrame, m: Long) = df
+    .withColumn("rk", row_number().over(Window.orderBy("p", "id")))
+    .withColumn("q", least(lit(1.0), min(col("p") * m / col("rk")).over(
+      Window.orderBy(col("rk").desc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
+
+  test("a NaN p fails BH with its message at 1 and 4 partitions") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val df = (1 to 200).map(i => (i.toLong,
+      if (i % 50 == 0) Double.NaN else rnd.nextDouble())).toDF("id", "p")
+    for (parts <- Seq(1, 4)) withClue(s"$parts partitions: ") {
+      val e = intercept[Exception](
+        Stats.bhQ(df.repartition(parts), "p", Seq("id"), "q").collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString("\n") should
+        include("bhQ: NaN p")
+    }
+  }
+
+  test("an empty prefix scores every row 1.0 in one job") {
+    // every p ≥ 0.5 with M = 10·n: each p·M/rank ≥ 5, so no row is below
+    // the cut and no prefix is collected
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val df = (1 to 300).map(i => (i.toLong, 0.5 + rnd.nextDouble() / 2))
+      .toDF("id", "p")
+    var bh: Stats.Bh = null
+    val jobs = jobsStartedBy { bh = Stats.bh(df, "p", Seq("id"), "q",
+      Some(3000L)) }
+    jobs.size shouldBe 1
+    bh.steps.map(_.ps.length) shouldBe Some(0)
+    bh.scored.select("q").distinct().collect().map(_.getDouble(0)) shouldBe
+      Array(1.0)
+    qBits(bh.scored) shouldBe qBits(naive(df, 3000L))
+  }
+
+  test("a prefix of every row runs two jobs and matches the reference") {
+    // every p ≤ 1e-3 with 400 tests: every q is below 1, so every row is
+    // in the prefix, and 37 distinct p values make 37 steps
+    import spark.implicits._
+    val rnd = new scala.util.Random(9)
+    val df = (1 to 400).map(i => (i.toLong, (1 + rnd.nextInt(37)) * 1e-5))
+      .toDF("id", "p")
+    var bh: Stats.Bh = null
+    val jobs = jobsStartedBy { bh = Stats.bh(df, "p", Seq("id"), "q") }
+    jobs.size shouldBe 2
+    bh.steps.map(_.ps.length) shouldBe
+      Some(df.select("p").distinct().count().toInt)
+    bh.scored.filter(col("q") >= 1.0).count() shouldBe 0
+    qBits(bh.scored) shouldBe qBits(naive(df, 400L))
+  }
+
+  test("a tie that ends at the last q < 1 rank shares one q") {
+    // ranks 4–8 tie at p = 0.7 with M = 10: p·M/4 = 1.75 but p·M/8 =
+    // 0.875, so the whole tie takes 0.875; the two p = 1.0 rows stay at
+    // 1.0, above the cut
+    import spark.implicits._
+    val ps = Seq.fill(3)(0.05) ++ Seq.fill(5)(0.7) ++ Seq.fill(2)(1.0)
+    val df = ps.zipWithIndex.map { case (p, i) => (i.toLong, p) }
+      .toDF("id", "p")
+    val bh = Stats.bh(df, "p", Seq("id"), "q")
+    val q = bh.scored.collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    (3 until 8).map(i => q(i.toLong)).toSet shouldBe Set(0.7 * 10 / 8)
+    (8 until 10).map(i => q(i.toLong)).toSet shouldBe Set(1.0)
+    bh.steps.get.ps.toSeq shouldBe Seq(0.05, 0.7)
+    bh.largestPBelow(0.9) shouldBe 0.7
+    bh.largestPBelow(0.8) shouldBe 0.05
+    bh.largestPBelow(0.1) shouldBe -1.0
+    qBits(bh.scored) shouldBe qBits(naive(df, 10L))
+  }
+
+  test("p values on bucket edges match the reference at every M") {
+    // powers of two sit on the edges of the exponent buckets, and M = 16
+    // makes the cut test hold with equality: 4 rows of 0.25 and 4 of 0.5
+    // give C = 4 = 0.25·16 and C = 8 = 0.5·16
+    import spark.implicits._
+    val exact = (Seq.fill(4)(0.25) ++ Seq.fill(4)(0.5)).zipWithIndex
+      .map { case (p, i) => (i.toLong, p) }.toDF("id", "p")
+    for (m <- Seq(15L, 16L, 17L)) withClue(s"M = $m: ") {
+      qBits(Stats.bhQ(exact, "p", Seq("id"), "q", Some(m))) shouldBe
+        qBits(naive(exact, m))
+    }
+    Stats.bh(exact, "p", Seq("id"), "q", Some(16L)).steps.get.ps shouldBe
+      empty
+    val rnd = new scala.util.Random(13)
+    val df = (1 to 600).map(i => (i.toLong,
+      if (i % 97 == 0) 0.0 else math.pow(2, -rnd.nextInt(14))))
+      .toDF("id", "p")
+    for (m <- Seq(None, Some(1000L), Some(4096L))) withClue(s"M = $m: ") {
+      qBits(Stats.bhQ(df, "p", Seq("id"), "q", m)) shouldBe
+        qBits(naive(df, m.getOrElse(600L)))
+    }
+  }
+
+  test("the step path and the walk agree bit for bit") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(29)
+    val df = (1 to 1500).map(i => (i.toLong,
+      if (i % 3 == 0) math.rint(rnd.nextDouble() * 40) / 4000
+      else rnd.nextDouble() * rnd.nextDouble())).toDF("id", "p")
+    for (m <- Seq(None, Some(100L), Some(50000L))) withClue(s"M = $m: ") {
+      val steps = Stats.bh(df, "p", Seq("id"), "q", m)
+      val walked = Stats.bh(df, "p", Seq("id"), "q", m, maxSteps = 0)
+      steps.steps.map(_.ps.length).getOrElse(0) should be > 0
+      walked.steps shouldBe None
+      qBits(steps.scored) shouldBe qBits(walked.scored)
+      walked.largestPBelow(0.05) shouldBe steps.largestPBelow(0.05)
+    }
   }
 }
 

@@ -159,6 +159,31 @@ class PipelineSpec extends AnyFunSuite with Matchers with SparkTest {
     jobs shouldBe empty
   }
 
+  test("a qThreshold outside [0, 1] cannot be built") {
+    // above 1 every pass-1 row would be an outlier, and pass 2 would fail
+    // late on an empty null; a q threshold is a q-value, so it lies in
+    // [0, 1] and the refinement p* is always one of BH's steps
+    val (frags, contacts) = fixture
+    val dir = graft.io.Scratch.sub("fithic_bad_q")
+    graft.io.Tsv.write(frags, s"$dir/frags.gz",
+      graft.io.Tsv.fragmentSchema.fieldNames)
+    graft.io.Tsv.write(contacts, s"$dir/contacts.gz",
+      graft.io.Tsv.contactSchema.fieldNames)
+    val jobs = jobsStartedBy {
+      for (q <- Seq(1.5, -0.01, Double.NaN)) withClue(s"qThreshold $q: ") {
+        val e = the[IllegalArgumentException] thrownBy
+          FitHiCConfig(qThreshold = q)
+        e.getMessage should include("qThreshold")
+      }
+      val e = the[IllegalArgumentException] thrownBy
+        graft.hic.FitHiCMain.run(spark, Array("-i", s"$dir/contacts.gz",
+          "-f", s"$dir/frags.gz", "-o", s"$dir/out", "-p", "2", "-q", "2"))
+      e.getMessage should include("qThreshold")
+    }
+    jobs shouldBe empty
+    for (q <- Seq(0.0, 1.0)) FitHiCConfig(qThreshold = q).qThreshold shouldBe q
+  }
+
   test("every job of the front end carries the caller's job tags") {
     import spark.implicits._
     val (frags, contacts) = fixture
@@ -254,9 +279,10 @@ class PipelineSpec extends AnyFunSuite with Matchers with SparkTest {
       "pass scores") {
     val (frags, contacts) = fixture
     // every pass-1 q is below the threshold, so every pair is an outlier
-    // and pass 2 has nothing to bin
+    // and pass 2 has nothing to bin: M is the observed pair count here,
+    // so every q is at most the largest p, which is below 1
     val cfg = FitHiCConfig(nBins = 3, passes = 2, distLow = 0,
-      distUp = 1000000L, qThreshold = 1.5)
+      distUp = 1000000L, qThreshold = 1.0)
     def scoring(jobs: Seq[org.apache.spark.scheduler.SparkListenerJobStart])
         : Int = jobs.count(_.stageInfos.maxBy(_.stageId).details
       .contains("Pipeline$.score("))
@@ -456,16 +482,12 @@ class FitHiCMainSpec extends AnyFunSuite with Matchers with SparkTest {
     }
   }
 
-  /** Every broadcast hash join in the SQL executions that end while
-    * `body` runs, final adaptive plans and cached plans included.
+  /** The executed plan of every SQL execution that ends while `body`
+    * runs (final adaptive plans).
     */
-  private def broadcastJoins(body: => Unit)
-      : Seq[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec] = {
+  private def executedPlans(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val lastJobEnd = new java.util.concurrent.atomic.AtomicInteger(-1)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -491,16 +513,28 @@ class FitHiCMainSpec extends AnyFunSuite with Matchers with SparkTest {
       while (lastJobEnd.get < marker && System.nanoTime() < deadline)
         Thread.sleep(20)
     } finally spark.sparkContext.removeSparkListener(listener)
-    def joins(p: SparkPlan): Seq[BroadcastHashJoinExec] = p match {
-      case j: BroadcastHashJoinExec => j +: j.children.flatMap(joins)
-      case a: AdaptiveSparkPlanExec => joins(a.executedPlan)
-      case s: QueryStageExec => joins(s.plan)
-      case m: InMemoryTableScanExec => joins(m.relation.cachedPlan)
-      case r: ReusedExchangeExec => joins(r.child)
-      case other => (other.children ++ other.subqueries).flatMap(joins)
-    }
     import scala.jdk.CollectionConverters._
-    plans.asScala.toSeq.flatMap(joins)
+    plans.asScala.toSeq
+  }
+
+  /** Every node of `p`, through adaptive plans, query stages and reused
+    * exchanges, and into the plans that built its cached data when
+    * `intoCaches`.
+    */
+  private def nodes(p: org.apache.spark.sql.execution.SparkPlan,
+      intoCaches: Boolean): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan, intoCaches)
+      case s: QueryStageExec => nodes(s.plan, intoCaches)
+      case m: InMemoryTableScanExec =>
+        if (intoCaches) nodes(m.relation.cachedPlan, intoCaches) else Nil
+      case r: ReusedExchangeExec => nodes(r.child, intoCaches)
+      case other =>
+        (other.children ++ other.subqueries).flatMap(nodes(_, intoCaches))
+    })
   }
 
   test("a repeated -t -p 2 -x All op fits Spark's default codegen cache " +
@@ -522,9 +556,24 @@ class FitHiCMainSpec extends AnyFunSuite with Matchers with SparkTest {
         .METRIC_COMPILATION_TIME.getCount - c0, jobs)
     }
     var first = ""
+    val plans = executedPlans { first = op()._1 }
+    // every significance table is a projection of the front end's
+    // position-ordered layout: its write plans no exchange and no sort
+    val writes = plans.flatMap(nodes(_, intoCaches = false)).collect {
+      case w: org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec => w
+    }
+    writes.size shouldBe 3
+    writes.foreach { w =>
+      nodes(w, intoCaches = false).collect {
+        case x: org.apache.spark.sql.execution.exchange.Exchange => x
+        case x: org.apache.spark.sql.execution.SortExec => x
+      } shouldBe empty
+    }
     // every lookup the op plans joins on one packed long key, so each
     // builds a LongHashedRelation, not a paged UnsafeHashedRelation
-    val bhjs = broadcastJoins { first = op()._1 }
+    val bhjs = plans.flatMap(nodes(_, intoCaches = true)).collect {
+      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
+    }
     bhjs should not be empty
     bhjs.foreach { j =>
       val buildKeys = j.buildSide match {
@@ -539,8 +588,9 @@ class FitHiCMainSpec extends AnyFunSuite with Matchers with SparkTest {
     // op's generated-code working set fits the 100-entry cache
     compiles shouldBe 0L
     // the job census of the CLI op (75 before the shared front end, 53
-    // before the lookups moved to the front end and the threshold null)
-    jobs should be <= 46
+    // before the lookups moved to the front end and the threshold null,
+    // 46 while BH walked a p-ordered layout and each write re-sorted)
+    jobs should be <= 32
     val a = contents(first)
     a.map(_._1) should contain allOf ("t.interOnly.res5000.significances.txt.gz",
       "t.spline_pass2.res5000.significances.txt.gz")

@@ -154,6 +154,34 @@ class ExpressionSpec extends AnyFunSuite with Matchers with SparkTest {
     body(Seq("a")) shouldBe body(Seq("b", "a", "c"))
   }
 
+  test("bh_step: generated and interpreted lookups agree, and the " +
+      "generated code does not depend on the steps") {
+    import org.apache.spark.sql.Row
+    val ps = Array(1e-9, 0.001, 0.25)
+    val qs = Array(0.0, 0.02, 0.5)
+    // an RDD source, so the projection is not folded into a local relation
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+        Seq(1e-9, 0.001, 0.0010000000000000002, 0.25, 0.3, 1.0).map(Row(_)),
+        2), org.apache.spark.sql.types.StructType.fromDDL("p DOUBLE"))
+    val got = df.select(graft.functions.BhStep.column(ps, qs)(col("p")))
+      .collect().map(_.getDouble(0)).toSeq
+    got shouldBe Seq(0.0, 0.02, 1.0, 0.5, 1.0, 1.0)
+    val e = graft.functions.BhStep(
+      org.apache.spark.sql.catalyst.expressions.BoundReference(0,
+        org.apache.spark.sql.types.DoubleType, nullable = false), ps, qs)
+    df.collect().map(r => e.eval(
+      org.apache.spark.sql.catalyst.InternalRow(r.getDouble(0)))).toSeq shouldBe
+      got
+    def body(ps: Array[Double], qs: Array[Double]) = df
+      .select(graft.functions.BhStep.column(ps, qs)(col("p")))
+      .queryExecution.executedPlan.collectFirst {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+          w.doCodeGen()._2.body
+      }
+    body(ps, qs) shouldBe defined
+    body(ps, qs) shouldBe body(Array.empty, Array.empty)
+  }
+
   test("GraftExtensions injects binom_sf at session build") {
     // the extension class is instantiable and registers without error
     val ext = new graft.functions.GraftExtensions()
