@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expression for a BH q-value as a step function of p
-  * (SURVEY.md A19, `hic.Stats.bh`): `qs(i)` for a p equal to `ps(i)`, and
+  * (SURVEY.md A19, `hic.Stats.bhQ`): `qs(i)` for a p equal to `ps(i)`, and
   * 1.0 for every other p. `ps` holds distinct p values in ascending
   * order. The match is on the exact double, so the column must recompute
   * the same p bits the steps were built from.

@@ -239,7 +239,7 @@ object HicQueries {
         s", kf AS (SELECT chr, mid1, mid2, CAST(contactCount AS DOUBLE) " +
         s"AS w FROM c WHERE dist BETWEEN $L AND $U), " +
         // symmetric edge list: both directions per off-diagonal pair,
-        // the diagonal once — mirrors Kr.biases' union
+        // the diagonal once — mirrors ChrSolver.symmetric
         "e AS (SELECT chr, mid1 AS i, mid2 AS j, w FROM kf " +
         "UNION ALL SELECT chr, mid2 AS i, mid1 AS j, w FROM kf " +
         "WHERE mid1 <> mid2), " +
@@ -432,9 +432,9 @@ object HicQueries {
         // of its cached input (its steps fit the driver), pass 2's BH
         // re-reads that cache too.
         val bh1 = Stats.bhQ(standingView(spark, dir), "pseudo_p", keys,
-          "q1")
+          "q1").scored
         val c2 = bh1.filter(col("q1") >= 0.05).drop("q1")
-        Stats.bhQ(c2, "pseudo_p", keys, "q_value")
+        Stats.bhQ(c2, "pseudo_p", keys, "q_value").scored
           .select(col("chr"), col("mid1"), col("mid2"), col("contactCount"),
             Cols.fround(col("pseudo_p"), 6).as("pseudo_p"),
             Cols.fround(col("q_value"), 6).as("q_value"))
@@ -606,7 +606,7 @@ object HicQueries {
             Fragments.loci(HicStream.locusUpdates(contactPairs(c))), L, U)
           .possible.intraInRange
         Stats.bhQ(c.filter(col("dist").between(L, U)), "pseudo_p", keys,
-            "q_value", Some(m))
+            "q_value", Some(m)).scored
           .select(col("chr"), col("mid1"), col("mid2"), col("contactCount"),
             lit(m).as("m_possible"),
             Cols.fround(col("pseudo_p"), 6).as("pseudo_p"),
@@ -733,7 +733,7 @@ object HicQueries {
             Fragments.loci(HicStream.locusUpdates(v)), L, U)
           .possible.interAll
         Stats.bhQ(v, "pseudo_p", Seq("chr1", "mid1", "chr2", "mid2"),
-            "q_value", Some(m))
+            "q_value", Some(m)).scored
           .select(col("chr1"), col("mid1"), col("chr2"), col("mid2"),
             col("contactCount"),
             Cols.fround(lit(1e6) / m, 6).as("prior_ppm"),
@@ -761,7 +761,7 @@ object HicQueries {
     "q_hic_bh" -> Q(
       (spark, dir) => {
         val c = standingView(spark, dir)
-        Stats.bhQ(c, "pseudo_p", Seq("chr", "mid1", "mid2"), "q_value")
+        Stats.bhQ(c, "pseudo_p", Seq("chr", "mid1", "mid2"), "q_value").scored
           .select(col("chr"), col("mid1"), col("mid2"), col("contactCount"),
             Cols.fround(col("pseudo_p"), 6).as("pseudo_p"),
             Cols.fround(col("q_value"), 6).as("q_value"))

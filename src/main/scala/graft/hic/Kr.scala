@@ -3,6 +3,8 @@ package graft.hic
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Caches
+
 /** Matrix-balancing bias computation (SURVEY.md A22, the HiCKRy utility).
   *
   * Produces the per-locus bias vector b with (B W B) doubly stochastic —
@@ -13,18 +15,9 @@ import org.apache.spark.sql.functions._
   * solving and reported with bias −1, mirroring the reference's percentile
   * trim.
   *
-  * Hybrid execution (SURVEY M4): balancing is independent per chromosome,
-  * so a chromosome whose edge list fits one task is solved IN-TASK by a
-  * primitive-array Sinkhorn kernel inside `flatMapGroups` — one shuffle on
-  * chr, zero per-iteration jobs. Chromosomes above `maxEdgesPerTask` fall
-  * back to the distributed per-iteration join path (edge list stays
-  * sharded; only the O(loci) bias vector moves per iteration). The default
-  * cap (2M edges: peak task footprint ≈ 300 MB — the transient boxed
-  * tuple array from the group iterator dominates before the primitive
-  * conversion frees it; at most one task per chromosome runs) keeps
-  * every real-genome
-  * chromosome at Hi-C resolutions in-task while the fallback covers
-  * ultra-fine resolutions at 100 TB.
+  * Balancing is independent per chromosome: [[ChrSolver]] routes each
+  * chromosome to the in-task kernel ([[balance]]) or to the distributed
+  * per-iteration join path ([[solveDistributed]]).
   */
 object Kr {
   /** contacts: (chr1, mid1, chr2, mid2, contactCount); intra-chromosomal
@@ -33,111 +26,25 @@ object Kr {
     * input, −1 for trimmed loci, 1 for kept loci with no kept partners.
     */
   def biases(contacts: DataFrame, trimPercentile: Double = 0.05,
-      iterations: Int = 20, maxEdgesPerTask: Long = 2000000L): DataFrame = {
-    val intra = contacts.filter(col("chr1") === col("chr2"))
-    // symmetric edge list: each undirected pair contributes both ways;
-    // the diagonal once. NOT persisted here: the in-task path consumes it
-    // exactly once (the chr shuffle), so routing on the pre-union pair
-    // counts below (edges/chr = 2·pairs − diagonals) saves the whole
-    // doubled-union materialization — measured ~2 s off the pipeline's
-    // serial prefix at sf0.1. The distributed path, which does traverse
-    // the list twice, persists its own filtered slice.
-    val edges = intra.select(col("chr1").as("chr"), col("mid1").as("i"),
-        col("mid2").as("j"), col("contactCount").cast("double").as("w"))
-      .unionByName(intra.filter(col("mid1") =!= col("mid2"))
-        .select(col("chr1").as("chr"), col("mid2").as("i"),
-          col("mid1").as("j"), col("contactCount").cast("double").as("w")))
-
-    // Route each chromosome by edge count. Fast path first: ONE narrow
-    // count of the intra pair rows (cheap over a cached upstream — no
-    // shuffle). If even the WHOLE symmetric edge list fits one task
-    // (2·pairs is an upper bound on edges), every chromosome does, and
-    // the per-chromosome groupBy routing job is skipped entirely — it
-    // was ~1 s of serial prefix in front of the pipeline at test SF.
-    // The exact per-chr routing only runs when the total is above the
-    // cap (the scale path, where its cost is amortized by the solve).
-    val totalPairs = intra.count()
-    val allSmall = totalPairs * 2 <= maxEdgesPerTask
-    val (small, big): (Seq[String], Seq[String]) =
-      if (allSmall) (Nil, Nil)
-      else {
-        val sizes = intra.groupBy(col("chr1"))
-          .agg((count(lit(1)) * 2 -
-            sum(when(col("mid1") === col("mid2"), 1L).otherwise(0L)))
-            .as("ne"))
-          .collect()
-          .map(r => r.getString(0) -> r.getLong(1))
-        (sizes.filter(_._2 <= maxEdgesPerTask).map(_._1).toSeq,
-          sizes.filter(_._2 > maxEdgesPerTask).map(_._1).toSeq)
-      }
-    val parts =
-      (if (totalPairs == 0L) Nil
-       else if (allSmall) // fast path: no per-chr filter needed
-         List(solveInTask(edges, trimPercentile, iterations))
-       else if (small.isEmpty) Nil
-       else List(solveInTask(edges.filter(col("chr")
-         .isInCollection(small)), trimPercentile, iterations))) ++
-      (if (big.isEmpty) Nil
-       else List(solveDistributed(graft.ops.Caches.register(
-         edges.filter(col("chr").isInCollection(big)).persist()),
-         trimPercentile, iterations)))
-    parts match {
-      case Nil => // no intra edges at all → empty bias table, not a crash
-        val spark = contacts.sparkSession
-        import spark.implicits._
-        Seq.empty[(String, Long, Double)].toDF("chr", "mid", "bias")
-      case ps => ps.reduce(_ unionByName _)
-    }
+      iterations: Int = 20): DataFrame = {
+    val pairs = contacts.filter(col("chr1") === col("chr2"))
+      .select(col("chr1").as("chr"), col("mid1"), col("mid2"),
+        col("contactCount").cast("double").as("w"))
+    ChrSolver.solve(pairs, ChrSolver.symmetric(pairs), "mid", "bias")(
+      balance(_, trimPercentile, iterations))(
+      solveDistributed(_, trimPercentile, iterations))
   }
 
-  /** Small-chromosome path: one shuffle on chr, then the whole
-    * trim/loner/Sinkhorn solve runs in-task on primitive arrays. Edges are
-    * sorted canonically before accumulation so float sums are
-    * bit-deterministic regardless of shuffle arrival order.
+  /** The in-task solve: trim, loner marking and Sinkhorn on one
+    * chromosome's primitive arrays.
     */
-  private def solveInTask(edges: DataFrame, trim: Double,
-      iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    edges.select(col("chr"), col("i"), col("j"), col("w"))
-      .as[(String, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups((chr, it) => solveChr(chr, it, trim, iters))
-      .toDF("chr", "mid", "bias")
-  }
-
-  private def solveChr(chr: String,
-      it: Iterator[(String, Long, Long, Double)], trim: Double,
-      iters: Int): Iterator[(String, Long, Double)] = {
-    // block-scope the boxed tuple array: after conversion to primitive
-    // columns it is garbage — peak task memory is then the primitive
-    // arrays (~20 B/edge), not the tuples (~56 B/edge)
-    val (mids, ia, ja, wa) = {
-      val es = it.toArray
-      // w included in the sort key so duplicate (i, j) entries cannot
-      // keep shuffle-arrival order (stable sort) and vary the float
-      // accumulation order across partitionings
-      es.sortInPlaceBy(e => (e._2, e._3, e._4))
-      // the symmetric edge list's i side covers every endpoint
-      val mids0 = es.map(_._2).distinct.sorted
-      val ne0 = es.length
-      val ia0 = new Array[Int](ne0)
-      val ja0 = new Array[Int](ne0)
-      val wa0 = new Array[Double](ne0)
-      var k0 = 0
-      while (k0 < ne0) {
-        ia0(k0) = java.util.Arrays.binarySearch(mids0, es(k0)._2)
-        ja0(k0) = java.util.Arrays.binarySearch(mids0, es(k0)._3)
-        wa0(k0) = es(k0)._4
-        k0 += 1
-      }
-      (mids0, ia0, ja0, wa0)
-    }
+  private def balance(e: ChrSolver.Edges, trim: Double,
+      iters: Int): Array[Double] = {
+    val ChrSolver.Edges(mids, ia, ja, wa) = e
     val n = mids.length
     val ne = ia.length
-    var k = 0
     val cov = new Array[Double](n)
-    k = 0
+    var k = 0
     while (k < ne) { cov(ia(k)) += wa(k); k += 1 }
     // exact percentile, same formula as Spark/DuckDB `percentile`:
     // sorted[p·(n−1)] with linear interpolation
@@ -191,12 +98,10 @@ object Kr {
     i = 0
     while (i < n) { if (conn(i)) sumB += b(i); i += 1 }
     val meanB = sumB / nConn
-    mids.indices.iterator.map { ix =>
-      val bias =
-        if (!keep(ix)) -1.0 // trimmed
-        else if (!conn(ix)) 1.0 // loner: every partner trimmed
-        else b(ix) / meanB
-      (chr, mids(ix), bias)
+    Array.tabulate(n) { ix =>
+      if (!keep(ix)) -1.0 // trimmed
+      else if (!conn(ix)) 1.0 // loner: every partner trimmed
+      else b(ix) / meanB
     }
   }
 
@@ -210,8 +115,10 @@ object Kr {
     * exactly with the in-task path's interpolated formula, so a
     * chromosome crossing the routing boundary cannot change its trim set.
     */
-  private def solveDistributed(edges: DataFrame, trimPercentile: Double,
+  private def solveDistributed(slice: DataFrame, trimPercentile: Double,
       iterations: Int): DataFrame = {
+    // the slice is read twice (marg and the kept edges)
+    val edges = Caches.register(slice.persist())
     // cov is a sum of INTEGER-VALUED doubles (contact counts): exact
     // under any partial-merge order below 2^53, so the threshold input —
     // and hence the trim set — is bit-deterministic and agrees with the
@@ -219,7 +126,7 @@ object Kr {
     // Persist the O(loci) marg: kept/trimmed/loners derive from it three
     // ways and would otherwise each re-run the full-edge aggregation +
     // percentile before the first Sinkhorn iteration.
-    val marg = graft.ops.Caches.register(
+    val marg = Caches.register(
       edges.groupBy("chr", "i").agg(sum(col("w")).as("cov")).persist())
     val thresholds = marg.groupBy("chr")
       .agg(expr(s"percentile(cov, $trimPercentile)").as("thr"))
@@ -230,28 +137,20 @@ object Kr {
       .filter(col("cov") < col("thr"))
       .select(col("chr"), col("i").as("mid"), lit(-1.0).as("bias"))
 
-    // pre-partition on the per-iteration join key: the cached layout then
-    // satisfies the join's clustering, so each Sinkhorn iteration shuffles
-    // only the O(#loci) bias vector — never the edge list again
-    val keptEdges = edges
+    val keptEdges = ChrSolver.byJ(edges
       .join(kept, Seq("chr", "i"), "left_semi")
-      .join(kept.withColumnRenamed("i", "j"), Seq("chr", "j"), "left_semi")
-      .repartition(col("chr"), col("j"))
-      .sortWithinPartitions(col("chr"), col("j"))
-      .persist()
-    graft.ops.Caches.register(keptEdges)
+      .join(kept.withColumnRenamed("i", "j"), Seq("chr", "j"), "left_semi"))
 
     // a kept locus whose partners were ALL trimmed has no kept edges: it
     // can't be balanced — report it with bias 1 (not silently dropped),
     // and keep the hot iteration loop on pure inner joins
-    val connected = graft.ops.Caches.register(
+    val connected = Caches.register(
       keptEdges.select("chr", "i").distinct().persist())
     val loners = kept.join(connected, Seq("chr", "i"), "left_anti")
       .select(col("chr"), col("i").as("mid"), lit(1.0).as("bias"))
 
-    var bias = connected.withColumn("b", lit(1.0))
-    var prevCkpt: org.apache.spark.sql.DataFrame = null
-    for (iter <- 1 to iterations) {
+    val biasOut = ChrSolver.iterate(connected.withColumn("b", lit(1.0)),
+        iterations, "kr_bias") { bias =>
       val rs = keptEdges
         .join(bias.select(col("chr"), col("i").as("j"),
           col("b").as("bj")), Seq("chr", "j"))
@@ -261,26 +160,10 @@ object Kr {
         .withColumn("rowsum", col("s") / col("b"))
       val means = joined.groupBy("chr")
         .agg((sum(col("rowsum")) / count(lit(1))).as("mean_rs"))
-      bias = joined.join(broadcast(means), "chr")
+      joined.join(broadcast(means), "chr")
         .select(col("chr"), col("i"),
           (col("b") * sqrt(col("rowsum") / col("mean_rs"))).as("b"))
-      // cut the lineage every iteration: bias feeds the next round twice
-      // (rowsum join + mean), so an un-checkpointed plan doubles per
-      // iteration and recomputation explodes (measured 6× slower when
-      // checkpointing every 3rd, ~2× when every 2nd)
-      bias = bias.localCheckpoint(eager = true)
-      // the eager checkpoint has materialized every consumer of the
-      // previous iterate — release its blocks now (plain unpersist is a
-      // no-op on checkpoints); the FINAL iterate stays alive for the
-      // returned plan and is released at Caches.drain()
-      if (prevCkpt != null) graft.ops.Caches.releaseLocalCheckpoint(prevCkpt)
-      prevCkpt = if (iter < iterations) bias else null
     }
-    // drain-immune handoff: the returned plan reads the final iterate
-    // from scratch parquet (a registered checkpoint would be released
-    // by ANY concurrent caller's drain with the lineage already
-    // truncated — the reader then crashes instead of recomputing)
-    val biasOut = graft.ops.Caches.parquetHandoff(bias, "kr_bias")
     // fix the free scale: report biases with per-chromosome mean 1 (the
     // conventional normalization — downstream clamps to [0.5, 2])
     val scale = biasOut.groupBy("chr")

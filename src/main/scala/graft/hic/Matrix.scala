@@ -76,7 +76,9 @@ object Matrix {
 
   /** Symmetric cell map (chr, lo ≤ hi, cnt) — the probe target shared by
     * the loop donut, APA, and any neighborhood lookup. Persisted: probed
-    * by several broadcast legs per query.
+    * by several broadcast legs per query: the first leg's cache stage
+    * fills it and the others read its blocks, so the cell map is scanned
+    * once per query.
     */
   private def symCells(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
@@ -93,14 +95,7 @@ object Matrix {
         .agg(sum(col("contactCount")).as("cnt"))
         .write.mode("overwrite").parquet(p)
     }
-    val sym = graft.ops.Caches.register(spark.read.parquet(p).persist())
-    // every consumer (loops, APA) reads sym from several broadcast legs
-    // at once — fill the cache HERE so racing futures never each
-    // recompute the cell aggregation (the Graph.triangles lesson,
-    // measured ~3x); at the helper, not per call site, so new consumers
-    // can't reintroduce the race
-    sym.count()
-    sym
+    graft.ops.Caches.register(spark.read.parquet(p).persist())
   }
 
   /** Top-100 donut-filtered loop calls (q_hic_loops' scoring, shared
@@ -166,6 +161,26 @@ object Matrix {
     "(cnt * 112000) // GREATEST(donut_sum, 1) AS enr_milli FROM donut " +
     "ORDER BY enr_milli DESC, chr, lo, hi LIMIT 100)"
 
+  /** `contacts` (chr, dist, contactCount, ...) joined to its expected
+    * table: `sumc`, the summed count, and `npairs`, the observed pairs at
+    * each (chr, dist). The table is bounded by #chr × #distances and
+    * broadcast back over the pairs.
+    */
+  def withExpected(contacts: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val exp = contacts.groupBy("chr", "dist")
+      .agg(sum(col("contactCount")).as("sumc"),
+        count(lit(1)).as("npairs"))
+    contacts.join(broadcast(exp), Seq("chr", "dist"))
+  }
+
+  /** Observed/expected over [[withExpected]]'s columns: the count over
+    * the mean count at its (chr, dist), in doubles.
+    */
+  val obsExp: org.apache.spark.sql.Column =
+    col("contactCount").cast("double") /
+      (col("sumc").cast("double") / col("npairs").cast("double"))
+
   /** Saddle aggregation (Imakaev/Mirny convention): rank each locus into
     * one of `q` per-chromosome quantiles by `loci.score` (ties broken by
     * mid), then aggregate the O/E of every in-range pair into the
@@ -175,27 +190,27 @@ object Matrix {
     * oracle-hashable; mean O/E per cell = sum_oeq / n / 1e6.
     *
     * Scale shape: the expected table is (chr, dist)-bounded and
-    * broadcast; the rank table is loci-sized and joined by (chr, mid) —
-    * two key-partitioned joins and one q²-cell aggregation, nothing
-    * all-pairs beyond the contact set itself.
+    * broadcast; the rank table is loci-sized and broadcast to both
+    * (chr, mid) joins, then one q²-cell aggregation — nothing all-pairs
+    * beyond the contact set itself. The rank hint is explicit: left to
+    * AQE, the first join's build side depends on whether the rank
+    * table's stages finish before AQE re-plans that join, so the job
+    * count would vary from run to run.
     */
   def saddle(contacts: org.apache.spark.sql.DataFrame,
       loci: org.apache.spark.sql.DataFrame,
       q: Int): org.apache.spark.sql.DataFrame = {
-    val exp = contacts.groupBy("chr", "dist")
-      .agg(sum(col("contactCount")).as("sumc"),
-        count(lit(1)).as("npairs"))
-    val oeq = contacts.join(broadcast(exp), Seq("chr", "dist"))
+    val oeq = withExpected(contacts)
       .withColumn("oe_q",
         expr("contactCount * npairs * 1000000 DIV sumc"))
     val ranks = loci.select(col("chr"), col("mid"),
       ntile(q).over(Window.partitionBy("chr")
         .orderBy("score", "mid")).as("qt"))
     oeq
-      .join(ranks.select(col("chr"), col("mid").as("mid1"),
-        col("qt").as("q1")), Seq("chr", "mid1"))
-      .join(ranks.select(col("chr"), col("mid").as("mid2"),
-        col("qt").as("q2")), Seq("chr", "mid2"))
+      .join(broadcast(ranks.select(col("chr"), col("mid").as("mid1"),
+        col("qt").as("q1"))), Seq("chr", "mid1"))
+      .join(broadcast(ranks.select(col("chr"), col("mid").as("mid2"),
+        col("qt").as("q2"))), Seq("chr", "mid2"))
       .groupBy(least(col("q1"), col("q2")).as("qi"),
         greatest(col("q1"), col("q2")).as("qj"))
       .agg(count(lit(1)).as("n"),
@@ -358,15 +373,10 @@ object Matrix {
         // shape on both sides keep the hash exact.
         val c = HicQueries.standingView(spark, dir)
           .filter(col("dist").between(HicQueries.L, HicQueries.U))
-        val exp = c.groupBy("chr", "dist")
-          .agg(sum(col("contactCount")).as("sumc"),
-            count(lit(1)).as("npairs"))
-        c.join(broadcast(exp), Seq("chr", "dist"))
+        withExpected(c)
           .select(col("chr"), col("mid1"), col("mid2"), col("dist"),
             col("contactCount"), col("npairs"),
-            Cols.fround(col("contactCount").cast("double") /
-              (col("sumc").cast("double") / col("npairs").cast("double")),
-              8).as("oe"))
+            Cols.fround(obsExp, 8).as("oe"))
           .orderBy("chr", "mid1", "mid2")
       },
       Some(ContactsView.cte + ", r AS (SELECT * FROM c WHERE dist " +

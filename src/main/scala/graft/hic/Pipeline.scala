@@ -262,7 +262,7 @@ object Pipeline {
     */
   private def score(fe: FrontEnd, cls: String, xs: Array[Double],
       ys: Array[Double], n: Long, m: Long): Stats.Bh =
-    Stats.bh(fe.pairs.filter(col("cls") === cls)
+    Stats.bhQ(fe.pairs.filter(col("cls") === cls)
         .select((keys.map(col) :+ col("contactCount") :+
           pValue(xs, ys, n).as("p_value")): _*),
       "p_value", keys, "q_value", Some(m))

@@ -36,7 +36,7 @@ object Stats {
       * otherwise one narrow pass over `scored` finds it.
       */
     def largestPBelow(qThr: Double): Double = {
-      require(qThr <= 1.0, s"bh: q threshold must be <= 1, got $qThr")
+      require(qThr <= 1.0, s"bhQ: q threshold must be <= 1, got $qThr")
       steps match {
         case Some(s) =>
           val i = s.qs.lastIndexWhere(_ < qThr)
@@ -55,13 +55,6 @@ object Stats {
       }
     }
   }
-
-  /** Benjamini–Hochberg q-values (SURVEY A19): `df` with `qCol` added.
-    * See [[bh]].
-    */
-  def bhQ(df: DataFrame, pCol: String, tieCols: Seq[String], qCol: String,
-      mOpt: Option[Long] = None): DataFrame =
-    bh(df, pCol, tieCols, qCol, mOpt).scored
 
   /** Benjamini–Hochberg q-values (SURVEY A19), scalable.
     *
@@ -94,14 +87,14 @@ object Stats {
     * p · M / rank does not fall with the rank), the rows are walked over
     * a p-descending layout instead ([[walk]]).
     */
-  def bh(df: DataFrame, pCol: String, tieCols: Seq[String], qCol: String,
+  def bhQ(df: DataFrame, pCol: String, tieCols: Seq[String], qCol: String,
       mOpt: Option[Long] = None): Bh =
-    bh(df, pCol, tieCols, qCol, mOpt, MaxSteps)
+    bhQ(df, pCol, tieCols, qCol, mOpt, MaxSteps)
 
-  /** [[bh]] with the step bound as a parameter, so a test can force the
+  /** [[bhQ]] with the step bound as a parameter, so a test can force the
     * walk.
     */
-  private[graft] def bh(df: DataFrame, pCol: String, tieCols: Seq[String],
+  private[graft] def bhQ(df: DataFrame, pCol: String, tieCols: Seq[String],
       qCol: String, mOpt: Option[Long], maxSteps: Int): Bh = {
     val persisted = !GlobalOrder.readsCachesOnly(df)
     val src = if (persisted) Caches.register(df.persist()) else df

@@ -432,9 +432,10 @@ class AnalyticsSpec extends AnyFunSuite with Matchers with SparkTest {
     val c = hic.ContactsView(spark, dir)
       .filter(col("dist").between(hic.HicQueries.L, hic.HicQueries.U))
     def collectScores(maxEdges: Long) =
-      hic.Compartments.scores(c, maxEdgesPerTask = maxEdges)
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      hic.ChrSolver.maxEdges.withValue(maxEdges) {
+        hic.Compartments.scores(c).collect()
+          .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      }
     val inTask = collectScores(Long.MaxValue)
     val dist = collectScores(0L)
     inTask.keySet shouldBe dist.keySet
@@ -442,6 +443,50 @@ class AnalyticsSpec extends AnyFunSuite with Matchers with SparkTest {
       // identical semantics, different float-accumulation order
       math.abs(s - dist(k)) should be < 1e-9
     }
+  }
+
+  test("compartments: a call routing one chromosome in-task and one " +
+      "distributed agrees with the all-in-task run") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(3)
+    def chr(name: String, n: Int) = for {
+      i <- 0 until n; j <- i until n
+      if rnd.nextDouble() < 0.8
+    } yield (name, 2500L + 5000L * i, 2500L + 5000L * j, 5000L * (j - i),
+      rnd.nextInt(50).toLong + 1L)
+    val contacts = (chr("big", 14) ++ chr("small", 8))
+      .toDF("chr", "mid1", "mid2", "dist", "contactCount")
+    // edges per chromosome: 2·pairs − diagonals
+    val edges = contacts.groupBy("chr")
+      .agg((count(lit(1)) * 2 -
+        sum(when(col("mid1") === col("mid2"), 1L).otherwise(0L))).as("ne"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    edges("small") should be < edges("big")
+    val iterations = 30
+    def collectScores(maxEdges: Long) = {
+      var scores = Map.empty[(String, Long), Double]
+      val jobs = jobsStartedBy {
+        val rows = hic.ChrSolver.maxEdges.withValue(maxEdges) {
+          hic.Compartments.scores(contacts, iterations).collect()
+            .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2))
+        }
+        scores = rows.toMap
+        scores.size shouldBe rows.length // each bin from one path only
+      }
+      (scores, jobs.size)
+    }
+    val (inTask, inTaskJobs) = collectScores(Long.MaxValue)
+    // the cap sits between the two: "small" fits a task, "big" does not
+    val (mixed, mixedJobs) = collectScores(edges("small"))
+    mixedJobs should be > inTaskJobs + iterations // big ran distributed
+    mixed.keySet shouldBe inTask.keySet
+    inTask.foreach { case (k, s) =>
+      math.abs(s - mixed(k)) should be < 1e-9
+    }
+    // the in-task chromosome runs the same kernel either way
+    mixed.filter(_._1._1 == "small") shouldBe
+      inTask.filter(_._1._1 == "small")
+    ops.Caches.drain()
   }
 
   test("saddle: planted two-block matrix puts strength in the corners") {
@@ -460,8 +505,7 @@ class AnalyticsSpec extends AnyFunSuite with Matchers with SparkTest {
     }
     val contacts = rows
       .toDF("chr", "mid1", "mid2", "dist", "contactCount")
-    val loci = hic.Compartments.scores(contacts, iterations = 30,
-        maxEdgesPerTask = Long.MaxValue)
+    val loci = hic.Compartments.scores(contacts, iterations = 30)
       .select(col("chr"), col("bin").as("mid"), col("score"))
     val cells = hic.Matrix.saddle(contacts, loci, 2).collect()
       .map(r => (r.getInt(0), r.getInt(1)) ->

@@ -132,7 +132,7 @@ class BhSpec extends AnyFunSuite with Matchers with SparkTest {
     val rnd = new scala.util.Random(11)
     val df = (1 to 400).map(i =>
       (i.toLong, math.rint(rnd.nextDouble() * 20) / 20)).toDF("id", "p")
-    val got = Stats.bhQ(df, "p", Seq("id"), "q").select("id", "q")
+    val got = Stats.bhQ(df, "p", Seq("id"), "q").scored.select("id", "q")
     val w = Window.orderBy("p", "id")
     val wDesc = Window.orderBy(col("rk").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -167,7 +167,7 @@ class BhSpec extends AnyFunSuite with Matchers with SparkTest {
       for (parts <- Seq(1, 4, 64); m <- Seq(None, Some(3 * n + 7))) {
         spark.conf.set(key, parts.toString)
         withClue(s"$parts partitions, M = $m: ") {
-          bits(Stats.bhQ(df, "p", Seq("id"), "q", m)) shouldBe
+          bits(Stats.bhQ(df, "p", Seq("id"), "q", m).scored) shouldBe
             bits(naive(m.getOrElse(n)))
         }
       }
@@ -178,7 +178,7 @@ class BhSpec extends AnyFunSuite with Matchers with SparkTest {
     val df = Seq((1L, Some(0.2)), (2L, None), (3L, Some(0.7)))
       .toDF("id", "p")
     val e = intercept[Exception](
-      Stats.bhQ(df, "p", Seq("id"), "q").collect())
+      Stats.bhQ(df, "p", Seq("id"), "q").scored.collect())
     Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .map(t => String.valueOf(t.getMessage)).mkString("\n") should
       include("bhQ: null p")
@@ -186,7 +186,7 @@ class BhSpec extends AnyFunSuite with Matchers with SparkTest {
   test("BH with M=1 gives q = min(1, p)") {
     import spark.implicits._
     val df = Seq((1L, 0.4)).toDF("id", "p")
-    val q = Stats.bhQ(df, "p", Seq("id"), "q", Some(1L))
+    val q = Stats.bhQ(df, "p", Seq("id"), "q", Some(1L)).scored
       .select("q").first().getDouble(0)
     q shouldBe 0.4
   }
@@ -198,13 +198,15 @@ class BhSpec extends AnyFunSuite with Matchers with SparkTest {
     val rnd = new scala.util.Random(31)
     val df = (1 to 800).map(i => (i.toLong, rnd.nextDouble()))
       .toDF("id", "p")
-    val bh1 = Stats.bhQ(df, "p", Seq("id"), "q1")
+    val bh1 = Stats.bhQ(df, "p", Seq("id"), "q1").scored
     val kept = bh1.filter(col("q1") >= 0.3).drop("q1")
     val fresh = kept.collect().map(r => (r.getLong(0), r.getDouble(1)))
       .toSeq.toDF("id", "p")
     fresh.count() should (be > 0L and be < 800L)
-    val filtered = Stats.bhQ(kept, "p", Seq("id"), "q").select("id", "q")
-    val direct = Stats.bhQ(fresh, "p", Seq("id"), "q").select("id", "q")
+    val filtered = Stats.bhQ(kept, "p", Seq("id"), "q").scored
+      .select("id", "q")
+    val direct = Stats.bhQ(fresh, "p", Seq("id"), "q").scored
+      .select("id", "q")
     filtered.except(direct).count() shouldBe 0
     direct.except(filtered).count() shouldBe 0
   }
@@ -218,7 +220,7 @@ class BhSpec extends AnyFunSuite with Matchers with SparkTest {
     val rnd = new scala.util.Random(17)
     val df = (1 to 900).map(i => (i.toLong, rnd.nextDouble()))
       .toDF("id", "p")
-    val bh = Stats.bhQ(df, "p", Seq("id"), "q")
+    val bh = Stats.bhQ(df, "p", Seq("id"), "q").scored
     val direct = bh.select("id", "q").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val other = (1 to 500).map(i => (-i.toLong, 0.5)).toDF("id", "p")
@@ -250,7 +252,8 @@ class BhSpec extends AnyFunSuite with Matchers with SparkTest {
       if (i % 50 == 0) Double.NaN else rnd.nextDouble())).toDF("id", "p")
     for (parts <- Seq(1, 4)) withClue(s"$parts partitions: ") {
       val e = intercept[Exception](
-        Stats.bhQ(df.repartition(parts), "p", Seq("id"), "q").collect())
+        Stats.bhQ(df.repartition(parts), "p", Seq("id"), "q").scored
+          .collect())
       Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .map(t => String.valueOf(t.getMessage)).mkString("\n") should
         include("bhQ: NaN p")
@@ -265,7 +268,7 @@ class BhSpec extends AnyFunSuite with Matchers with SparkTest {
     val df = (1 to 300).map(i => (i.toLong, 0.5 + rnd.nextDouble() / 2))
       .toDF("id", "p")
     var bh: Stats.Bh = null
-    val jobs = jobsStartedBy { bh = Stats.bh(df, "p", Seq("id"), "q",
+    val jobs = jobsStartedBy { bh = Stats.bhQ(df, "p", Seq("id"), "q",
       Some(3000L)) }
     jobs.size shouldBe 1
     bh.steps.map(_.ps.length) shouldBe Some(0)
@@ -282,7 +285,7 @@ class BhSpec extends AnyFunSuite with Matchers with SparkTest {
     val df = (1 to 400).map(i => (i.toLong, (1 + rnd.nextInt(37)) * 1e-5))
       .toDF("id", "p")
     var bh: Stats.Bh = null
-    val jobs = jobsStartedBy { bh = Stats.bh(df, "p", Seq("id"), "q") }
+    val jobs = jobsStartedBy { bh = Stats.bhQ(df, "p", Seq("id"), "q") }
     jobs.size shouldBe 2
     bh.steps.map(_.ps.length) shouldBe
       Some(df.select("p").distinct().count().toInt)
@@ -298,7 +301,7 @@ class BhSpec extends AnyFunSuite with Matchers with SparkTest {
     val ps = Seq.fill(3)(0.05) ++ Seq.fill(5)(0.7) ++ Seq.fill(2)(1.0)
     val df = ps.zipWithIndex.map { case (p, i) => (i.toLong, p) }
       .toDF("id", "p")
-    val bh = Stats.bh(df, "p", Seq("id"), "q")
+    val bh = Stats.bhQ(df, "p", Seq("id"), "q")
     val q = bh.scored.collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     (3 until 8).map(i => q(i.toLong)).toSet shouldBe Set(0.7 * 10 / 8)
     (8 until 10).map(i => q(i.toLong)).toSet shouldBe Set(1.0)
@@ -317,17 +320,17 @@ class BhSpec extends AnyFunSuite with Matchers with SparkTest {
     val exact = (Seq.fill(4)(0.25) ++ Seq.fill(4)(0.5)).zipWithIndex
       .map { case (p, i) => (i.toLong, p) }.toDF("id", "p")
     for (m <- Seq(15L, 16L, 17L)) withClue(s"M = $m: ") {
-      qBits(Stats.bhQ(exact, "p", Seq("id"), "q", Some(m))) shouldBe
+      qBits(Stats.bhQ(exact, "p", Seq("id"), "q", Some(m)).scored) shouldBe
         qBits(naive(exact, m))
     }
-    Stats.bh(exact, "p", Seq("id"), "q", Some(16L)).steps.get.ps shouldBe
+    Stats.bhQ(exact, "p", Seq("id"), "q", Some(16L)).steps.get.ps shouldBe
       empty
     val rnd = new scala.util.Random(13)
     val df = (1 to 600).map(i => (i.toLong,
       if (i % 97 == 0) 0.0 else math.pow(2, -rnd.nextInt(14))))
       .toDF("id", "p")
     for (m <- Seq(None, Some(1000L), Some(4096L))) withClue(s"M = $m: ") {
-      qBits(Stats.bhQ(df, "p", Seq("id"), "q", m)) shouldBe
+      qBits(Stats.bhQ(df, "p", Seq("id"), "q", m).scored) shouldBe
         qBits(naive(df, m.getOrElse(600L)))
     }
   }
@@ -339,8 +342,8 @@ class BhSpec extends AnyFunSuite with Matchers with SparkTest {
       if (i % 3 == 0) math.rint(rnd.nextDouble() * 40) / 4000
       else rnd.nextDouble() * rnd.nextDouble())).toDF("id", "p")
     for (m <- Seq(None, Some(100L), Some(50000L))) withClue(s"M = $m: ") {
-      val steps = Stats.bh(df, "p", Seq("id"), "q", m)
-      val walked = Stats.bh(df, "p", Seq("id"), "q", m, maxSteps = 0)
+      val steps = Stats.bhQ(df, "p", Seq("id"), "q", m)
+      val walked = Stats.bhQ(df, "p", Seq("id"), "q", m, maxSteps = 0)
       steps.steps.map(_.ps.length).getOrElse(0) should be > 0
       walked.steps shouldBe None
       qBits(steps.scored) shouldBe qBits(walked.scored)

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.functions.Binom
-import graft.hic.{FitHiCConfig, Kr, MergeFilter, Pipeline}
+import graft.hic.{ChrSolver, FitHiCConfig, Kr, MergeFilter, Pipeline}
 import graft.llm.{Dedup, Multimodal}
 
 class PipelineSpec extends AnyFunSuite with Matchers with SparkTest {
@@ -747,11 +747,11 @@ class KrSpec extends AnyFunSuite with Matchers with SparkTest {
     // nonzero trim: both paths use the same exact interpolated percentile
     // formula, so trim membership must agree too (not just the
     // Sinkhorn/loner/normalization core)
-    def collect(maxEdges: Long) =
-      Kr.biases(contacts, trimPercentile = 0.1, iterations = 15,
-          maxEdgesPerTask = maxEdges)
+    def collect(maxEdges: Long) = ChrSolver.maxEdges.withValue(maxEdges) {
+      Kr.biases(contacts, trimPercentile = 0.1, iterations = 15)
         .collect().map(r => r.getAs[Long]("mid") -> r.getAs[Double]("bias"))
         .toMap
+    }
     val inTask = collect(Long.MaxValue) // everything routed in-task
     val dist = collect(0L) // everything routed distributed
     inTask.keySet shouldBe dist.keySet
@@ -759,6 +759,52 @@ class KrSpec extends AnyFunSuite with Matchers with SparkTest {
       // identical semantics, different float-accumulation order
       math.abs(b - dist(mid)) should be < 1e-9
     }
+  }
+
+  test("a call routing one chromosome in-task and one distributed agrees " +
+      "with the all-in-task run") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(13)
+    def chr(name: String, n: Int) = for {
+      i <- 0 until n; j <- i until n
+      if rnd.nextDouble() < 0.7
+    } yield (name, 2500L + 5000L * i, name, 2500L + 5000L * j,
+      rnd.nextInt(40).toLong + 1L)
+    val contacts = (chr("big", 15) ++ chr("small", 7))
+      .toDF("chr1", "mid1", "chr2", "mid2", "contactCount")
+    // edges per chromosome: 2·pairs − diagonals
+    val edges = contacts.groupBy("chr1")
+      .agg((count(lit(1)) * 2 -
+        sum(when(col("mid1") === col("mid2"), 1L).otherwise(0L))).as("ne"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    edges("small") should be < edges("big")
+    val iterations = 15
+    def collect(maxEdges: Long) = {
+      var bias = Map.empty[(String, Long), Double]
+      val jobs = jobsStartedBy {
+        val rows = ChrSolver.maxEdges.withValue(maxEdges) {
+          Kr.biases(contacts, trimPercentile = 0.1, iterations = iterations)
+            .collect().map(r => (r.getString(0), r.getLong(1)) ->
+              r.getDouble(2))
+        }
+        bias = rows.toMap
+        bias.size shouldBe rows.length // each locus from one path only
+      }
+      (bias, jobs.size)
+    }
+    val (inTask, inTaskJobs) = collect(Long.MaxValue)
+    // the cap sits between the two: "small" fits a task, "big" does not
+    val (mixed, mixedJobs) = collect(edges("small"))
+    mixedJobs should be > inTaskJobs + iterations // big ran distributed
+    mixed.keySet shouldBe inTask.keySet
+    mixed.filter(_._2 == -1.0).keySet shouldBe
+      inTask.filter(_._2 == -1.0).keySet
+    inTask.foreach { case (k, b) =>
+      math.abs(b - mixed(k)) should be < 1e-9
+    }
+    // the in-task chromosome runs the same kernel either way
+    mixed.filter(_._1._1 == "small") shouldBe
+      inTask.filter(_._1._1 == "small")
   }
 
   test("trimmed low-coverage loci get bias -1") {
@@ -770,20 +816,22 @@ class KrSpec extends AnyFunSuite with Matchers with SparkTest {
     // both routing paths must trim it (identical exact interpolated
     // percentile on both sides)
     for (maxEdges <- Seq(Long.MaxValue, 0L)) {
-      val bias = Kr.biases(contacts, trimPercentile = 0.3, iterations = 5,
-        maxEdgesPerTask = maxEdges)
-      bias.filter(col("mid") === 17500L).first()
-        .getAs[Double]("bias") shouldBe -1.0
+      ChrSolver.maxEdges.withValue(maxEdges) {
+        Kr.biases(contacts, trimPercentile = 0.3, iterations = 5)
+          .filter(col("mid") === 17500L).first()
+          .getAs[Double]("bias") shouldBe -1.0
+      }
     }
   }
 }
 
 class RangedReuseSpec extends AnyFunSuite with Matchers with SparkTest {
   test("binning a broadcast-anti-filtered ranged cache equals re-ranging") {
-    // gates the Pipeline refinement fast path: a broadcast anti-join over
-    // the dist-ranged cache must preserve the layout exactly, so
-    // assumeRanged binning and a fresh range exchange produce identical
-    // bins
+    // gates assumeRanged binning, which the Pipeline refinement uses
+    // over a narrow filter of its dist-ranged cache: a layout-preserving
+    // narrow operator (here a broadcast anti-join) over the ranged cache
+    // must keep the layout exactly, so assumeRanged binning and a fresh
+    // range exchange produce identical bins
     val dir = "/root/testdata/sf0.001"
     val keys = Seq("chr1", "mid1", "chr2", "mid2")
     val c = hic.ContactsView(spark, dir)

@@ -139,8 +139,9 @@ class CheckpointHygieneSpec extends AnyFunSuite with Matchers
       .select(col("chr").as("chr1"), col("mid1"),
         col("chr").as("chr2"), col("mid2"), col("contactCount"))
     leaked {
-      hic.Kr.biases(c, trimPercentile = 0.05, iterations = 4,
-        maxEdgesPerTask = 0L).count()
+      hic.ChrSolver.maxEdges.withValue(0L) {
+        hic.Kr.biases(c, trimPercentile = 0.05, iterations = 4).count()
+      }
       ()
     } shouldBe empty
   }
@@ -149,8 +150,9 @@ class CheckpointHygieneSpec extends AnyFunSuite with Matchers
     val c = hic.ContactsView(spark, dir)
       .filter(col("dist").between(hic.HicQueries.L, hic.HicQueries.U))
     leaked {
-      hic.Compartments.scores(c, iterations = 20, maxEdgesPerTask = 0L)
-        .count()
+      hic.ChrSolver.maxEdges.withValue(0L) {
+        hic.Compartments.scores(c, iterations = 20).count()
+      }
       ()
     } shouldBe empty
   }
