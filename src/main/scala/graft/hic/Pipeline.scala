@@ -67,10 +67,12 @@ object Pipeline {
     * ([[GlobalOrder.sortedLayout]]) — each model traverses it several
     * times, and each pass's scores are a narrow map of it, so a write in
     * that order needs no exchange; `possible` holds BH's M for both
-    * models, counted by one query over the mapped loci.
+    * models, counted by one query over the mapped loci. `input` is the
+    * persisted frame `pairs` is laid out from; only the layout's build
+    * reads it, so each model releases it once `pairs` is materialized.
     */
   final case class FrontEnd(cfg: FitHiCConfig, pairs: DataFrame,
-      possible: Fragments.PossiblePairs)
+      possible: Fragments.PossiblePairs, input: DataFrame)
 
   /** Build the shared front half for the models asked for (`intra`,
     * `inter`). It is the only place that looks anything up: the contacts
@@ -117,11 +119,19 @@ object Pipeline {
       (if (inter) Seq(InterAll) else Nil)
     // the layout's range exchange samples its input before shuffling it:
     // a persisted input is read and looked up once, not twice
-    FrontEnd(cfg, GlobalOrder.sortedLayout(Caches.register(
+    val input = Caches.register(
       Contacts.classify(looked, cfg.distLow, cfg.distUp)
-        .filter(col("cls").isin(classes: _*)).persist()), keys.map(col)),
-      census.possible)
+        .filter(col("cls").isin(classes: _*)).persist())
+    FrontEnd(cfg, GlobalOrder.sortedLayout(input, keys.map(col)),
+      census.possible, input)
   }
+
+  /** Drops the front end's persisted input once a job has read every
+    * partition of `pairs`, so the layout's cache holds all its blocks.
+    * Unpersisting starts no job, and a cache whose blocks are all loaded
+    * outlives the cache it was built from.
+    */
+  private def releaseInput(fe: FrontEnd): Unit = fe.input.unpersist()
 
   /** `contacts` without the rows with an end outside `loci` (when given)
     * and with each end's bias factor from `factors` (1.0 without one),
@@ -179,7 +189,11 @@ object Pipeline {
         assumeRanged = true)
       require(bins.nonEmpty,
         s"pass $pass: no intra-in-range contact mass to bin for the null")
-      if (pass == 1) n = bins.map(_.getAs[Long]("sumCount")).sum
+      if (pass == 1) {
+        n = bins.map(_.getAs[Long]("sumCount")).sum
+        // binning laid out a filter of every partition of fe.pairs
+        releaseInput(fe)
+      }
       val (xs, raw, fitted) = Spline.fitFromBins(bins, n)
       diagSink.foreach { sink =>
         sink(bins.indices.map(i => PassDiagnostics(pass,
@@ -214,6 +228,7 @@ object Pipeline {
   /** The inter model over a built [[FrontEnd]]. */
   def interSignificancesFrom(fe: FrontEnd): DataFrame = {
     val n = sumCounts(fe.pairs, InterAll)
+    releaseInput(fe)
     val m = fe.possible.interAll
     if (n == 0) fe.pairs.filter(col("cls") === InterAll)
       .select((keys.map(col) :+ col("contactCount") :+

@@ -695,26 +695,24 @@ object Selection {
     // lang, hb) hash aggregate (one row per word of the corpus, plus its
     // shuffle at scale) collapses to one bounded array per document.
     // Bucket arithmetic is bit-identical to bucketCol (first 12 digest
-    // bits mod B), so the oracle CTEs are unchanged.
-    val feat = graft.ops.Caches.register(docs
+    // bits mod B), so the oracle CTEs are unchanged. Not persisted: the
+    // kernel is a narrow map of the document scan, and a re-scan is
+    // cheaper than the cache's build job (and the ≤ B-row counts below,
+    // recomputed per reader, cost less than their own cache's jobs).
+    val feat = docs
       .select(col("doc_id"), col("lang"),
         explode(graft.functions.TextKernels.wordBigramBucketCol(B)(
           col("text"))).as("e"))
       .select(col("doc_id"), col("lang"),
         col("e.hb").as("hb"), col("e.mult").as("mult"))
-      .persist())
     // source AND target counts in ONE aggregation (the target is a
-    // conditional sum, not a second filtered groupBy): the corpus-sized
-    // feat cache is scanned once, not once per table — and the old
-    // shape recomputed EACH unpersisted table three times (its total,
-    // the llr join, the totals cross join). Persisted: ≤ B rows.
-    // ct = 0 where the old left-joined tgtCnt read null — identical
-    // after the coalesce below.
-    val cnts = graft.ops.Caches.register(feat.groupBy("hb")
+    // conditional sum, not a second filtered groupBy). ct = 0 where the
+    // old left-joined tgtCnt read null — identical after the coalesce
+    // below.
+    val cnts = feat.groupBy("hb")
       .agg(sum(col("mult")).as("cs"),
         sum(when(col("lang") === "en", col("mult")).otherwise(0L))
           .as("ct"))
-      .persist())
     val totals = cnts.agg(sum(col("cs")).as("ts"), sum(col("ct")).as("tt"))
     // full B-bucket smoothed tables: buckets unseen in the target (or
     // even the source) still carry a defined llr — seq 0..B-1 ⟕ counts

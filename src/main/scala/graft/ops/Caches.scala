@@ -37,14 +37,15 @@ object Caches {
     * (Scratch.subTagged), so the write leaks neither blocks nor tmpfs.
     * Intermediate iterates inside solver loops stay on the
     * eager-checkpoint + inline-release pattern — they are never visible
-    * to drain.
+    * to drain. The read-back carries `df`'s schema, so it runs no
+    * footer-inference job.
     */
   def parquetHandoff(df: org.apache.spark.sql.DataFrame, tag: String,
       released: Boolean = true): org.apache.spark.sql.DataFrame = {
     val p = graft.io.Scratch.subTagged(tag)
     df.write.mode("overwrite").parquet(p)
     if (released) releaseLocalCheckpoint(df)
-    df.sparkSession.read.parquet(p)
+    df.sparkSession.read.schema(df.schema).parquet(p)
   }
 
   /** [[parquetHandoff]] for TWO same-schema frames in ONE write job:
@@ -72,6 +73,24 @@ object Caches {
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     (side("__ho=a", a.schema), side("__ho=b", b.schema))
+  }
+
+  /** The one reader of a table the program materializes for itself:
+    * `frame` is written once per (tag, key) by [[standingParquet]] and
+    * read back with `frame`'s schema, so no read runs a footer-inference
+    * job; a second scan re-reads the parquet. `frame` is a by-value
+    * argument, so it is analysed BEFORE the memo is entered: a
+    * computeIfAbsent build must not update other mappings of the same
+    * ConcurrentHashMap (recursive-update IllegalStateException when the
+    * keys share a bin), so a frame that reads another standing table
+    * resolves it first.
+    */
+  def readStanding(tag: String, key: String,
+      frame: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val p = standingParquet(tag, key) { p =>
+      frame.write.mode("overwrite").parquet(p)
+    }
+    frame.sparkSession.read.schema(frame.schema).parquet(p)
   }
 
   private val standingBuilt =

@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
+  StructType}
 
 import graft.{Q, Tables}
 
@@ -439,23 +441,6 @@ object Warehouse {
     parts.map(_.toString.replaceAll("[^a-zA-Z0-9.-]", "_"))
       .mkString("_")
 
-  /** Materializes yesterday's STANDING state once per JVM × parameters:
-    * the nightly job's output is an input the incremental query reads,
-    * not part of the work it claims — rebuilding the full-history
-    * state on every call would charge the maintenance job the
-    * recompute cost it exists to avoid. The tag carries every
-    * parameter, so shifted-cut law runs build their own state.
-    *
-    * Delegates to [[Caches.standingParquet]] keyed on the source DIR —
-    * the one implementation, so these states gain the deployment scope
-    * (SPARK_GRAFT_STANDING_ROOT commit-log publication) and the
-    * regenerated-fixture fingerprint invalidation a private memo copy
-    * silently lacked.
-    */
-  private def standing(tag: String, dir: String)(
-      build: String => Unit): String =
-    Caches.standingParquet(tag, dir)(build)
-
   private[graft] def ivmJoinView(spark: org.apache.spark.sql.SparkSession,
       dir: String, cutLit: String = "1998-01-01", retractMod: Long = 13L,
       maxBroadcastKeys: Long = -1L)
@@ -466,16 +451,15 @@ object Warehouse {
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_shipdate"), revCpRow.as("rev_cp"))
     val oldOrd = ord.filter(col("o_orderdate") < cut)
-    // "yesterday's" materialized view — the standing parquet table a
-    // nightly job maintains, built once per JVM × params
-    val mv0 = standing(tagOf("ivm_mv0", dir, cutLit, retractMod), dir) {
-      p =>
-        oldOrd.join(li.filter(col("l_shipdate") < cut).drop("l_shipdate"),
-            col("l_orderkey") === col("o_orderkey"))
-          .groupBy("o_custkey")
-          .agg(count(lit(1)).as("n_lines"), sum("rev_cp").as("rev_cp"))
-          .write.mode("overwrite").parquet(p)
-    }
+    // "yesterday's" materialized view — the standing table a nightly
+    // job maintains, built once per JVM × params (the tag carries every
+    // parameter, so shifted-cut law runs build their own state)
+    val mv0 = Caches.readStanding(tagOf("ivm_mv0", dir, cutLit, retractMod),
+      dir,
+      oldOrd.join(li.filter(col("l_shipdate") < cut).drop("l_shipdate"),
+          col("l_orderkey") === col("o_orderkey"))
+        .groupBy("o_custkey")
+        .agg(count(lit(1)).as("n_lines"), sum("rev_cp").as("rev_cp")))
     // ΔA: today's orders at +1, cancelled old orders at −1
     val dOrd = ord.filter(col("o_orderdate") >= cut)
       .withColumn("w", lit(1L))
@@ -492,9 +476,8 @@ object Warehouse {
       broadcastRowCap(dOrd.schema, maxBroadcastKeys))
     val liSide = deltaSide(dLi,
       broadcastRowCap(dLi.schema, maxBroadcastKeys))
-    ivmJoinApply(spark.read.parquet(mv0)
-        .select(col("o_custkey"), col("n_lines"), col("rev_cp")),
-      oldOrd, li.drop("l_shipdate"), dOrd, dLi, ordSide, liSide)
+    ivmJoinApply(mv0, oldOrd, li.drop("l_shipdate"), dOrd, dLi, ordSide,
+        liSide)
       .select(col("o_custkey"), col("n_lines"),
         asMoney(col("rev_cp")).as("revenue"))
       .orderBy("o_custkey")
@@ -561,14 +544,12 @@ object Warehouse {
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_shipdate"), revCpRow.as("rev_cp"))
     val a0 = ord.filter(col("o_orderdate") < c0)
-    val mv0 = standing(tagOf("ivm_fold_mv0", dir, cut0Lit,
-        retractMod), dir) { p =>
+    val mv0 = Caches.readStanding(tagOf("ivm_fold_mv0", dir, cut0Lit,
+        retractMod), dir,
       a0.join(li.filter(col("l_shipdate") < c0).drop("l_shipdate"),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy("o_custkey")
-        .agg(count(lit(1)).as("n_lines"), sum("rev_cp").as("rev_cp"))
-        .write.mode("overwrite").parquet(p)
-    }
+        .agg(count(lit(1)).as("n_lines"), sum("rev_cp").as("rev_cp")))
     val retracted = col("o_orderkey") % retractMod === 0
     // ONE capacity probe per relation over the whole fold window (the
     // scd2 discipline): both batches' deltas are slices of these
@@ -587,8 +568,7 @@ object Warehouse {
       .select("o_orderkey", "o_custkey", "w")
     val dB1 = li.filter(col("l_shipdate") >= c0 &&
       col("l_shipdate") < c1).drop("l_shipdate")
-    val mv1 = ivmJoinApply(spark.read.parquet(mv0)
-        .select(col("o_custkey"), col("n_lines"), col("rev_cp")),
+    val mv1 = ivmJoinApply(mv0,
       a0, li.filter(col("l_shipdate") < c1).drop("l_shipdate"),
       dA1, dB1, sideA, sideB)
     // drain-immune fold-lineage cut (see Caches.parquetHandoff)
@@ -661,13 +641,10 @@ object Warehouse {
         Cols.cents(col("o_totalprice")).as("price_c"))
     val oldOrd = ord.filter(col("o_orderdate") < cut)
     val retracted = col("o_orderkey") % retractMod === 0
-    val mv0 = standing(tagOf("ivm_mm0", dir, cutLit, retractMod), dir) {
-      p =>
-        oldOrd.groupBy("o_custkey")
-          .agg(count(lit(1)).as("n_orders"),
-            max("price_c").as("max_price_c"))
-          .write.mode("overwrite").parquet(p)
-    }
+    val mv0 = Caches.readStanding(tagOf("ivm_mm0", dir, cutLit, retractMod),
+      dir,
+      oldOrd.groupBy("o_custkey")
+        .agg(count(lit(1)).as("n_orders"), max("price_c").as("max_price_c")))
     // the touched key set: every group an arrival or retraction lands
     // in — the delta-bounded build side of both probes. Persisted:
     // it feeds the anti probe plus the semi probe Catalyst pushes
@@ -685,7 +662,7 @@ object Warehouse {
     // plan-gate lesson).
     val side = deltaSide(touchedPlan,
       broadcastRowCap(touchedPlan.schema, maxBroadcastKeys))
-    val untouched = spark.read.parquet(mv0)
+    val untouched = mv0
       .join(side(touched), Seq("o_custkey"), "left_anti")
     // group-scoped recompute over the FINAL state of the touched keys:
     // (A ∖ ΔA⁻ ∪ ΔA⁺) ⋉ touched — one semi-probed narrow fact pass
@@ -755,18 +732,13 @@ object Warehouse {
     val oldLi = li.filter(col("l_shipdate") < cut)
     val tag = tagOf(dir, cutLit, retractMod)
     // yesterday's auxiliary support state + the view it supports — the
-    // standing parquet tables a nightly job maintains, built once per
-    // JVM × params (same memo discipline as ivmJoinView's MV0)
-    val state = standing("ivm_dc_" + tag, dir) { p =>
-      oldLi.groupBy("l_suppkey", "l_partkey")
-        .agg(count(lit(1)).as("cnt"))
-        .write.mode("overwrite").parquet(p + "/aux")
-      spark.read.parquet(p + "/aux").groupBy("l_suppkey")
-        .agg(count(lit(1)).as("n_parts"))
-        .write.mode("overwrite").parquet(p + "/mv")
-    }
-    val aux0 = state + "/aux"
-    val mv0 = state + "/mv"
+    // standing tables a nightly job maintains, built once per JVM ×
+    // params (same memo discipline as ivmJoinView's MV0); the view is
+    // built from the support table
+    val aux0 = Caches.readStanding("ivm_dc_aux_" + tag, dir,
+      oldLi.groupBy("l_suppkey", "l_partkey").agg(count(lit(1)).as("cnt")))
+    val mv0 = Caches.readStanding("ivm_dc_mv_" + tag, dir,
+      aux0.groupBy("l_suppkey").agg(count(lit(1)).as("n_parts")))
     // signed delta folded to PAIR grain: arrivals at +1, the cancelled
     // orders' old lines at −1; a pair whose weights cancel is untouched
     // persisted: dPairs feeds BOTH the broadcast semi build and the
@@ -794,7 +766,7 @@ object Warehouse {
       if (dPairs.count() <=
           broadcastRowCap(dPairs.schema, maxBroadcastKeys)) broadcast
       else _.hint("shuffle_merge")
-    val auxTouched = spark.read.parquet(aux0)
+    val auxTouched = aux0
       .join(side(dPairs.select("l_suppkey", "l_partkey")),
         Seq("l_suppkey", "l_partkey"), "left_semi")
       .select(col("l_suppkey"), col("l_partkey"),
@@ -814,7 +786,7 @@ object Warehouse {
     // the per-pair ±1 presence deltas fold DIRECTLY into the MV merge —
     // they are delta-bounded, so a pre-aggregation would only add an
     // exchange
-    spark.read.parquet(mv0).unionByName(pairDn)
+    mv0.unionByName(pairDn)
       .groupBy("l_suppkey").agg(sum("n_parts").as("n_parts"))
       .filter(col("n_parts") > 0)
       .orderBy("l_suppkey")
@@ -838,7 +810,27 @@ object Warehouse {
     * pair grain, cnt > 0 ([[resolveSupport]]).
     */
   private[graft] final case class SupportState(
-      base: String, sidecars: Seq[String])
+      base: String, sidecars: Seq[String], schema: SupportSchema)
+
+  /** The written schemas of a support state whose pair keys (l_suppkey,
+    * l_partkey) carry the types of `keys`: the base (keys, cnt, b), a
+    * sidecar (keys, dw) and the view it supports (l_suppkey, n_parts).
+    * Every read of the state passes one of them, so no read infers a
+    * schema from a parquet footer.
+    */
+  private[graft] final case class SupportSchema(keys: StructType) {
+    val base: StructType = keys.add("cnt", LongType).add("b", IntegerType)
+    val sidecar: StructType = keys.add("dw", LongType)
+    val view: StructType =
+      StructType(Seq(keys("l_suppkey"), StructField("n_parts", LongType)))
+  }
+
+  private[graft] object SupportSchema {
+    /** The support schema keyed like the pair columns of `pairs`. */
+    def of(pairs: org.apache.spark.sql.DataFrame): SupportSchema =
+      SupportSchema(StructType(
+        Seq(pairs.schema("l_suppkey"), pairs.schema("l_partkey"))))
+  }
 
   /** The support state resolved to its logical (l_suppkey, l_partkey,
     * cnt) table — what a from-scratch support recompute must equal
@@ -847,11 +839,11 @@ object Warehouse {
     * single mergeable sum, no last-writer sequencing.
     */
   private[graft] def resolveSupport(
-      spark: org.apache.spark.sql.SparkSession, base: String,
-      sidecars: Seq[String]): org.apache.spark.sql.DataFrame =
-    sidecars.map(p => spark.read.parquet(p)
+      spark: org.apache.spark.sql.SparkSession, schema: SupportSchema,
+      base: String, sidecars: Seq[String]): org.apache.spark.sql.DataFrame =
+    sidecars.map(p => spark.read.schema(schema.sidecar).parquet(p)
         .select(col("l_suppkey"), col("l_partkey"), col("dw").as("w")))
-      .foldLeft(spark.read.parquet(base)
+      .foldLeft(spark.read.schema(schema.base).parquet(base)
         .select(col("l_suppkey"), col("l_partkey"), col("cnt").as("w")))(
         _ unionByName _)
       .groupBy("l_suppkey", "l_partkey").agg(sum("w").as("cnt"))
@@ -883,6 +875,7 @@ object Warehouse {
       mvPrev: org.apache.spark.sql.DataFrame,
       dRows: org.apache.spark.sql.DataFrame, sidecarOut: String,
       cap: Long): org.apache.spark.sql.DataFrame = {
+    val schema = SupportSchema.of(dRows)
     val dPairs = Caches.register(dRows
       .groupBy("l_suppkey", "l_partkey").agg(sum("w").as("dw"))
       .filter(col("dw") =!= 0).persist())
@@ -913,7 +906,7 @@ object Warehouse {
     // the base scan to these partitions is what makes a key-local
     // delta's probe sublinear in the state
     val touchedBuckets = bucketN.filter(_._2 > 0).map(_._1)
-    val basePruned = spark.read.parquet(basePath)
+    val basePruned = spark.read.schema(schema.base).parquet(basePath)
       .filter(col("b").isin(touchedBuckets: _*))
     val pairKey = xxhash64(col("l_suppkey"), col("l_partkey"))
     // degenerate-delta fallback: before the sort-merge semi exchanges
@@ -943,9 +936,10 @@ object Warehouse {
     val baseTouched = baseIn
       .join(side(keys), Seq("l_suppkey", "l_partkey"), "left_semi")
       .select(col("l_suppkey"), col("l_partkey"), col("cnt").as("w"))
-    val priorTouched = priorSidecars.map(p => spark.read.parquet(p)
-      .join(side(keys), Seq("l_suppkey", "l_partkey"), "left_semi")
-      .select(col("l_suppkey"), col("l_partkey"), col("dw").as("w")))
+    val priorTouched = priorSidecars.map(p =>
+      spark.read.schema(schema.sidecar).parquet(p)
+        .join(side(keys), Seq("l_suppkey", "l_partkey"), "left_semi")
+        .select(col("l_suppkey"), col("l_partkey"), col("dw").as("w")))
     val present = (c: org.apache.spark.sql.Column) =>
       when(c > 0, 1L).otherwise(0L)
     val pairDn = priorTouched.foldLeft(baseTouched)(_ unionByName _)
@@ -977,17 +971,18 @@ object Warehouse {
     * nothing to fold).
     */
   private[graft] def compactSupport(
-      spark: org.apache.spark.sql.SparkSession, basePath: String,
-      sidecars: Seq[String], outPath: String): String = {
+      spark: org.apache.spark.sql.SparkSession, schema: SupportSchema,
+      basePath: String, sidecars: Seq[String], outPath: String): String = {
     if (sidecars.isEmpty) return basePath
-    val deltas = sidecars.map(p => spark.read.parquet(p)
-        .select(col("l_suppkey"), col("l_partkey"), col("dw")))
+    val deltas = sidecars.map(p =>
+        spark.read.schema(schema.sidecar).parquet(p)
+          .select(col("l_suppkey"), col("l_partkey"), col("dw")))
       .reduce(_ unionByName _)
     val touched = deltas.select(supportBucket(col("l_suppkey")).as("b"))
       .distinct().collect().map(_.getInt(0)).toSet
     // merged content of the touched buckets only — the base scan is
     // partition-pruned to them
-    spark.read.parquet(basePath)
+    spark.read.schema(schema.base).parquet(basePath)
       .filter(col("b").isin(touched.toSeq: _*))
       .select(col("l_suppkey"), col("l_partkey"), col("cnt").as("w"))
       .unionByName(deltas.select(col("l_suppkey"), col("l_partkey"),
@@ -1062,6 +1057,9 @@ object Warehouse {
       cap: Long = -1L, compactEvery: Int = 3,
       runTag: String = "", readOnly: Boolean = false) {
     private val rootP = java.nio.file.Paths.get(supportRoot)
+    // the seed's pair columns type the state: a resume passes a seed
+    // (zero rows will do) for the schema every read of the root carries
+    private val schema = SupportSchema.of(seed)
     private val mfP = rootP.resolve("BASE_MANIFEST")
     // sidecar names carry the batch number (their ordering and
     // absorption watermark) plus an optional RUN-UNIQUE tag: two runs
@@ -1222,7 +1220,7 @@ object Warehouse {
 
     private var mv: org.apache.spark.sql.DataFrame =
       Caches.parquetHandoff(
-        resolveSupport(spark, baseDir, sidecars)
+        resolveSupport(spark, schema, baseDir, sidecars)
           .groupBy("l_suppkey").agg(count(lit(1)).as("n_parts")),
         mvTag)
 
@@ -1231,7 +1229,7 @@ object Warehouse {
 
     /** The current support state, resolved. */
     def resolvedSupport: org.apache.spark.sql.DataFrame =
-      resolveSupport(spark, baseDir, sidecars)
+      resolveSupport(spark, schema, baseDir, sidecars)
 
     /** The most recent batch's sidecar path — a caller whose version
       * CAS LOST after this batch (the split-brain case) reaps it
@@ -1327,7 +1325,7 @@ object Warehouse {
       // just-swapped manifest references
       val next = f"base_v$batchN%06d-" +
         java.util.UUID.randomUUID().toString.take(8)
-      compactSupport(spark, prev, sidecars, s"$supportRoot/$next")
+      compactSupport(spark, schema, prev, sidecars, s"$supportRoot/$next")
       swapManifest(next)
       // reap LAST generation's grace inventory; the just-superseded
       // base (whose untouched buckets the new one hard-links — the
@@ -1383,14 +1381,16 @@ object Warehouse {
   private def distinctStanding(spark: org.apache.spark.sql.SparkSession,
       old0: org.apache.spark.sql.DataFrame, dir: String,
       cut0Lit: String, retractMod: Long): String =
-    standing(tagOf("ivm_dcm", dir, cut0Lit, retractMod), dir) { p =>
+    Caches.standingParquet(tagOf("ivm_dcm", dir, cut0Lit, retractMod),
+        dir) { p =>
       old0.groupBy("l_suppkey", "l_partkey")
         .agg(count(lit(1)).as("cnt"))
         .withColumn("b", supportBucket(col("l_suppkey")))
         .repartition(SupportBuckets, col("b"))
         .write.partitionBy("b").mode("overwrite")
         .parquet(p + "/base")
-      spark.read.parquet(p + "/base").groupBy("l_suppkey")
+      spark.read.schema(SupportSchema.of(old0).base).parquet(p + "/base")
+        .groupBy("l_suppkey")
         .agg(count(lit(1)).as("n_parts"))
         .write.mode("overwrite").parquet(p + "/mv")
     }
@@ -1429,7 +1429,7 @@ object Warehouse {
     // sidecar with no rows has nothing to resolve, so it is left out
     SupportState(state0 + "/base", Seq(1, 2).map(n => s"$p/sc=$n")
       .filter(sc => java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(sc))))
+        java.nio.file.Paths.get(sc))), SupportSchema.of(li))
   }
 
   /** [[ivmDistinctFold]] plus the final merge-on-read support state
@@ -1455,8 +1455,10 @@ object Warehouse {
         .withColumn("w", lit(-1L)))
       .select("l_suppkey", "l_partkey", "w")
     val sc1 = graft.io.Scratch.subTagged("ivm_dcm_d1")
+    val schema = SupportSchema.of(li)
     val mv1 = ivmDistinctStepMor(spark, base, Nil,
-      spark.read.parquet(state0 + "/mv"), d1, sc1, maxBroadcastKeys)
+      spark.read.schema(schema.view).parquet(state0 + "/mv"), d1, sc1,
+      maxBroadcastKeys)
     // fold-lineage cut on the view; the sidecar's parquet write is the
     // state's own cut
     val mv1ck = Caches.parquetHandoff(mv1, "ivm_dcm_mv1")
@@ -1466,7 +1468,7 @@ object Warehouse {
     val sc2 = graft.io.Scratch.subTagged("ivm_dcm_d2")
     val mv2 = ivmDistinctStepMor(spark, base, Seq(sc1), mv1ck, d2,
       sc2, maxBroadcastKeys)
-    (mv2.orderBy("l_suppkey"), SupportState(base, Seq(sc1, sc2)))
+    (mv2.orderBy("l_suppkey"), SupportState(base, Seq(sc1, sc2), schema))
   }
 
   /** SKETCH IVM — the INSERT-ONLY distinct class, completing the
@@ -1490,16 +1492,14 @@ object Warehouse {
     val cut = Cols.ts(cutLit)
     val ev = Tables(spark, dir, "events")
       .select(col("event_type"), col("user_id"), col("ts"))
-    val state0 = standing(tagOf("ivm_hll", dir, cutLit), dir) { p =>
+    val state0 = Caches.readStanding(tagOf("ivm_hll", dir, cutLit), dir,
       ev.filter(col("ts") < cut).groupBy("event_type")
         .agg(hll_sketch_agg(col("user_id")).as("sketch"),
-          count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(p)
-    }
+          count(lit(1)).as("n")))
     val delta = ev.filter(col("ts") >= cut).groupBy("event_type")
       .agg(hll_sketch_agg(col("user_id")).as("sketch"),
         count(lit(1)).as("n"))
-    spark.read.parquet(state0).unionByName(delta)
+    state0.unionByName(delta)
       .groupBy("event_type")
       .agg(hll_sketch_estimate(hll_union_agg(col("sketch")))
           .as("approx_users"),
@@ -2150,18 +2150,16 @@ object Warehouse {
         // the recompute cost the merge exists to avoid — and the
         // unguarded shared stable path was a concurrent-invocation
         // race (one call's overwrite under another's lazy read)
-        val basePath = standing(tagOf("rollup", dir), dir) { p =>
+        val base = Caches.readStanding(tagOf("rollup", dir), dir,
           o.filter(col("o_orderdate") < cutoff)
             .groupBy("o_custkey")
             .agg(count(lit(1)).as("n_orders"),
-              sum(Cols.cents(col("o_totalprice"))).as("spend_c"))
-            .write.mode("overwrite").parquet(p)
-        }
+              sum(Cols.cents(col("o_totalprice"))).as("spend_c")))
         val delta = o.filter(col("o_orderdate") >= cutoff)
           .groupBy("o_custkey")
           .agg(count(lit(1)).as("n_orders"),
             sum(Cols.cents(col("o_totalprice"))).as("spend_c"))
-        spark.read.parquet(basePath).unionByName(delta)
+        base.unionByName(delta)
           .groupBy("o_custkey")
           .agg(sum(col("n_orders")).as("n_orders"),
             sum(col("spend_c")).as("__sc"))
@@ -2597,9 +2595,9 @@ object Warehouse {
         // resolution, AND the compaction are pinned in one hash.
         val st = ivmDistinctSidecars(spark, dir,
           "1997-07-01", "1998-01-01", 13L)
-        val compacted = compactSupport(spark, st.base, st.sidecars,
-          graft.io.Scratch.subTagged("ivm_dcm_compact"))
-        spark.read.parquet(compacted)
+        val compacted = compactSupport(spark, st.schema, st.base,
+          st.sidecars, graft.io.Scratch.subTagged("ivm_dcm_compact"))
+        spark.read.schema(st.schema.base).parquet(compacted)
           .select(col("l_suppkey"), col("l_partkey"), col("cnt"))
           .orderBy("l_suppkey", "l_partkey")
       },

@@ -541,3 +541,63 @@ class TsvSpec extends AnyFunSuite with Matchers with SparkTest {
       frags.as[(String, Long, Long, Long, Int)].collect().toSet
   }
 }
+
+class CachesSpec extends AnyFunSuite with Matchers with SparkTest {
+  private val sf = "/root/testdata/sf0.001"
+
+  test("a second read of a standing table that is already built starts " +
+      "no job") {
+    import spark.implicits._
+    val key = graft.io.Scratch.sub("standing_spec_key")
+    val frame = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    val first = jobsStartedBy(
+      graft.ops.Caches.readStanding("standing_spec", key, frame))
+    first should not be empty // the one build writes the table
+    val again = jobsStartedBy(
+      graft.ops.Caches.readStanding("standing_spec", key, frame))
+    again shouldBe empty
+    graft.ops.Caches.readStanding("standing_spec", key, frame)
+      .as[(Long, String)].collect().sorted shouldBe Array(1L -> "a", 2L -> "b")
+    // the declared queries over standing tables plan their reads with no
+    // job once the tables are built
+    Seq("q_warehouse_incr_rollup", "q_warehouse_ivm_sketch",
+        "q_hic_marginals", "q_hic_loops", "q_hic_bias_vector")
+      .foreach { q =>
+        Registry.all(q).fn(spark, sf)
+        withClue(q) {
+          jobsStartedBy(Registry.all(q).fn(spark, sf)) shouldBe empty
+        }
+      }
+    graft.ops.Caches.drain()
+  }
+
+  test("a parquetHandoff read-back starts no job beyond its write") {
+    val df = spark.range(0, 100, 1, 4).selectExpr("id", "id * 2 AS v")
+    val write = jobsStartedBy(df.write.mode("overwrite")
+      .parquet(graft.io.Scratch.sub("handoff_spec_write")))
+    var back: org.apache.spark.sql.DataFrame = null
+    val handoff = jobsStartedBy {
+      back = graft.ops.Caches.parquetHandoff(df, "handoff_spec")
+    }
+    handoff.size shouldBe write.size
+    back.schema.map(f => f.name -> f.dataType) shouldBe
+      df.schema.map(f => f.name -> f.dataType)
+    back.selectExpr("sum(v)").head().getLong(0) shouldBe 9900L
+  }
+
+  test("the Hi-C queries over the contacts view and the cell map plan no " +
+      "in-memory copy of a standing table") {
+    graft.ops.Caches.drain()
+    Seq("q_hic_loops", "q_hic_apa", "q_hic_marginals", "q_hic_bias_vector")
+      .foreach { q =>
+        val df = Registry.all(q).fn(spark, sf)
+        withClue(q) {
+          df.queryExecution.withCachedData.collect {
+            case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+              m
+          } shouldBe empty
+        }
+      }
+    graft.ops.Caches.drain()
+  }
+}

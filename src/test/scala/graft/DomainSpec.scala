@@ -310,6 +310,33 @@ class PipelineSpec extends AnyFunSuite with Matchers with SparkTest {
         FitHiCConfig())
   }
 
+  test("each model releases the front end's input once the layout is " +
+      "built, keeping the layout's cache") {
+    val (frags, contacts) = fixture
+    val cfg = FitHiCConfig(nBins = 3, passes = 1, distLow = 0,
+      distUp = 1000000L)
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    Seq(true, false).foreach { intra =>
+      val fe = Pipeline.frontEnd(frags, contacts, None, cfg, intra = intra,
+        inter = !intra)
+      fe.input.storageLevel should not be none
+      // the intra model releases after pass-1 binning, the inter model
+      // after its contact sum: both before the scores are returned
+      val scored =
+        if (intra) Pipeline.intraSignificancesFrom(fe)
+        else Pipeline.interSignificancesFrom(fe)
+      withClue(s"intra=$intra") {
+        fe.input.storageLevel shouldBe none
+        fe.pairs.queryExecution.withCachedData.collectFirst {
+          case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+            m.cacheBuilder.isCachedColumnBuffersLoaded
+        } shouldBe Some(true)
+        scored.count() shouldBe (if (intra) contacts.count() else 0L)
+      }
+    }
+    graft.ops.Caches.drain()
+  }
+
   test("bias factors scale priors (inter model)") {
     import spark.implicits._
     val frags = Seq(("c1", 0L, 2500L, 5L, 1), ("c2", 0L, 2500L, 5L, 1),
@@ -1560,13 +1587,14 @@ class IvmLawSpec extends AnyFunSuite with Matchers with SparkTest {
           col("l_orderkey") % m === 0))
         .groupBy("l_suppkey", "l_partkey")
         .agg(count(lit(1)).as("cnt"))
-      val got = Warehouse.resolveSupport(spark, st.base, st.sidecars)
+      val got = Warehouse.resolveSupport(spark, st.schema, st.base,
+        st.sidecars)
         .select("l_suppkey", "l_partkey", "cnt")
       got.count() shouldBe expected.count()
       got.exceptAll(expected).count() shouldBe 0L
       // COMPACTION invisibility: the folded base resolves to the same
       // table with zero sidecars left
-      val compacted = Warehouse.compactSupport(spark, st.base,
+      val compacted = Warehouse.compactSupport(spark, st.schema, st.base,
         st.sidecars, graft.io.Scratch.sub("ivm_law_compact"))
       val gotC = spark.read.parquet(compacted)
         .select("l_suppkey", "l_partkey", "cnt")
@@ -1600,12 +1628,14 @@ class IvmLawSpec extends AnyFunSuite with Matchers with SparkTest {
       .filter(!(col("l_shipdate") < cut && col("l_orderkey") % m === 0))
       .groupBy("l_suppkey", "l_partkey")
       .agg(count(lit(1)).as("cnt"))
-    val got = Warehouse.resolveSupport(spark, st.base, st.sidecars)
+    val got = Warehouse.resolveSupport(spark, st.schema, st.base,
+        st.sidecars)
       .select("l_suppkey", "l_partkey", "cnt")
     got.count() shouldBe expected.count()
     got.exceptAll(expected).count() shouldBe 0L
     val compacted = spark.read.parquet(Warehouse.compactSupport(spark,
-        st.base, st.sidecars, graft.io.Scratch.sub("ivm_law_compact_empty")))
+        st.schema, st.base, st.sidecars,
+        graft.io.Scratch.sub("ivm_law_compact_empty")))
       .select("l_suppkey", "l_partkey", "cnt")
     compacted.count() shouldBe expected.count()
     compacted.exceptAll(expected).count() shouldBe 0L
@@ -1649,7 +1679,8 @@ class IvmLawSpec extends AnyFunSuite with Matchers with SparkTest {
     }
     val before = inventory(basePath)
     val out = graft.io.Scratch.sub("ivm_bucket_out")
-    Warehouse.compactSupport(spark, basePath, Seq(scPath), out)
+    Warehouse.compactSupport(spark, Warehouse.SupportSchema.of(
+      graft.Tables(spark, dir, "lineitem")), basePath, Seq(scPath), out)
     val after = inventory(out)
     val untouchedBefore = before.filterNot(_._1.startsWith(s"b=$touchedBucket/"))
     val untouchedAfter = after.filterNot(_._1.startsWith(s"b=$touchedBucket/"))

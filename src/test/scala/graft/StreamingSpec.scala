@@ -177,7 +177,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkTest {
     // RESUME: a new driver on the same root reattaches through the
     // manifest + surviving sidecars and reads the same state
     val s2 = new ops.Warehouse.IvmDistinctStream(sp, root,
-      sp.emptyDataFrame)
+      ops.Warehouse.eventPairDelta(Seq.empty[Event].toDF()))
     s2.view.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe
       expectedView
     ops.Caches.drain()
@@ -241,7 +241,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkTest {
     // the streaming checkpoint will re-deliver that batch and the
     // re-fold would double-count the (3, purchase) pair
     val s2 = new ops.Warehouse.IvmDistinctStream(sp, root,
-      sp.emptyDataFrame, compactEvery = 0, runTag = "runB")
+      seed.limit(0), compactEvery = 0, runTag = "runB")
     val names = new java.io.File(root).listFiles().map(_.getName).toSeq
     names.filter(_.startsWith("delta_000002")) shouldBe empty
     names.count(_.startsWith("delta_000001")) shouldBe 1
